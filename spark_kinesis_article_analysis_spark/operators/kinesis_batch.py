@@ -92,22 +92,13 @@ def _ingested_stream(spark: SparkSession, sf_dir: str) -> str:
     stream = "articles-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
     if stream in _STATE["streams"]:
         return stream
-    import boto3
-
     from pyspark import cloudpickle
 
     from spark_kinesis_article_analysis_spark.sources import kinesis_source as _ks
 
-    client = boto3.client(
-        "kinesis",
-        region_name="us-east-1",
-        endpoint_url=_endpoint(),
-        aws_access_key_id="testing",
-        aws_secret_access_key="testing",
-    )
-    client.create_stream(StreamName=stream, ShardCount=N_SHARDS)
-    cloudpickle.register_pickle_by_value(_ks)
     opts = kinesis_options(stream)
+    _ks._client(_ks._norm_options(opts)).create_stream(StreamName=stream, ShardCount=N_SHARDS)
+    cloudpickle.register_pickle_by_value(_ks)
     payload = documents_as_article_payload(spark, sf_dir)
     records = payload.select(
         F.get_json_object(F.col("data"), "$.article_id").alias("partition_key"),
@@ -153,10 +144,11 @@ def kinesis_api_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         KinesisApiDataSource,
     )
 
-    # by-value pickling: nothing guarantees /root/repo is on the Python
+    # by-value pickling: nothing guarantees the repo is on the Python
     # workers' sys.path under the driver's session (same showstopper
-    # article_replay_batch documents) — the module only references
-    # stdlib + pyspark + boto3, all importable in workers.
+    # article_replay_batch documents) — the module imports only stdlib,
+    # pyspark and boto3, all importable in workers, and keeps its
+    # per-process client cache in sys.modules rather than this package.
     cloudpickle.register_pickle_by_value(_ks)
     spark.dataSource.register(KinesisApiDataSource)
     stream = _ingested_stream(spark, sf_dir)

@@ -47,15 +47,9 @@ def ensure_bucket():
     dance — five modules had grown their own byte-identical copies
     (self-review r12), so an endpoint/credential fix would predictably
     have missed one."""
-    import boto3
+    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
 
-    client = boto3.client(
-        "s3",
-        region_name="us-east-1",
-        endpoint_url=_endpoint(),
-        aws_access_key_id="testing",
-        aws_secret_access_key="testing",
-    )
+    client = _s3o._s3({k.lower(): v for k, v in s3_options("").items()})
     try:
         client.create_bucket(Bucket=BUCKET)
     except client.exceptions.BucketAlreadyOwnedByYou:

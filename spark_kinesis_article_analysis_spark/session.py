@@ -19,6 +19,24 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: Python worker daemon that starts workers without Spark's archives on
+#: their import path (see ``worker_daemon``).
+WORKER_DAEMON = f"{__package__}.worker_daemon"
+
+
+def _workers_import_package(master: str, extra_conf: dict[str, str]) -> bool:
+    """Whether Python workers can import this package when their daemon
+    starts, judged from the paths they will see: ``spark.executorEnv.PYTHONPATH``;
+    in local mode also this process's ``PYTHONPATH`` and its working
+    directory, which ``python -m`` puts first on the path."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen = extra_conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    if master.startswith("local"):
+        seen += os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        if not os.environ.get("PYTHONSAFEPATH"):
+            seen.append(os.getcwd())
+    return any(p and os.path.abspath(p) == root for p in seen)
+
 
 def get_spark(
     app_name: str = "spark_kinesis_article_analysis_spark",
@@ -34,6 +52,7 @@ def get_spark(
     back down, so over-provisioning the static number is safe).
     """
     master = master or f"local[{DEFAULT_CPUS}]"
+    extra_conf = extra_conf or {}
     shuffle_partitions = shuffle_partitions or DEFAULT_CPUS
     b = (
         SparkSession.builder.appName(app_name)
@@ -69,7 +88,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
-    for k, v in (extra_conf or {}).items():
+    # Python workers skip the per-task re-read of pyspark.zip and the
+    # spark-core jar (worker_daemon); Spark's stock daemon otherwise.
+    if _workers_import_package(master, extra_conf):
+        b = b.config("spark.python.daemon.module", WORKER_DAEMON)
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

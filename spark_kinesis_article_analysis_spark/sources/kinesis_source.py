@@ -27,8 +27,8 @@ Two readers:
   — each shard drains from its start position until GetRecords reports
   caught-up (no records and ``MillisBehindLatest == 0``) or the shard
   is closed (``NextShardIterator`` null past a split/merge). One input
-  partition per shard; boto3 clients are constructed inside ``read()``
-  on the worker, never pickled.
+  partition per shard; boto3 clients are fetched inside ``read()``
+  on the worker (one per process, ``_shared_client``), never pickled.
 * **streaming** (``spark.readStream.format("kinesis_api")``): a
   partition-based :class:`DataSourceStreamReader` — per-shard input
   partitions whose GetRecords run ON THE EXECUTORS, with arrival-time
@@ -55,6 +55,8 @@ sequence ordering, restart replay, and a split mid-stream.
 
 from __future__ import annotations
 
+import sys
+import types
 from collections.abc import Iterator, Sequence
 from typing import TYPE_CHECKING
 
@@ -87,9 +89,21 @@ _GET_LIMIT = 1000
 _PUT_MAX_ATTEMPTS = 8
 
 
-def _client(options: dict):
-    """boto3 Kinesis client from connector-style options. Constructed
-    lazily inside driver/worker calls — a client is not picklable."""
+#: ``sys.modules`` key of the boto3 client cache that the Kinesis source
+#: and the S3 sink share within a Python process. A module object there,
+#: not a global here: this module may be pickled by value to workers,
+#: which rebuilds its globals on every task, and the workers need not be
+#: able to import this package. ``s3_objects`` holds an identical copy
+#: of ``_shared_client`` for the same reason.
+_CLIENTS = "_skaa_boto3_clients"
+
+
+def _shared_client(service: str, options: dict):
+    """This process's boto3 ``service`` client for the connector
+    ``options`` (lower-cased keys), built on first use: a build costs
+    ~7-11 ms of CPU and a micro-batch needs about ten. The SECRET key
+    goes to the secret slot (the reference passes the access key in
+    both, ``process_articles.py:45,57``)."""
     import boto3
 
     kwargs: dict = {"region_name": options.get("regionname", "us-east-1")}
@@ -98,9 +112,21 @@ def _client(options: dict):
     if options.get("awsaccesskeyid"):
         kwargs["aws_access_key_id"] = options["awsaccesskeyid"]
     if options.get("awssecretkey"):
-        # the SECRET key — see module docstring re the reference's swap bug
         kwargs["aws_secret_access_key"] = options["awssecretkey"]
-    return boto3.client("kinesis", **kwargs)
+    cache = sys.modules.setdefault(_CLIENTS, types.ModuleType(_CLIENTS)).__dict__
+    key = (service, tuple(sorted(kwargs.items())))
+    client = cache.get(key)
+    if client is None:
+        # clients are thread-safe; racing first uses keep the first stored
+        client = cache.setdefault(key, boto3.client(service, **kwargs))
+    return client
+
+
+def _client(options: dict):
+    """boto3 Kinesis client from connector-style options, shared per
+    process — a client is not picklable, so it is fetched inside
+    driver/worker calls."""
+    return _shared_client("kinesis", options)
 
 
 def _norm_options(options: dict) -> dict:

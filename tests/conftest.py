@@ -68,6 +68,16 @@ def pytest_collection_modifyitems(items):
             item.add_marker(pytest.mark.slow)
 
 
+def pytest_terminal_summary(terminalreporter, config):
+    """Make the default lane's reduced coverage visible: one line naming
+    how many slow tests ``-m "not slow"`` deselected, and the full lane."""
+    if config.option.markexpr != "not slow":
+        return
+    n = sum(1 for item in terminalreporter.stats.get("deselected", []) if item.get_closest_marker("slow"))
+    if n:
+        terminalreporter.write_line(f'{n} slow tests deselected — full lane: python -m pytest tests/ -q -m ""')
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8)

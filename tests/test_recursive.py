@@ -220,10 +220,12 @@ class TestReachabilityFuzz:
             assert got == {(1, n) for n in range(1, length + 2)}, (length, got)
 
     def test_cycle_convergence_and_cap_error(self, spark):
-        """A pure directed cycle converges in exactly |cycle| - 1
-        expansion levels; a cap one short of that must raise (the
-        non-convergence error semantics are part of the contract and
-        must survive any double-stepping of the loop)."""
+        """A pure directed cycle reaches every node in |cycle| - 1
+        expansion levels, and detecting convergence takes one more,
+        empty round: ``round_cap >= n`` converges, and any smaller cap —
+        ``n - 1`` included — must raise (the non-convergence error
+        semantics are part of the contract and must survive any
+        double-stepping of the loop)."""
         import pytest
 
         from spark_kinesis_article_analysis_spark.operators.recursive import (
@@ -239,9 +241,10 @@ class TestReachabilityFuzz:
             for r in bfs_reachability(seeds, edf, round_cap=n).collect()
         }
         assert got == {(1, v) for v in range(1, n + 1)}
-        with pytest.raises(RuntimeError, match="did not converge"):
-            bfs_reachability(
-                spark.createDataFrame([(1, 1)], "src long, node long"),
-                spark.createDataFrame(cyc, "u long, v long"),
-                round_cap=n - 2,
-            ).collect()
+        for cap in (n - 1, n - 2):
+            with pytest.raises(RuntimeError, match="did not converge"):
+                bfs_reachability(
+                    spark.createDataFrame([(1, 1)], "src long, node long"),
+                    spark.createDataFrame(cyc, "u long, v long"),
+                    round_cap=cap,
+                ).collect()

@@ -493,3 +493,120 @@ class TestEngineReadPaths:
         assert got.schema.simpleString() == "struct<k:bigint,v:string>"
         assert got.count() == 100
         assert got.agg({"k": "sum"}).collect()[0][0] == sum(range(100))
+
+
+class TestClientReuse:
+    def test_one_client_per_service_and_options(self):
+        """Sources and sinks share one boto3 client per service and
+        options within a process (``sources.aws``) instead of building
+        one per read, write and commit."""
+        from spark_kinesis_article_analysis_spark.sources.kinesis_source import _client
+
+        opts = {"regionname": "us-east-1", "endpointurl": "http://127.0.0.1:9",
+                "awsaccesskeyid": "x", "awssecretkey": "x"}
+        assert _s3(opts) is _s3(dict(opts))
+        assert _s3(opts) is not _s3({**opts, "endpointurl": "http://127.0.0.1:10"})
+        assert _s3(opts) is not _s3({**opts, "awsaccesskeyid": "y"})
+        assert _client(opts) is not _s3(opts)
+        assert _client(opts).meta.service_model.service_name == "kinesis"
+
+    def test_concurrent_first_use_builds_one_client(self):
+        """Threads racing on a cold key all get the same client."""
+        import sys
+        import threading
+
+        opts = {"regionname": "us-east-1", "endpointurl": "http://127.0.0.1:11",
+                "awsaccesskeyid": "x", "awssecretkey": "x"}
+        got = []
+        threads = [threading.Thread(target=lambda: got.append(_s3(opts))) for _ in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert len(got) == 8 and len({id(c) for c in got}) == 1
+
+    def test_shared_client_copies_identical(self):
+        """Each source carries its own copy of the cache helper (either
+        may be pickled by value alone); the copies must not drift."""
+        import inspect
+
+        from spark_kinesis_article_analysis_spark.sources import kinesis_source, s3_objects
+
+        assert inspect.getsource(kinesis_source._shared_client) == inspect.getsource(s3_objects._shared_client)
+        assert kinesis_source._CLIENTS == s3_objects._CLIENTS
+
+
+#: Driver script for the isolation test below: the package is importable
+#: by the driver only (argv[1] on its sys.path), never by the workers.
+_ISOLATED_DRIVER = r"""
+import importlib.util
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from pyspark import cloudpickle
+
+from spark_kinesis_article_analysis_spark.operators.kinesis_batch import kinesis_options
+from spark_kinesis_article_analysis_spark.operators.s3_batch import ensure_bucket, s3_options
+from spark_kinesis_article_analysis_spark.session import get_spark
+from spark_kinesis_article_analysis_spark.sources import kinesis_source as _ks
+from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
+
+spark = get_spark(app_name="isolated", master="local[2]", shuffle_partitions=2)
+probe = spark.sparkContext.parallelize([0], 1).map(
+    lambda _: importlib.util.find_spec("spark_kinesis_article_analysis_spark") is None
+)
+assert probe.collect() == [True], "workers can import the package"
+for m in (_ks, _s3o):
+    cloudpickle.register_pickle_by_value(m)
+spark.dataSource.register(_ks.KinesisApiDataSource)
+spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
+
+kopts = kinesis_options("isolated")
+_ks._client(_ks._norm_options(kopts)).create_stream(StreamName="isolated", ShardCount=2)
+rows = [(f"k{i}", f"d{i}") for i in range(20)]
+spark.sparkContext.parallelize(rows, 2).foreachPartition(
+    lambda it: _ks.put_records_partition(kopts, it) and None
+)
+reader = spark.read.format("kinesis_api")
+for k, v in kopts.items():
+    reader = reader.option(k, v)
+ensure_bucket()
+sopts = s3_options("isolated")
+w = reader.load().selectExpr("cast(data as string) as data").repartition(2).write
+w = w.format("s3_parquet_manifest").mode("append")
+for k, v in sopts.items():
+    w = w.option(k, v)
+w.save()
+r = spark.read.format("s3_parquet_manifest")
+for k, v in sopts.items():
+    r = r.option(k, v)
+got = sorted(row.data for row in r.load().collect())
+assert got == sorted(d for _, d in rows), got
+spark.stop()
+print("ISOLATED-OK")
+"""
+
+
+def test_sources_run_on_workers_that_cannot_import_the_package(tmp_path):
+    """Kinesis put/read and S3 manifest write/read, with both source
+    modules pickled by value, on workers whose path lacks the package
+    (working directory outside the repo, no PYTHONPATH): the sources may
+    only need stdlib, pyspark and boto3 there."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    done = subprocess.run(
+        [sys.executable, "-c", _ISOLATED_DRIVER, repo],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert "ISOLATED-OK" in done.stdout, done.stderr[-4000:]

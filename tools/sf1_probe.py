@@ -203,6 +203,7 @@ def run_one_scale(sf_dir: str) -> None:
     first scale's cached/persisted state and GC pressure contaminate the
     second scale's timings; the first probe run measured sf1 FASTER than
     sf0.1 on three queries because of exactly that)."""
+    from bench import _release_storage
     from spark_kinesis_article_analysis_spark.registry import all_specs
     from spark_kinesis_article_analysis_spark.session import get_spark
 
@@ -220,12 +221,10 @@ def run_one_scale(sf_dir: str) -> None:
             t0 = time.perf_counter()
             build(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
-            # r13: same trial-isolation fix as bench.py — persist()-based
-            # queries plan-match across rebuilds, so without the release
-            # trials 2-3 report warm-cache numbers.
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist()
+            # same trial isolation as bench.py — persist()-based queries
+            # plan-match across rebuilds, so without the release trials
+            # 2-3 report warm-cache numbers.
+            _release_storage(spark)
         out[name] = round(best, 3)
         print(f"# {sf_dir} {name}: {best:.3f}s", file=sys.stderr)
     print(json.dumps(out))
