@@ -69,7 +69,6 @@ HEADLINE = [
     "agg_grouping_sets",          # multi-grain rollup in one pass
     "window_distribution",        # percent_rank/cume_dist/ntile analytic family
     "scalar_xml_functions",       # priciest scalar family (XML round-trip parse)
-    "article_replay_batch",       # S1 stand-in round trip (Python DataSource IO)
     # round-4 temporal/stats additions
     "join_asof",                  # union+window as-of join (1 exchange)
     "join_range_interval",        # bin-join interval overlap, both sides corpus-scale

@@ -1,9 +1,8 @@
 """Driver-verdicted round trip through the ``kinesis_api`` source —
 the real Kinesis WIRE PROTOCOL, exercised end to end.
 
-``article_replay_batch`` proves the S1 contract against a file-backed
-stand-in; this query proves it against the actual AWS Kinesis HTTP API:
-a moto-served in-process endpoint (the public mock of the real service,
+This query proves the S1 contract against the actual AWS Kinesis HTTP
+API: a moto-served in-process endpoint (the public mock of the real service,
 speaking the real protocol) receives the documents corpus through a
 DISTRIBUTED PutRecords producer (``foreachPartition`` — the scaled form
 of the reference's ``populate_stream.py:78-156`` loop), and
@@ -145,10 +144,10 @@ def kinesis_api_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # by-value pickling: nothing guarantees the repo is on the Python
-    # workers' sys.path under the driver's session (same showstopper
-    # article_replay_batch documents) — the module imports only stdlib,
-    # pyspark and boto3, all importable in workers, and keeps its
-    # per-process client cache in sys.modules rather than this package.
+    # workers' sys.path under the driver's session — the module imports
+    # only stdlib, pyspark and boto3, all importable in workers, and
+    # keeps its per-process client cache in sys.modules rather than
+    # this package.
     cloudpickle.register_pickle_by_value(_ks)
     spark.dataSource.register(KinesisApiDataSource)
     stream = _ingested_stream(spark, sf_dir)

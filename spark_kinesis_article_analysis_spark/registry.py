@@ -148,7 +148,6 @@ def _load_all() -> None:
         tpch_extra,
     )
     from spark_kinesis_article_analysis_spark.operators import (  # noqa: F401
-        replay_batch,
         temporal,
     )
     from spark_kinesis_article_analysis_spark.functions import (  # noqa: F401
@@ -320,7 +319,6 @@ _MODULE_ORDER: tuple[str, ...] = (
     "windows_time.py",
     "scalar.py",
     "tpch_extra.py",
-    "replay_batch.py",
     "temporal.py",
     "scale_ops.py",
     "multimodal_codec.py",

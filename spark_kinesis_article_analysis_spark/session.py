@@ -79,7 +79,8 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # Python DataSource filter pushdown: required for sources that
         # implement pushFilters() (Spark 4 refuses the read otherwise) —
-        # the article_replay source prunes shard files through this.
+        # the s3_parquet_manifest reader's data skipping prunes objects
+        # through this.
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # --- Python boundary: Arrow batches for the Pandas-UDF slow path ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -21,7 +21,7 @@ credential swap bug (``process_articles.py:45,57`` passes the access
 key in both slots) is deliberately not replicated, same as
 ``streaming/kinesis.py``.
 
-Two readers:
+Two readers, one per query kind:
 
 * **batch** (``spark.read.format("kinesis_api")``): a bounded snapshot
   — each shard drains from its start position until GetRecords reports
@@ -35,22 +35,22 @@ Two readers:
   fence offsets (see :class:`KinesisApiParallelStreamReader`). The
   driver's per-batch work is metadata only (one ListShards); at real
   shard counts the read bandwidth scales with the cluster, not the
-  driver. ``option("readerMode", "simple")`` selects the previous
-  :class:`SimpleDataSourceStreamReader` (driver-side, per-shard
-  sequence-number offsets) — kept as the offset/restart CONTRACT proof
-  and for debugging, not as the scale path.
+  driver.
 
 Resharding: a split/merge closes the parent shard (it gains an
 ``EndingSequenceNumber`` and its iterator eventually returns a null
-``NextShardIterator``). Both readers drain parents before children —
-shards are ordered parent-first (Kinesis guarantees a record routed to
-a parent precedes any same-key record in its children), and the stream
-reader remembers closed shards in the offset so they are never
-re-polled.
+``NextShardIterator``). The batch reader lists shards parent-first
+(Kinesis guarantees a record routed to a parent precedes any same-key
+record in its children). The stream reader keeps per-key order across
+a reshard through its arrival-time fences: a parent's records all
+arrived before its seal, so they fall in the same or an earlier batch
+than any child record. It remembers sealed shards in the offset so
+they stop being polled.
 
 Tested against the real API served by moto (``tests/test_kinesis_api.py``)
 — stream creation, multi-shard ingest, TRIM_HORIZON drain, per-shard
-sequence ordering, restart replay, and a split mid-stream.
+sequence ordering, restart replay, and splits and merges mid-stream and
+across a restart.
 """
 
 from __future__ import annotations
@@ -60,13 +60,11 @@ import types
 from collections.abc import Iterator, Sequence
 from typing import TYPE_CHECKING
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 if TYPE_CHECKING:
@@ -160,51 +158,23 @@ def _list_shards_parent_first(client, stream: str) -> list[dict]:
     return sorted(shards, key=lambda s: (depth(s), s["ShardId"]))
 
 
-def _drain_shard(
-    client,
-    stream: str,
-    shard_id: str,
-    after_seq: str | None,
-    stop_after_seq: str | None = None,
-) -> "tuple[list, str | None, bool]":
-    """Read a shard's currently-available records.
-
-    Starts AFTER ``after_seq`` (TRIM_HORIZON when None); stops when the
-    shard reports caught-up, closes, or (when ``stop_after_seq`` is set,
-    the replay fence) the recorded end sequence number is reached.
-    Returns (records, last_seq_or_None, closed).
-    """
-    if after_seq:
-        it = client.get_shard_iterator(
-            StreamName=stream,
-            ShardId=shard_id,
-            ShardIteratorType="AFTER_SEQUENCE_NUMBER",
-            StartingSequenceNumber=after_seq,
-        )["ShardIterator"]
-    else:
-        it = client.get_shard_iterator(
-            StreamName=stream, ShardId=shard_id, ShardIteratorType="TRIM_HORIZON"
-        )["ShardIterator"]
+def _drain_shard(client, stream: str, shard_id: str) -> list:
+    """A shard's currently-available records, from TRIM_HORIZON until
+    the shard reports caught-up or closes."""
+    it = client.get_shard_iterator(
+        StreamName=stream, ShardId=shard_id, ShardIteratorType="TRIM_HORIZON"
+    )["ShardIterator"]
     out: list = []
-    last_seq: str | None = None
-    closed = False
     while it:
         resp = client.get_records(ShardIterator=it, Limit=_GET_LIMIT)
         recs = resp.get("Records", [])
-        for r in recs:
-            if stop_after_seq is not None and int(r["SequenceNumber"]) > int(
-                stop_after_seq
-            ):
-                return out, last_seq, closed
-            out.append(r)
-            last_seq = r["SequenceNumber"]
+        out.extend(recs)
         it = resp.get("NextShardIterator")
         if it is None:
-            closed = True  # SHARD_END: the shard was split/merged away
-            break
+            break  # SHARD_END: the shard was split/merged away
         if not recs and resp.get("MillisBehindLatest", 0) == 0:
             break  # caught up with the tip — bounded snapshot ends here
-    return out, last_seq, closed
+    return out
 
 
 def _envelope(rec: dict, stream: str, shard_id: str) -> tuple:
@@ -258,100 +228,8 @@ class KinesisApiBatchReader(DataSourceReader):
             return  # empty-partitions probe (see s3_objects read note)
         stream = self.options["streamname"]
         client = _client(self.options)
-        recs, _last, _closed = _drain_shard(client, stream, partition.shard_id, None)
-        for r in recs:
+        for r in _drain_shard(client, stream, partition.shard_id):
             yield _envelope(r, stream, partition.shard_id)
-
-
-class KinesisApiStreamReader(SimpleDataSourceStreamReader):
-    """Per-shard sequence-number offsets; exactly-once across restarts.
-
-    Offset layout: ``{"seq": {shard_id: last_sequence_number}},
-    {"closed": [shard_id, ...]}`` — primitives only, as the offset
-    contract requires. A shard absent from ``seq`` has never been read
-    (TRIM_HORIZON); a shard in ``closed`` is fully drained past its
-    split/merge and is never polled again."""
-
-    def __init__(self, options: dict) -> None:
-        self.options = _norm_options(options)
-        if not self.options.get("streamname"):
-            raise ValueError("kinesis_api requires the streamName option")
-
-    def initialOffset(self) -> dict:
-        pos = self.options.get("startingposition", "TRIM_HORIZON").upper()
-        if pos == "TRIM_HORIZON":
-            return {"seq": {}, "closed": []}
-        if pos == "LATEST":
-            # start past everything currently in the stream
-            client = _client(self.options)
-            stream = self.options["streamname"]
-            seq: dict[str, str] = {}
-            closed: list[str] = []
-            for s in _list_shards_parent_first(client, stream):
-                recs, last, was_closed = _drain_shard(
-                    client, stream, s["ShardId"], None
-                )
-                if last is not None:
-                    seq[s["ShardId"]] = last
-                if was_closed:
-                    closed.append(s["ShardId"])
-            return {"seq": seq, "closed": closed}
-        raise ValueError(f"unsupported startingPosition {pos!r}")
-
-    def read(self, start: dict) -> "tuple[Iterator[tuple], dict]":
-        stream = self.options["streamname"]
-        client = _client(self.options)
-        seq = dict(start.get("seq", {}))
-        closed = set(start.get("closed", []))
-        out: list[tuple] = []
-        # re-list every batch: resharding creates shards mid-stream
-        for s in _list_shards_parent_first(client, stream):
-            sid = s["ShardId"]
-            if sid in closed:
-                continue
-            recs, last, was_closed = _drain_shard(client, stream, sid, seq.get(sid))
-            for r in recs:
-                out.append(_envelope(r, stream, sid))
-            if last is not None:
-                seq[sid] = last
-            # a shard is done when its iterator hit SHARD_END, or when
-            # the metadata says it's sealed (EndingSequenceNumber set —
-            # no record can ever be appended) and we just drained to the
-            # tip. The metadata check matters because some servers (moto
-            # included) keep vending iterators for sealed shards instead
-            # of nulling NextShardIterator.
-            if was_closed or "EndingSequenceNumber" in s.get(
-                "SequenceNumberRange", {}
-            ):
-                closed.add(sid)
-        return iter(out), {"seq": seq, "closed": sorted(closed)}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        """Failure-recovery replay of a committed range: re-read each
-        shard from start's position, fenced at end's recorded sequence
-        number — deterministic because sequence numbers are immutable
-        and monotonic per shard."""
-        stream = self.options["streamname"]
-        client = _client(self.options)
-        start_seq = start.get("seq", {})
-        end_seq = end.get("seq", {})
-        start_closed = set(start.get("closed", []))
-        out: list[tuple] = []
-        for s in _list_shards_parent_first(client, stream):
-            sid = s["ShardId"]
-            if sid in start_closed or sid not in end_seq:
-                continue
-            if start_seq.get(sid) == end_seq[sid]:
-                continue  # nothing of this shard in the batch
-            recs, _last, _closed = _drain_shard(
-                client, stream, sid, start_seq.get(sid), stop_after_seq=end_seq[sid]
-            )
-            for r in recs:
-                out.append(_envelope(r, stream, sid))
-        return iter(out)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the checkpoint; Kinesis retention is time-based
 
 
 def _ts_micros(ts) -> int:
@@ -386,9 +264,8 @@ class KinesisApiParallelStreamReader(DataSourceStreamReader):
     driver must fix the batch's END offset *before* any data is read
     (``latestOffset`` -> ``partitions`` -> executor ``read``), and
     Kinesis has no cheap "tip sequence number per shard" call — finding
-    it means reading the records, which is exactly the driver-side
-    bottleneck this reader removes (the Simple reader's documented
-    limit). The service DOES give a deterministic time axis for free:
+    it means reading the records on the driver, which would make the
+    driver the read bottleneck. The service DOES give a deterministic time axis for free:
     ``ApproximateArrivalTimestamp`` is server-assigned at append and
     non-decreasing within a shard, and ``AT_TIMESTAMP`` shard iterators
     seek straight to a fence. So:
@@ -487,8 +364,8 @@ class KinesisApiParallelStreamReader(DataSourceStreamReader):
         if pos == "TRIM_HORIZON":
             return {"fence_us": 0, "sealed": {}}
         if pos == "LATEST":
-            # unlike the Simple reader, LATEST needs no draining — the
-            # current tip is simply "everything with ts < now"
+            # LATEST needs no draining — the current tip is simply
+            # "everything with ts < now"
             return {"fence_us": self._now_fence_us(), "sealed": {}}
         raise ValueError(f"unsupported startingPosition {pos!r}")
 
@@ -508,8 +385,10 @@ class KinesisApiParallelStreamReader(DataSourceStreamReader):
         return {"fence_us": fence, "sealed": dict(self._sealed)}
 
     def partitions(self, start: dict, end: dict) -> Sequence[KinesisShardRangePartition]:
-        start_us = int(start.get("fence_us", 0))
-        end_us = int(end.get("fence_us", 0))
+        # indexed, not .get(): an offset without a fence (a checkpoint
+        # from another reader) must fail, not plan a TRIM_HORIZON re-read
+        start_us = int(start["fence_us"])
+        end_us = int(end["fence_us"])
         # re-learn the fence floor from the engine's own offsets (covers
         # restarts: the replayed batch teaches the fresh reader the
         # checkpointed position before any new fence is stamped)
@@ -599,20 +478,7 @@ class KinesisApiDataSource(DataSource):
         return KinesisApiBatchReader(self.options)
 
     def streamReader(self, schema: "StructType") -> KinesisApiParallelStreamReader:
-        """Default streaming path: the executor-parallel reader.
-        ``option("readerMode", "simple")`` falls back to the driver-side
-        Simple reader (Spark routes to ``simpleStreamReader`` when this
-        method raises PySparkNotImplementedError — the documented
-        dispatch in pyspark.sql.datasource_internal._streamReader)."""
-        if _norm_options(self.options).get("readermode", "parallel") == "simple":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader (readerMode=simple)"},
-            )
         return KinesisApiParallelStreamReader(self.options)
-
-    def simpleStreamReader(self, schema: "StructType") -> KinesisApiStreamReader:
-        return KinesisApiStreamReader(self.options)
 
 
 def put_records_partition(options: dict, rows: "Iterator") -> int:

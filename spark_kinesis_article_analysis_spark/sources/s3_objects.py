@@ -716,8 +716,7 @@ class S3ManifestReader(DataSourceReader):
         if partition is None:
             # the DataSource API probes read() with None when
             # partitions() returned [] (empty table — e.g. a manifest
-            # committed over an empty write); same quirk replay_source
-            # documents
+            # committed over an empty write)
             return
         yield from _read_object_adapted(
             self.options,

@@ -209,7 +209,7 @@ def streaming_asof_enrich(events: DataFrame) -> DataFrame:
     prepended as a synthetic earlier click, then state advances to the
     batch's newest click. Exactness across batches requires micro-batch
     boundaries to respect per-key event-time order (true for ordered
-    replays/logs, e.g. the article_replay source's per-shard order); the
+    replays/logs, e.g. a Kinesis shard's sequence order); the
     batch operator is the out-of-order-tolerant form. State per key is
     ONE (ts, value) pair — bounded regardless of history length, unlike
     the stream-stream interval join whose state is rate x interval.

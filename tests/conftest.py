@@ -24,7 +24,6 @@ _MARKS_BY_FILE = {
     "test_streaming.py": "streaming",
     "test_streaming_dedup_lsh.py": "streaming",
     "test_streaming_sketch.py": "streaming",
-    "test_replay_source.py": "streaming",
     "test_kinesis_api.py": "streaming",
 }
 
@@ -48,7 +47,6 @@ _SLOW_FILES = {
     "test_streaming.py",            # 225 s — micro-batch semantics + restarts
     "test_streaming_sketch.py",     # 77 s
     "test_table_stream.py",         # 65 s
-    "test_replay_source.py",        # 59 s
     "test_streaming_dedup_lsh.py",  # 50 s
     "test_s3_incremental.py",       # 35 s — manifest DML round trips
     "test_streaming_join.py",       # 31 s

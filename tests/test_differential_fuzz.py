@@ -964,273 +964,88 @@ class TestJoinSubqueryFuzz:
             )
 
 
-# -- replay-source fuzz: batch read vs streaming accumulation ---------------
-# Two independent code paths over the same archive — the batch reader
-# (one partition per shard, Arrow RecordBatch yields) and the streaming
-# reader (offset protocol, per-shard micro-batches). They must deliver
-# the identical multiset of rows for ANY archive: odd shard counts,
-# empty shards, hostile payloads (unicode, missing data, base64 binary,
-# non-string partitionKeys).
+# -- kinesis_api fuzz: batch snapshot vs streaming accumulation ------------
+# Two independent read paths over the same moto-served stream — the batch
+# reader (one TRIM_HORIZON drain per shard) and the parallel stream
+# reader (arrival-time fence offsets, AT_TIMESTAMP reads per batch). For
+# ANY shard count, empty shards, arbitrary payload bytes (not UTF-8 too)
+# and any interleaving of puts with latestOffset cuts, they must deliver
+# the identical multiset of (shardId, sequenceNumber, data).
 
-_payloads = st.one_of(
-    st.none(),
-    st.just(""),
-    st.text(
-        alphabet=st.characters(
-            blacklist_categories=("Cs",), blacklist_characters="\x00", max_codepoint=0x2FFF
-        ),
-        max_size=40,
+_kinesis_ops = st.lists(  # (shard index, payload) puts; None = a batch cut
+    st.one_of(
+        st.tuples(st.integers(0, 3), st.binary(min_size=1, max_size=40)),
+        st.none(),
     ),
-)
-_pkeys = st.one_of(
-    st.none(),
-    st.integers(-5, 5),
-    st.booleans(),
-    st.text(
-        alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E), max_size=8
-    ),
-)
-_archive_shape = st.lists(  # one entry per shard: list of envelopes
-    st.lists(st.tuples(_pkeys, _payloads), min_size=0, max_size=6),
-    min_size=1,
-    max_size=4,
+    max_size=16,
 )
 
 
-class TestReplaySourceFuzz:
-    @settings(
-        max_examples=_ex(5), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
-    )
-    @given(_archive_shape)
-    def test_batch_and_stream_reads_agree_on_random_archives(
-        self, spark, tmp_path_factory, shards
-    ):
-        from spark_kinesis_article_analysis_spark.sources.replay_source import (
-            ArticleReplayDataSource,
-            write_archive,
+class TestKinesisApiFuzz:
+    @settings(max_examples=_ex(5), deadline=None)
+    @given(n_shards=st.integers(1, 4), ops=_kinesis_ops)
+    @example(n_shards=3, ops=[(0, b"\xff\xfe\x00"), None, (2, b"\x80"), (0, b"ok")])
+    def test_batch_and_stream_reads_agree(self, n_shards, ops):
+        pytest.importorskip("boto3")
+        pytest.importorskip("moto")
+        import uuid
+
+        import boto3
+
+        from spark_kinesis_article_analysis_spark.operators.kinesis_batch import (
+            _endpoint,
+            kinesis_options,
+        )
+        from spark_kinesis_article_analysis_spark.sources.kinesis_source import (
+            KinesisApiBatchReader,
+            KinesisApiParallelStreamReader,
         )
 
-        spark.dataSource.register(ArticleReplayDataSource)
-        d = str(tmp_path_factory.mktemp("fuzz_replay") / "archive")
-        write_archive(
-            d,
-            {
-                f"shard-{i:03d}": [
-                    {"partitionKey": pk, "data": data} for pk, data in envs
-                ]
-                for i, envs in enumerate(shards)
-            },
+        client = boto3.client(
+            "kinesis",
+            region_name="us-east-1",
+            endpoint_url=_endpoint(),
+            aws_access_key_id="testing",
+            aws_secret_access_key="testing",
         )
+        stream = f"fuzz_{uuid.uuid4().hex}"  # moto keeps every stream
+        client.create_stream(StreamName=stream, ShardCount=n_shards)
+        shards = client.describe_stream(StreamName=stream)["StreamDescription"]["Shards"]
+        opts = kinesis_options(stream)
 
-        def key(r):
-            return (r.shard_id, r.sequence_number, r.partition_key, r.data)
+        def key(row):
+            return (row[5], row[3], bytes(row[0]))
 
-        batch = sorted(
-            key(r)
-            for r in spark.read.format("article_replay").option("path", d).load().collect()
-        )
-        name = f"replay_fuzz_{abs(hash(str(shards))) % 10**9}"
-        q = (
-            spark.readStream.format("article_replay")
-            .option("path", d)
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            stream = sorted(key(r) for r in spark.sql(f"SELECT * FROM {name}").collect())
-        finally:
-            q.stop()
-        assert batch == stream
+        r = KinesisApiParallelStreamReader(opts)
+        start = r.initialOffset()
+        streamed = []
 
-    @settings(
-        max_examples=_ex(5), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
-    )
-    @given(
-        pre=st.lists(st.tuples(st.integers(0, 3), st.text("ab", max_size=4)), min_size=0, max_size=8),
-        post=st.lists(st.tuples(st.integers(0, 3), st.text("ab", max_size=4)), min_size=1, max_size=8),
-        n_children=st.integers(1, 3),
-    )
-    def test_shard_split_keeps_per_key_order_and_exactly_once(
-        self, spark, tmp_path_factory, pre, post, n_children
-    ):
-        """Random reshard scenarios: `pre` rows land on the parent, a
-        split seals it, `post` rows route per-key to a consistent child.
-        For ANY shapes: (a) the stream delivers the written multiset
-        exactly once, (b) every parent row's micro-batch strictly
-        precedes every child row's, (c) per-key (batch, seq)-order
-        reproduces the write order across the split."""
-        import hashlib
+        def cut():
+            nonlocal start
+            end = r.latestOffset()
+            streamed.extend(key(row) for p in r.partitions(start, end) for row in r.read(p))
+            start = end
 
-        from spark_kinesis_article_analysis_spark.sources.replay_source import (
-            ArticleReplayDataSource,
-            split_shard,
-            write_archive,
-        )
-
-        spark.dataSource.register(ArticleReplayDataSource)
-        d = str(tmp_path_factory.mktemp("fuzz_split") / "archive")
-        written: dict[int, list[str]] = {}
-
-        def env(k: int, i: int, payload: str) -> dict:
-            data = f"k{k}:{i}:{payload}"
-            written.setdefault(k, []).append(data)
-            return {"partitionKey": f"k{k}", "data": data}
-
-        write_archive(d, {"parent": [env(k, i, p) for i, (k, p) in enumerate(pre)]})
-        split_shard(d, "parent", [f"child-{c}" for c in range(n_children)])
-
-        def child_of(k: int) -> str:
-            h = int(hashlib.md5(f"k{k}".encode()).hexdigest()[:8], 16)
-            return f"child-{h % n_children}"
-
-        routed: dict[str, list[dict]] = {f"child-{c}": [] for c in range(n_children)}
-        for j, (k, p) in enumerate(post):
-            routed[child_of(k)].append(env(k, len(pre) + j, p))
-        write_archive(d, routed)
-
-        batches: list[tuple[int, list]] = []
-
-        def sink(df, bid):
-            rows = [
-                (r.shard_id, r.sequence_number, bytes(r.data).decode("utf-8"))
-                for r in df.collect()
-            ]
-            if rows:
-                batches.append((bid, rows))
-
-        q = (
-            spark.readStream.format("article_replay")
-            .option("path", d)
-            .load()
-            .writeStream.foreachBatch(sink)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        rows = [r for _, rs in sorted(batches) for r in rs]
-        assert sorted(r[2] for r in rows) == sorted(
-            v for vs in written.values() for v in vs
-        )  # exactly-once multiset
-        # Fresh start over the already-split archive: the blind first
-        # poll can't hold the children (offset-regression risk), so
-        # parent and child slices may share batch 0 as ONE chained
-        # ancestors-first partition. The delivery-order contract is what
-        # holds universally: every parent row before any child row.
-        shard_seq = [r[0] for r in rows]
-        parent_idx = [i for i, s in enumerate(shard_seq) if s == "parent"]
-        child_idx = [i for i, s in enumerate(shard_seq) if s != "parent"]
-        if parent_idx and child_idx:
-            assert max(parent_idx) < min(child_idx), batches
-        for k, want in written.items():
-            got = [r[2] for r in rows if r[2].startswith(f"k{k}:")]
-            assert got == want, (k, got, batches)
-
-    @settings(
-        max_examples=_ex(4), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
-    )
-    @given(
-        pre=st.lists(st.tuples(st.integers(0, 2), st.text("ab", max_size=3)), min_size=0, max_size=5),
-        mid=st.lists(st.tuples(st.integers(0, 2), st.text("ab", max_size=3)), min_size=0, max_size=5),
-        post=st.lists(st.tuples(st.integers(0, 2), st.text("ab", max_size=3)), min_size=0, max_size=5),
-        n_children=st.integers(1, 2),
-        drive_after_pre=st.booleans(),
-        drive_after_mid=st.booleans(),
-    )
-    def test_reshard_restart_interleavings_exactly_once_and_ordered(
-        self, spark, tmp_path_factory, pre, mid, post, n_children,
-        drive_after_pre, drive_after_mid,
-    ):
-        """ADVICE r8 (high) generalized: a checkpointed query stops and
-        restarts at RANDOM points around a shard split — before the
-        split, after child rows are committed, or not at all — and for
-        every interleaving the union of all runs must deliver the written
-        multiset exactly once with per-key delivery order equal to write
-        order. This is the harness form of the targeted
-        child-rows-committed-before-restart test: each restart's first
-        poll is blind (committed offsets unknown), which is where a
-        gate-forced 0 used to regress the child offset and re-deliver."""
-        import hashlib
-
-        from spark_kinesis_article_analysis_spark.sources.replay_source import (
-            ArticleReplayDataSource,
-            split_shard,
-            write_archive,
-        )
-
-        spark.dataSource.register(ArticleReplayDataSource)
-        d = str(tmp_path_factory.mktemp("fuzz_resplit") / "archive")
-        ckpt = str(tmp_path_factory.mktemp("fuzz_resplit") / "ck")
-        written: dict[int, list[str]] = {}
-        seq = [0]
-
-        def env(k: int, payload: str) -> dict:
-            data = f"k{k}:{seq[0]}:{payload}"
-            seq[0] += 1
-            written.setdefault(k, []).append(data)
-            return {"partitionKey": f"k{k}", "data": data}
-
-        def child_of(k: int) -> str:
-            h = int(hashlib.md5(f"k{k}".encode()).hexdigest()[:8], 16)
-            return f"child-{h % n_children}"
-
-        def route(rows_) -> dict:
-            out: dict[str, list[dict]] = {}
-            for k, p in rows_:
-                out.setdefault(child_of(k), []).append(env(k, p))
-            return out
-
-        all_rows: list[tuple] = []
-
-        def drive():
-            batches: list[tuple[int, list]] = []
-
-            def sink(df, bid):
-                rows = [
-                    (r.shard_id, r.sequence_number, bytes(r.data).decode("utf-8"))
-                    for r in df.collect()
-                ]
-                if rows:
-                    batches.append((bid, rows))
-
-            q = (
-                spark.readStream.format("article_replay")
-                .option("path", d)
-                .load()
-                .writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .start()
+        sent = []
+        for op in ops:
+            if op is None:
+                cut()
+                continue
+            shard, data = op
+            client.put_record(
+                StreamName=stream,
+                Data=data,
+                PartitionKey=f"p{len(sent)}",
+                # route to the chosen shard; a shard no put picks stays empty
+                ExplicitHashKey=shards[shard % n_shards]["HashKeyRange"]["StartingHashKey"],
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            all_rows.extend(r for _, rs in sorted(batches) for r in rs)
+            sent.append(data)
+        cut()
 
-        write_archive(d, {"parent": [env(k, p) for k, p in pre]})
-        if drive_after_pre:
-            drive()
-        split_shard(d, "parent", [f"child-{c}" for c in range(n_children)])
-        if mid:
-            write_archive(d, route(mid))
-        if drive_after_mid:
-            drive()
-        if post:
-            write_archive(d, route(post))
-        drive()
-
-        assert sorted(r[2] for r in all_rows) == sorted(
-            v for vs in written.values() for v in vs
-        ), all_rows  # exactly-once across every restart interleaving
-        for k, want in written.items():
-            got = [r[2] for r in all_rows if r[2].startswith(f"k{k}:")]
-            assert got == want, (k, got, all_rows)
+        b = KinesisApiBatchReader(opts)
+        batch = [key(row) for p in b.partitions() for row in b.read(p)]
+        assert sorted(k[2] for k in batch) == sorted(sent)
+        assert sorted(batch) == sorted(streamed)
 
 
 class TestCorpusQualityFuzz:

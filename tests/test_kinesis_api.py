@@ -22,7 +22,6 @@ from spark_kinesis_article_analysis_spark.operators.kinesis_batch import (  # no
 from spark_kinesis_article_analysis_spark.sources.kinesis_source import (  # noqa: E402
     KinesisApiBatchReader,
     KinesisApiParallelStreamReader,
-    KinesisApiStreamReader,
     put_records_partition,
 )
 
@@ -90,75 +89,12 @@ class TestBatchReader:
 
 
 class TestStreamReader:
-    def test_offsets_advance_and_only_new_records_surface(self):
-        stream, client = _fresh_stream(shards=2)
-        first = _put(client, stream, 12, "a")
-        r = KinesisApiStreamReader(kinesis_options(stream))
-        start = r.initialOffset()
-        rows1, off1 = r.read(start)
-        rows1 = list(rows1)
-        assert {row[0] for row in rows1} == first
-        second = _put(client, stream, 7, "b")
-        rows2, off2 = r.read(off1)
-        rows2 = list(rows2)
-        assert {row[0] for row in rows2} == second  # nothing re-read
-        rows3, off3 = r.read(off2)
-        assert list(rows3) == [] and off3 == off2  # caught up, offset stable
+    """Full engine path: readStream through the default (parallel)
+    reader, availableNow into a parquet sink, restarts from the same
+    checkpoint."""
 
-    def test_read_between_offsets_replays_the_exact_batch(self):
-        stream, client = _fresh_stream(shards=2)
-        _put(client, stream, 9, "a")
-        r = KinesisApiStreamReader(kinesis_options(stream))
-        start = r.initialOffset()
-        rows, end = r.read(start)
-        original = sorted(row[3] for row in rows)
-        _put(client, stream, 5, "later")  # must NOT leak into the replay
-        replay = sorted(row[3] for row in r.readBetweenOffsets(start, end))
-        assert replay == original
-
-    def test_latest_starting_position_skips_history(self):
-        stream, client = _fresh_stream(shards=2)
-        _put(client, stream, 8, "old")
-        opts = dict(kinesis_options(stream))
-        opts["startingPosition"] = "LATEST"
-        r = KinesisApiStreamReader(opts)
-        start = r.initialOffset()
-        fresh = _put(client, stream, 3, "new")
-        rows, _ = r.read(start)
-        assert {row[0] for row in rows} == fresh
-
-    def test_split_shard_drains_parent_then_children_no_dups(self):
-        stream, client = _fresh_stream(shards=1)
-        before = _put(client, stream, 6, "pre")
-        r = KinesisApiStreamReader(kinesis_options(stream))
-        rows1, off1 = r.read(r.initialOffset())
-        assert {row[0] for row in rows1} == before
-        desc = client.describe_stream(StreamName=stream)["StreamDescription"]
-        parent = desc["Shards"][0]
-        mid = (
-            int(parent["HashKeyRange"]["StartingHashKey"])
-            + int(parent["HashKeyRange"]["EndingHashKey"])
-        ) // 2
-        client.split_shard(
-            StreamName=stream,
-            ShardToSplit=parent["ShardId"],
-            NewStartingHashKey=str(mid),
-        )
-        after = _put(client, stream, 10, "post")
-        rows2, off2 = r.read(off1)
-        rows2 = list(rows2)
-        assert {row[0] for row in rows2} == after
-        assert len(rows2) == 10
-        # parent closed: recorded in the offset, never re-polled, and a
-        # further read stays empty + stable
-        assert parent["ShardId"] in off2["closed"]
-        rows3, off3 = r.read(off2)
-        assert list(rows3) == [] and off3 == off2
-
-    def test_spark_streaming_restart_is_exactly_once(self, spark, tmp_path):
-        """Full engine path: readStream through the source, availableNow
-        into a parquet sink, stop, ingest more, restart from the same
-        checkpoint — the second run appends ONLY the new records."""
+    @staticmethod
+    def _run_available_now(spark, stream: str, sink: str, ckpt: str) -> None:
         from pyspark import cloudpickle
 
         from spark_kinesis_article_analysis_spark.sources import (
@@ -167,32 +103,60 @@ class TestStreamReader:
 
         cloudpickle.register_pickle_by_value(_ks)
         spark.dataSource.register(_ks.KinesisApiDataSource)
+        reader = spark.readStream.format("kinesis_api")
+        for k, v in kinesis_options(stream).items():
+            reader = reader.option(k, v)
+        q = (
+            reader.load()
+            .selectExpr("cast(data as string) AS payload", "shardId", "sequenceNumber")
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    def test_spark_streaming_restart_is_exactly_once(self, spark, tmp_path):
+        """Stop, ingest more, restart from the same checkpoint — the
+        second run appends ONLY the new records."""
         stream, client = _fresh_stream(shards=2)
         _put(client, stream, 15, "one")
         sink = str(tmp_path / "sink")
         ckpt = str(tmp_path / "ckpt")
-
-        def run_once() -> None:
-            reader = spark.readStream.format("kinesis_api")
-            for k, v in kinesis_options(stream).items():
-                reader = reader.option(k, v)
-            q = (
-                reader.load()
-                .selectExpr("cast(data as string) AS payload")
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run_once()
+        self._run_available_now(spark, stream, sink, ckpt)
         assert spark.read.parquet(sink).count() == 15
         _put(client, stream, 6, "two")
-        run_once()
+        self._run_available_now(spark, stream, sink, ckpt)
         got = [r.payload for r in spark.read.parquet(sink).collect()]
         assert len(got) == 21 and len(set(got)) == 21
+
+    def test_split_between_restarts_is_exactly_once(self, spark, tmp_path):
+        """Consume the parent, stop, split it (real service contract —
+        see _faithful_split), put more records for the SAME partition
+        keys, restart from the same checkpoint: every record is
+        committed exactly once, the post-split ones from the children."""
+        stream, client = _fresh_stream(shards=1)
+        before = _put(client, stream, 8, "k")
+        sink = str(tmp_path / "sink")
+        ckpt = str(tmp_path / "ckpt")
+        self._run_available_now(spark, stream, sink, ckpt)
+        assert {r.payload.encode() for r in spark.read.parquet(sink).collect()} == before
+        parent_id = client.describe_stream(StreamName=stream)[
+            "StreamDescription"
+        ]["Shards"][0]["ShardId"]
+        children = _faithful_split(stream, parent_id)
+        after = set()
+        for i in range(8):  # same keys as before, new payloads
+            data = json.dumps({"k": f"k{i}", "after": True}).encode()
+            client.put_record(StreamName=stream, Data=data, PartitionKey=f"k{i}")
+            after.add(data)
+        self._run_available_now(spark, stream, sink, ckpt)
+        rows = spark.read.parquet(sink).collect()
+        got = [r.payload.encode() for r in rows]
+        assert len(got) == 16 and set(got) == before | after
+        assert {r.shardId for r in rows if r.payload.encode() in after} <= set(children)
+        assert {r.shardId for r in rows if r.payload.encode() in before} == {parent_id}
 
 
 def _faithful_split(stream: str, shard_id: str) -> tuple[str, str]:
@@ -206,13 +170,13 @@ def _faithful_split(stream: str, shard_id: str) -> tuple[str, str]:
     split time and re-assigning sequence numbers), which fabricates
     records arriving in a sealed shard after its seal — impossible
     against real Kinesis, where a split never touches existing records.
-    Same infidelity class as its documented ``merge_shards`` one (see
-    TestOptionMapping.test_merge_shards_seals_parents_and_read_terminates).
-    The ThreadedMotoServer shares this process, so backend state is
-    directly reachable. Children are inserted BEFORE the parent in the
-    shard map because moto routes puts to the first shard covering the
-    key hash regardless of ``is_open`` — the real service routes new
-    puts to the open children. Returns the two child shard ids."""
+    Same infidelity class as its ``merge_shards`` one (see
+    _faithful_merge). The ThreadedMotoServer shares this process, so
+    backend state is directly reachable. Children are inserted BEFORE
+    the parent in the shard map because moto routes puts to the first
+    shard covering the key hash regardless of ``is_open`` — the real
+    service routes new puts to the open children. Returns the two child
+    shard ids."""
     from collections import OrderedDict
 
     from moto.kinesis.models import Shard, kinesis_backends
@@ -241,9 +205,8 @@ def _faithful_merge(stream: str, shard_a: str, shard_b: str) -> str:
     timestamps untouched — still readable until retention) and create
     one child covering the union hash range. moto's ``merge_shards``
     instead copies the first parent's records into the child and keeps
-    routing puts into the sealed parents (the documented infidelity —
-    see TestOptionMapping.test_merge_shards_seals_parents_and_read_terminates),
-    so exactness over a merge is asserted against this faithful form.
+    routing puts into the sealed parents, so exactness over a merge is
+    asserted against this faithful form.
     Returns the child shard id."""
     from collections import OrderedDict
 
@@ -445,6 +408,55 @@ class TestParallelStreamReader:
         assert polled == {merged}  # parent, c1, c2 all pruned
         assert self._batch(r, off4, off5) == []
 
+    def test_split_keeps_per_key_batch_order(self):
+        """A backlog of puts before and after a split, cut into several
+        latestOffset batches (one of which spans the split): for every
+        key, no child-shard record lands in an earlier batch than that
+        key's parent-shard records, and reading the batches in order
+        (each batch's partitions parent-first) reproduces every key's
+        put order."""
+        stream, client = _fresh_stream(shards=1)
+        keys = [f"k{i}" for i in range(6)]
+        put_order: dict[str, list[bytes]] = {k: [] for k in keys}
+
+        def put_round(tag: str) -> None:
+            for k in keys:
+                data = f"{k}:{tag}".encode()
+                client.put_record(StreamName=stream, Data=data, PartitionKey=k)
+                put_order[k].append(data)
+
+        r = KinesisApiParallelStreamReader(kinesis_options(stream))
+        offsets = [r.initialOffset()]
+        parent_id = client.describe_stream(StreamName=stream)[
+            "StreamDescription"
+        ]["Shards"][0]["ShardId"]
+        put_round("a")
+        offsets.append(r.latestOffset())
+        put_round("b")
+        children = _faithful_split(stream, parent_id)
+        put_round("c")  # same batch as "b": the cut spans the split
+        offsets.append(r.latestOffset())
+        put_round("d")
+        offsets.append(r.latestOffset())
+        put_round("e")
+        offsets.append(r.latestOffset())
+
+        # read only after the whole backlog is in place
+        batches = [self._batch(r, a, b) for a, b in zip(offsets, offsets[1:])]
+        rows = [(i, row) for i, batch in enumerate(batches) for row in batch]
+        assert sorted(row[0] for _, row in rows) == sorted(
+            d for ds in put_order.values() for d in ds
+        )  # exactly once
+        post_split = [row for _, row in rows if row[0].endswith((b":c", b":d", b":e"))]
+        assert {row[5] for row in post_split} <= set(children)
+        for k in keys:
+            mine = [(i, row) for i, row in rows if row[2] == k]
+            parent_batches = [i for i, row in mine if row[5] == parent_id]
+            child_batches = [i for i, row in mine if row[5] != parent_id]
+            assert len(parent_batches) == 2 and len(child_batches) == 3
+            assert max(parent_batches) <= min(child_batches), (k, mine)
+            assert [row[0] for _, row in mine] == put_order[k]
+
     def test_pruning_survives_restart_via_the_offset(self):
         """The sealed map rides in the checkpointed offset, so a fresh
         reader (post-restart, empty memo) still skips dead shards."""
@@ -515,30 +527,32 @@ class TestParallelStreamReader:
         # fence can never land below the checkpointed position
         assert r._last_fence_us >= 100
         assert r._now_fence_us() > 100
+        # an offset without a fence (the sequence-number layout of the
+        # removed driver-side reader) must fail, not plan a TRIM_HORIZON
+        # re-read of every record that checkpoint already committed
+        stream, client = _fresh_stream(shards=1)
+        _put(client, stream, 3, "committed")
+        local = KinesisApiParallelStreamReader(kinesis_options(stream))
+        old_layout = {"seq": {"shardId-000000000000": "3"}, "closed": []}
+        with pytest.raises(KeyError, match="fence_us"):
+            local.partitions(old_layout, local.latestOffset())
+        with pytest.raises(KeyError, match="fence_us"):
+            local.partitions({"fence_us": 100, "sealed": {}}, old_layout)
 
     def test_stream_reader_dispatch(self):
-        """Default streaming dispatch is the parallel reader; the
-        readerMode=simple option falls back to the Simple (driver-side)
-        reader through pyspark's documented NotImplemented fallback."""
-        from pyspark.sql.datasource_internal import (
-            _SimpleStreamReaderWrapper,
-            _streamReader,
-        )
+        """Streaming dispatch (pyspark's _streamReader) lands on the
+        executor-parallel reader."""
+        from pyspark.sql.datasource_internal import _streamReader
         from pyspark.sql.types import StructType
 
         from spark_kinesis_article_analysis_spark.sources.kinesis_source import (
-            ENVELOPE_SCHEMA,
             KinesisApiDataSource,
         )
 
-        _ = ENVELOPE_SCHEMA
         ds = KinesisApiDataSource({"streamname": "s"})
         assert isinstance(
             _streamReader(ds, StructType()), KinesisApiParallelStreamReader
         )
-        ds_simple = KinesisApiDataSource({"streamname": "s", "readermode": "simple"})
-        wrapped = _streamReader(ds_simple, StructType())
-        assert isinstance(wrapped, _SimpleStreamReaderWrapper)
 
 
 class TestFullReferencePipelineOnWire:
@@ -691,48 +705,3 @@ class TestOptionMapping:
         assert seen["aws_secret_access_key"] == "SECRET"
         assert seen["region_name"] == "eu-west-1"
         assert seen["endpoint_url"] == "http://x"
-
-    def test_merge_shards_seals_parents_and_read_terminates(self):
-        """merge_shards closure bookkeeping: both parents (ShardToMerge
-        + AdjacentShardToMerge) must land in the offset's closed set and
-        subsequent reads must reach a stable fixpoint.
-
-        Payload exactness is deliberately NOT asserted here: moto's
-        merge_shards diverges from the Kinesis contract — it copies the
-        first parent's records into the child shard and routes
-        post-merge puts into the SEALED parents — so an exactly-once
-        assertion would be testing the mock's bug, not the reader
-        (split_shard is faithful and exactness is asserted in
-        test_split_shard_drains_parent_then_children_no_dups). Against
-        real Kinesis the same reader logic applies: parents drain to
-        their seal, children start fresh."""
-        stream, client = _fresh_stream(shards=2)
-        before = _put(client, stream, 8, "pre")
-        r = KinesisApiStreamReader(kinesis_options(stream))
-        rows1, off1 = r.read(r.initialOffset())
-        assert {row[0] for row in rows1} == before
-        desc = client.describe_stream(StreamName=stream)["StreamDescription"]
-        open_shards = [
-            s for s in desc["Shards"]
-            if "EndingSequenceNumber" not in s["SequenceNumberRange"]
-        ]
-        assert len(open_shards) == 2
-        client.merge_shards(
-            StreamName=stream,
-            ShardToMerge=open_shards[0]["ShardId"],
-            AdjacentShardToMerge=open_shards[1]["ShardId"],
-        )
-        _put(client, stream, 9, "post")
-        rows2, off2 = r.read(off1)
-        list(rows2)
-        for s in open_shards:
-            assert s["ShardId"] in off2["closed"]
-        # fixpoint: once everything is drained the offset stops moving
-        prev = off2
-        for _ in range(3):
-            rows, nxt = r.read(prev)
-            if list(rows) == [] and nxt == prev:
-                break
-            prev = nxt
-        else:
-            raise AssertionError(f"read never reached a fixpoint: {prev}")
