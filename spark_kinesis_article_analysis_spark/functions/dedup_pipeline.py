@@ -17,11 +17,13 @@ running the identical pipeline (banded CTEs + recursive-CTE closure).
 Scale shape: the LSH/verify stages inherit ``dedup.py``'s plan (banded
 buckets, intra-bucket expansion, candidate-only verify); the component
 stage propagates labels over the VERIFIED pair graph only — a
-vanishing fraction of the corpus — with the same
-min-label + pointer-jumping + localCheckpoint discipline as
-``pipeline._propagate_labels`` (O(log diameter) rounds), rewritten here
-for an explicit edge list instead of implicit key groups. The
-convergence probe is one O(1) scalar agg per round.
+vanishing fraction of the corpus — with :func:`propagate_over_edges`,
+the package's one connected-components loop (min-label propagation +
+pointer jumping + one localCheckpoint per round, O(log diameter)
+rounds; ``pipeline.dedup_cluster_components`` runs it too, over
+key-group star edges). The edge list is materialised once on entry,
+so the LSH/verify plan runs once, not once per round. The convergence
+probe is one O(1) scalar agg per round.
 """
 
 from __future__ import annotations
@@ -48,17 +50,28 @@ from spark_kinesis_article_analysis_spark.registry import register
 EDGE_JACCARD_MIN = VERIFY_JACCARD_MIN
 
 
-def propagate_over_edges(
-    labels: DataFrame, edges: DataFrame, max_rounds: int = 15, jump_after: int = 2
-) -> DataFrame:
-    """Min-label propagation over an explicit directed edge list.
+#: Round from which each propagation round adds one pointer jump. A
+#: typical duplicate graph (small stars, diameter <= 3) converges
+#: before a jump would help, and the chase join costs a shuffle.
+JUMP_AFTER = 2
 
-    ``labels``: (doc_id, label) seeded label=doc_id; ``edges``:
-    (src, dst), must contain both directions of every undirected edge.
+
+def propagate_over_edges(
+    labels: DataFrame, edges: DataFrame, max_rounds: int = 50
+) -> DataFrame:
+    """Min-label propagation over an explicit directed edge list — the
+    connected-components loop of the MapReduce family (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14).
+
+    ``labels``: (doc_id, label), each seed label a doc_id of the node's
+    own component (label=doc_id always is); ``edges``: (src, dst), must
+    contain both directions of every undirected edge. Both inputs are
+    materialised once on entry, so a lazy ``edges`` plan (LSH, key-group
+    windows) is evaluated once, not once per round.
     Per round: each node takes the min of its own label and its
-    in-neighbors' labels; from round ``jump_after`` on, one pointer jump
+    in-neighbors' labels; from round ``JUMP_AFTER`` on, one pointer jump
     (labels are doc_ids, so chase label -> that doc's label) halves
-    remaining chain lengths — O(jump_after + log diameter) rounds.
+    remaining chain lengths — O(JUMP_AFTER + log diameter) rounds.
     Labels only decrease, so the label SUM is strictly decreasing until
     the fixpoint: the convergence probe is one scalar agg per round
     (the documented O(1) collect). The sum accumulates in DECIMAL(38,0),
@@ -66,8 +79,10 @@ def propagate_over_edges(
     sum could wrap (non-ANSI overflow), aliasing two distinct label
     states and falsely signalling convergence — DECIMAL keeps the
     strictly-decreasing signal injective (r7 ADVICE).
-    Raises loudly on non-convergence."""
+    Raises loudly on non-convergence: with pointer jumping that means
+    diameter ~2^max_rounds, and a silent exit would split components."""
     labels = labels.localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
     prev_sum = None
     for rnd in range(max_rounds):
         neigh = edges.join(labels, edges["src"] == labels["doc_id"]).select(
@@ -76,7 +91,7 @@ def propagate_over_edges(
         merged = (
             labels.unionByName(neigh).groupBy("doc_id").agg(F.min("label").alias("label"))
         )
-        if rnd >= jump_after:
+        if rnd >= JUMP_AFTER:
             chase = merged.select(
                 F.col("doc_id").alias("jl"), F.col("label").alias("jll")
             )
@@ -91,7 +106,7 @@ def propagate_over_edges(
             return labels
         prev_sum = label_sum
     raise RuntimeError(
-        "dedup_near_dup_end_to_end: component propagation did not converge "
+        "propagate_over_edges: component propagation did not converge "
         f"within max_rounds={max_rounds} (graph diameter ~2^{max_rounds} "
         "with pointer jumping — pass a larger max_rounds for this corpus)"
     )

@@ -10,12 +10,11 @@ Scale posture: chunking and split assignment are pure map-side
 (scan-fused, zero shuffles). Packing and percentile gating window by
 ``lang`` so no single-partition global sort exists; at 100 TB you would
 sub-shard hot languages (e.g. ``lang, pmod(hash(doc_id), k)``) the same
-way — the operator shape is unchanged. Component clustering is the
-min-label-propagation primitive of the MapReduce connected-components
-family (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14): each round is two keyed min-aggregations + a join, so rounds
-are shuffle-bounded and the iteration count is the graph diameter, not
-the data size.
+way — the operator shape is unchanged. Component clustering turns each
+dedup-key group into a star (every member linked to the group's min
+doc_id) and runs ``dedup_pipeline.propagate_over_edges``, the package's
+one connected-components loop: rounds are shuffle-bounded, and their
+count grows with the log of the graph diameter, not with the data size.
 """
 
 from __future__ import annotations
@@ -25,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load, parquet_column_bounds, table_path
+from spark_kinesis_article_analysis_spark.functions.dedup_pipeline import propagate_over_edges
 from spark_kinesis_article_analysis_spark.functions.splits import (
     BUCKET_SQL,
     TRAIN_MAX,
@@ -329,82 +329,23 @@ def quality_gate_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _propagate_labels(
-    nodes: DataFrame, max_rounds: int = 50, jump_after: int = 3
-) -> DataFrame:
-    """Min-label propagation over the implicit doc graph whose edges link
-    rows sharing ``fp`` or ``ph``, with adaptive pointer jumping.
-
-    Per round: (a) hash-to-min — each key group broadcasts its min label
-    (two keyed aggs + joins); (b) from round ``jump_after`` on, a pointer
-    jump — a label IS a doc_id, so chase it one hop through the
-    (doc_id -> label) mapping and take the min. Step (b) roughly halves
-    the remaining chain length each round, so a long-diameter graph
-    converges in O(jump_after + log diameter) rounds instead of
-    O(diameter) — the difference between ~10 and ~200 shuffles on a
-    100 TB corpus with long boilerplate chains. The jump is deferred
-    because a typical duplicate graph (star-shaped clusters, diameter
-    ≤ 3) converges before it would ever help — paying the extra chase
-    join per round tripled the fixture wall time when it ran
-    unconditionally. Labels are always doc_ids within the same
-    component (mins over component members only), so the fixpoint is
-    unchanged from plain propagation: every doc labeled with its
-    component's min doc_id.
-
-    ``nodes``: columns (doc_id, fp, ph, label), label pre-seeded to
-    doc_id. Raises loudly if ``max_rounds`` is hit — with pointer
-    jumping that means diameter ~2^max_rounds, i.e. something is wrong.
-    """
-    nodes = nodes.localCheckpoint(eager=True)
-    # Convergence probe: labels only ever decrease (least of mins), so the
-    # label sum is strictly decreasing until the fixpoint — comparing sums
-    # costs one scalar agg per round instead of a join against the
-    # previous state. Summed in DECIMAL(38,0): labels are doc_ids, and a
-    # BIGINT sum over a 64-bit id domain could wrap (non-ANSI overflow)
-    # and alias two distinct label states as "converged" (r7 ADVICE, same
-    # fix as dedup_pipeline.propagate_over_edges).
-    prev_sum = None
-    converged = False
-    for rnd in range(max_rounds):
-        m1 = nodes.groupBy("fp").agg(F.min("label").alias("l1"))
-        m2 = nodes.groupBy("ph").agg(F.min("label").alias("l2"))
-        hashed = (
-            nodes.join(m1, "fp")
-            .join(m2, "ph")
-            .select("doc_id", "fp", "ph", F.least("label", "l1", "l2").alias("label"))
-        )
-        if rnd >= jump_after:
-            # pointer jump: label -> (that doc's current label); left
-            # join — the mapping is total over doc_ids, but stay
-            # NULL-safe anyway.
-            chase = hashed.select(
-                F.col("doc_id").alias("jl"), F.col("label").alias("jll")
-            )
-            hashed = hashed.join(chase, hashed["label"] == chase["jl"], "left").select(
-                "doc_id",
-                "fp",
-                "ph",
-                F.least("label", F.coalesce("jll", "label")).alias("label"),
-            )
-        nodes = hashed.localCheckpoint(eager=True)
-        label_sum = nodes.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        if label_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = label_sum
-    if not converged:
-        # loud beats wrong: a silent exit here would return multiple
-        # component ids for one true component
-        raise RuntimeError(
-            "dedup_cluster_components: label propagation did not converge "
-            f"within max_rounds={max_rounds} (duplicate-graph diameter "
-            f"~2^{max_rounds} with pointer jumping — pass a larger "
-            "max_rounds for this corpus)"
-        )
-    return nodes
-
+def key_group_edges(nodes: DataFrame, *keys: str) -> DataFrame:
+    """Star edges (src, dst) of the implicit graph linking ``nodes`` rows
+    that share any of ``keys``: every row is linked, in both directions,
+    to its key group's hub — the group's min doc_id. A star spans the
+    same component as the group's clique with 2 edges per row per key,
+    never O(group size²). Self-edges (a hub to itself) are kept: they
+    keep singletons and NULL doc_ids in the edge list, which a
+    ``src != dst`` filter would drop."""
+    hubs = nodes.select(
+        "doc_id", *(F.min("doc_id").over(W.partitionBy(k)).alias(k) for k in keys)
+    )
+    pairs = [
+        F.struct(F.col(a).alias("src"), F.col(b).alias("dst"))
+        for k in keys
+        for a, b in (("doc_id", k), (k, "doc_id"))
+    ]
+    return hubs.select(F.inline(F.array(*pairs)))
 
 
 @register(
@@ -438,18 +379,18 @@ FROM comp
         "Duplicate-cluster discovery: connected components over the graph whose "
         "edges link docs sharing either dedup key (full-content fingerprint OR "
         "64-char prefix hash), so transitive chains collapse into one cluster. "
-        "Spark side: min-label propagation with pointer jumping — per round, "
-        "a min() per key group joined back, then one label-chase hop, so "
-        "rounds are O(log diameter), not O(diameter). Oracle: DuckDB "
-        "recursive CTE closure."
+        "Spark side: each key group becomes a star around its min doc_id, "
+        "then min-label propagation with pointer jumping over those edges "
+        "(dedup_pipeline.propagate_over_edges), so rounds are "
+        "O(log diameter), not O(diameter). Oracle: DuckDB recursive CTE "
+        "closure."
     ),
 )
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    # NULL text fingerprints as empty text: md5(NULL) is NULL, and the
-    # label joins on fp/ph are null-rejecting — a NULL-text doc would
-    # silently VANISH from the output (probed on the NULL-text fixture;
-    # the oracle's recursive closure keeps it).
+    # NULL text fingerprints as empty text, as in the oracle: md5(NULL)
+    # is NULL, and one NULL key group would link every NULL-text doc
+    # where the oracle's coalesced keys link them to the empty texts.
     norm_text = F.coalesce(F.col("text"), F.lit(""))
     nodes = d.select(
         "doc_id",
@@ -457,9 +398,18 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.sort_array(F.array_distinct(F.split(norm_text, r"\s+"))), " ")
         ).alias("fp"),
         F.md5(F.substring(norm_text, 1, 64)).alias("ph"),
-        F.col("doc_id").alias("label"),
     )
-    comp = _propagate_labels(nodes).select("doc_id", F.col("label").alias("component_id"))
+    # Seed each doc with its smaller hub: a doc_id of its own component
+    # (so pointer jumping stays valid), one propagation round for free.
+    # Every doc is an edge src (a hub through its self-edge), so every
+    # doc is seeded. The edges are materialised here as well, so the seed
+    # reads them instead of re-running the fingerprint and window plan
+    # (about 0.5 s at sf0.1 on a 4-core host).
+    edges = key_group_edges(nodes, "fp", "ph").localCheckpoint(eager=True)
+    seed = edges.groupBy(F.col("src").alias("doc_id")).agg(F.min("dst").alias("label"))
+    comp = propagate_over_edges(seed, edges).select(
+        "doc_id", F.col("label").alias("component_id")
+    )
     return comp.withColumn(
         "component_size", F.count("*").over(W.partitionBy("component_id"))
     )

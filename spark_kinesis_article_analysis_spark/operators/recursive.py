@@ -8,7 +8,7 @@ declaratively: bounded recursion. Spark 4 plans ``WITH RECURSIVE`` as a
 ``UnionLoop`` — the anchor runs once, then the recursive term re-plans
 against the previous iteration's result until it produces no rows (or
 the depth guard stops it), exactly the iterate-until-fixpoint template
-``functions/pipeline.py::dedup_cluster_components`` hand-builds with
+``functions/dedup_pipeline.py::propagate_over_edges`` hand-builds with
 localCheckpoint rounds.
 
 Scale posture: recursion depth is the loop count, so both queries bound

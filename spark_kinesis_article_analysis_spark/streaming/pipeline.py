@@ -389,60 +389,6 @@ def running_author_stats(parsed_with_wc: DataFrame) -> DataFrame:
     )
 
 
-def running_author_stats_v2(parsed_with_wc: DataFrame) -> DataFrame:
-    """State API v2 (``transformWithStateInPandas``, Spark 4): the same
-    per-author running stats as :func:`running_author_stats`, expressed
-    with a ``StatefulProcessor`` and a typed ``ValueState``.
-
-    v2 advantages at scale: multiple named state variables per key, TTL
-    on state, timers, and schema-evolvable state — all on the RocksDB
-    state store. The Arrow/protobuf wire format means this REQUIRES the
-    ``protobuf`` package; callers must treat ImportError as "API not
-    available in this environment" (the v1 operator above is the
-    always-available fallback)."""
-    import importlib
-
-    importlib.import_module("google.protobuf")  # state API v2 wire format
-    import pandas as pd  # noqa: F401  (processor body runs on workers)
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import LongType, DoubleType, StructField, StructType
-
-    state_schema = StructType(
-        [StructField("n", LongType(), True), StructField("total", DoubleType(), True)]
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.acc = handle.getValueState("acc", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues=None):
-            import pandas as pd
-
-            n, total = self.acc.get() if self.acc.exists() else (0, 0.0)
-            for pdf in rows:
-                # avg() semantics: NULLs out of numerator AND denominator
-                n += int(pdf["word_count"].notna().sum())
-                total += float(pdf["word_count"].sum())
-            self.acc.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "author": [key[0]],
-                    "n_articles": [n],
-                    "mean_word_count": [total / n if n else 0.0],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return parsed_with_wc.groupBy("author").transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType="author string, n_articles long, mean_word_count double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def start_memory_sink(df: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
     """Memory sink for semantic tests: processAllAvailable() then
     ``spark.sql(f"select * from {name}")``."""

@@ -2579,33 +2579,6 @@ class TestStatefulOpFuzz:
 
         _run_stateful_fuzz(spark, tmp_path_factory, rows, sizes, sp.running_author_stats)
 
-    @settings(
-        max_examples=_ex(2), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
-    )
-    @given(_stateful_rows, st.lists(st.integers(1, 4), min_size=1, max_size=8))
-    def test_running_author_stats_v2_matches_batch_fold(
-        self, spark, tmp_path_factory, rows, sizes
-    ):
-        """Same fold invariant through the state API v2 processor
-        (transformWithStateInPandas + RocksDB state store); skipped
-        where protobuf (the v2 wire format) is absent."""
-        pytest.importorskip("google.protobuf")
-
-        from spark_kinesis_article_analysis_spark.streaming import pipeline as sp
-
-        old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
-            _run_stateful_fuzz(
-                spark, tmp_path_factory, rows, sizes, sp.running_author_stats_v2
-            )
-        finally:
-            if old is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-
 
 # -- rows-only invariant fuzz: multimodal stubs, enrichment, sampling --------
 # These five specs are rows-only by design (nondeterministic columns or

@@ -445,39 +445,6 @@ class TestStreamingSessionWindow:
         assert all(r.n_articles == 1 for r in rows)
 
 
-class TestStateApiV2:
-    def test_transform_with_state_matches_v1(self, spark, payload_dir):
-        """State API v2 (transformWithStateInPandas) produces the same running
-        stats as the v1 applyInPandasWithState operator. Requires protobuf
-        (the v2 wire format) and the RocksDB state store — skipped where the
-        dependency is absent."""
-        pytest.importorskip("google.protobuf")
-        _write_batch(
-            spark, payload_dir, 0, [_article("a1", "alice", "2024-01-01 00:00:30", "w1 w2")]
-        )
-        _write_batch(
-            spark, payload_dir, 1, [_article("a2", "alice", "2024-01-01 00:01:00", "w1 w2 w3 w4")]
-        )
-        old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
-            parsed = sp.with_word_count(sp.parse_articles(sp.payload_stream(spark, payload_dir)))
-            stats = sp.running_author_stats_v2(parsed.select("author", "word_count"))
-            q = sp.start_memory_sink(stats, "author_stats_v2", output_mode="update")
-            q.processAllAvailable()
-            q.stop()
-            rows = spark.sql(
-                "SELECT * FROM author_stats_v2 WHERE author = 'alice' ORDER BY n_articles"
-            ).collect()
-            assert [(r.n_articles, r.mean_word_count) for r in rows] == [(1, 2.0), (2, 3.0)]
-        finally:
-            if old is not None:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-
-
 class TestRateSource:
     def test_rate_source_produces_rows(self, spark):
         """Built-in rate source: the standing load generator for streaming
