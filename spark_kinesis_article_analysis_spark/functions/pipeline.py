@@ -31,6 +31,7 @@ from spark_kinesis_article_analysis_spark.functions.splits import (
     VALID_MAX,
     doc_bucket,
 )
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 #: Chunking geometry: 50-token chunks every 40 tokens (10-token overlap).
@@ -39,10 +40,6 @@ CHUNK_STRIDE = 40
 
 #: Sequence-packing budget (tokens per packed training sequence).
 PACK_BUDGET = 2048
-
-
-def _toks(text_col: str = "text"):
-    return F.split(F.col(text_col), r"\s+")
 
 
 def _doc_id_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
@@ -88,7 +85,7 @@ FROM c
 )
 def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    t = d.select("doc_id", _toks().alias("toks"))
+    t = d.select("doc_id", tokens_col().alias("toks"))
     n_chunks = (F.floor((F.size("toks") - F.lit(1)) / F.lit(CHUNK_STRIDE)) + 1).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
@@ -125,7 +122,7 @@ FROM t
 )
 def pack_sequences_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    t = d.select("doc_id", "lang", F.size(_toks()).alias("n_tokens"))
+    t = d.select("doc_id", "lang", F.size(tokens_col()).alias("n_tokens"))
     w = W.partitionBy("lang").orderBy("doc_id").rowsBetween(W.unboundedPreceding, 0)
     cum = F.sum("n_tokens").over(w)
     return t.select(
@@ -166,7 +163,7 @@ def pack_sequences_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents")
-    t = d.select("doc_id", "lang", F.size(_toks()).alias("n_tokens"))
+    t = d.select("doc_id", "lang", F.size(tokens_col()).alias("n_tokens"))
     shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # doc_id is a dense integer key: shard by id-range arithmetic with
     # bounds from the parquet footers (driver-side metadata, zero jobs)
@@ -492,7 +489,7 @@ def corpus_prep_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = (
         d.join(surv, "doc_id", "left_semi")
-        .select("doc_id", "lang", F.size(_toks()).alias("n_tokens"))
+        .select("doc_id", "lang", F.size(tokens_col()).alias("n_tokens"))
         .filter(F.col("n_tokens").between(20, 1000))
     )
     bucket = doc_bucket()

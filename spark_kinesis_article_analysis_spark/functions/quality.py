@@ -40,11 +40,8 @@ from spark_kinesis_article_analysis_spark.functions.splits import (
     TRAIN_MAX,
     doc_bucket,
 )
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
-
-
-def _toks():
-    return F.split("text", r"\s+")
 
 
 def _bigrams(toks):
@@ -247,12 +244,12 @@ _GRAM5_SQL = """
 
 def _grams5(d: DataFrame) -> DataFrame:
     # Materialize the token array as a named column FIRST. Passing the
-    # raw `_toks()` expression into the lambda would embed a separate
+    # raw `tokens_col()` expression into the lambda would embed a separate
     # split() subtree at every element_at site — five full regex splits
     # of the document per gram (measured 27x slower). As an attribute
     # reference the split runs once per row; the projection below is a
     # Generate child, which CollapseProject leaves alone.
-    t = d.select("doc_id", _toks().alias("__toks"))
+    t = d.select("doc_id", tokens_col().alias("__toks"))
     tk = F.col("__toks")
     g = F.when(
         # guard: sequence(1, n-4) descends through 0 for docs under 5

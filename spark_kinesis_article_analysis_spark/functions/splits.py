@@ -8,12 +8,11 @@ corpus-vs-batch split of the incremental-dedup specs
 The thresholds approximate 80/10/10: 0xcd/0x100 = 80.1%,
 (0xe6-0xcd)/0x100 = 9.8%.
 
-This module registers NOTHING — both pipeline.py and quality.py import
-it, and a registering module could not be shared without perturbing the
-registry's import-order-based verdict rotation. The oracle SQL
-fragments are generated from the same constants as the Column
-expressions, so retuning the thresholds or hash can never desynchronize
-one engine side (the twin-oracle pattern of dedup/similarity).
+This module registers nothing; pipeline.py and quality.py import it.
+The oracle SQL fragments are generated from the same constants as the
+Column expressions, so retuning the thresholds or hash can never
+desynchronize one engine side (the twin-oracle pattern of
+dedup/similarity).
 """
 
 from __future__ import annotations

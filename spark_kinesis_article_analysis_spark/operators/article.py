@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_kinesis_article_analysis_spark import catalog
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 #: Declared domain schema — mirrors ``process_articles.py:29-35`` (all
@@ -97,15 +98,9 @@ def parse_articles(payload: DataFrame) -> DataFrame:
 
 def with_word_count(articles: DataFrame, text_col: str = "content") -> DataFrame:
     """P5/P6: whitespace-run tokenize + array length
-    (``process_articles.py:74-75``).
-
-    Same split rule as ``functions/text.tokens_col`` — deliberately NOT
-    imported from there: text.py is a registering module, and importing
-    it here (article is also reachable via streaming/pipeline, outside
-    the registry's _load_all) could reorder query registration and with
-    it the driver's verdict-rotation window. Keep the two in sync with
-    the tokenizer property test (tests/test_properties.py)."""
-    return articles.withColumn("words", F.split(F.col(text_col), r"\s+")).withColumn(
+    (``process_articles.py:74-75``), tokenized by
+    ``functions/text.tokens_col``."""
+    return articles.withColumn("words", tokens_col(text_col)).withColumn(
         "word_count", F.size(F.col("words"))
     )
 

@@ -1,4 +1,4 @@
-"""Driver-verdicted round trip through the ``kinesis_api`` source —
+"""Oracle-checked round trip through the ``kinesis_api`` source —
 the real Kinesis WIRE PROTOCOL, exercised end to end.
 
 This query proves the S1 contract against the actual AWS Kinesis HTTP
@@ -12,15 +12,6 @@ reference's parse + word-count path (``process_articles.py:53-75``).
 The oracle computes the same projection straight off ``documents``, so
 a hash match proves the producer + the service + the source preserved
 every payload byte and the parse inverted the envelope exactly.
-
-Lives in its own module so registering it does not re-stale settled
-specs (the registry's re-verify ordering keys on the builder's file).
-That keying cuts both ways: r11 rewrote the underlying SOURCE module
-(sources/kinesis_source.py, +272 lines — the executor-parallel stream
-reader) without touching this file, so this spec's r10 verdict went
-stale without re-entering the window. This r12 note re-stales it ON
-PURPOSE so the driver re-verdicts the wire path over the r11 source
-(VERDICT r11 item 4).
 
 Lifecycle: one ThreadedMotoServer per driver process (port 0 — OS
 assigned, no collisions), started lazily and stopped atexit; one stream

@@ -1,4 +1,4 @@
-"""Driver-verdicted snapshot-read and compaction queries for the
+"""Oracle-checked snapshot-read and compaction queries for the
 ``s3_parquet_manifest`` table format (``sources/s3_objects.py``).
 
 ``s3_manifest_roundtrip`` proves one append reads back exactly; these
@@ -18,13 +18,6 @@ two prove the MANIFEST LOG semantics that make the format operable at
 Setup is idempotent per (process, sf_dir), same lifecycle pattern as
 ``operators/s3_batch`` / ``operators/kinesis_batch`` (shared in-process
 moto endpoint, one prefix per sf_dir, written once).
-
-r12 note, load-bearing for the registry: this round edited the
-underlying wire modules (kinesis_source.py fence-lag warning;
-s3_objects.py replay commit-time carry). The registry keys
-staleness on THIS file, so this edit re-enters the module's specs
-into the verdict window alongside the source change (the r11
-dependency-staleness lesson, VERDICT item 4).
 """
 
 from __future__ import annotations

@@ -19,7 +19,7 @@ with the one semantic divergence the reference's own design forces kept
 out: the windowed aggregation is deliberately not part of this spec
 (append-mode windows only emit when the watermark closes them, so a
 bounded availableNow run would hold back the tail — the window-agg
-semantics are driver-verdicted on the batch twin
+semantics are oracle-checked on the batch twin
 ``article_pipeline_sliding`` and closed-window emission is pinned in
 ``tests/test_streaming.py``).
 
@@ -27,13 +27,6 @@ Lifecycle: same idempotent per-(process, sf_dir) pattern as
 ``operators/kinesis_batch`` — the streaming query runs ONCE per process
 (availableNow, bounded by the ingested stream), rebuilds reuse the
 committed manifests.
-
-r12 note, load-bearing for the registry: this round edited the
-underlying wire modules (kinesis_source.py fence-lag warning;
-s3_objects.py replay commit-time carry). The registry keys
-staleness on THIS file, so this edit re-enters the module's specs
-into the verdict window alongside the source change (the r11
-dependency-staleness lesson, VERDICT item 4).
 """
 
 from __future__ import annotations

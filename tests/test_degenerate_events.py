@@ -13,9 +13,7 @@ threw on malformed input; DuckDB json_extract_string threw where Spark's
 get_json_object returns NULL) were hardened in round 4b — props-wide
 variant access goes through try_parse_json/try_variant_get, and every
 JSON oracle guards with json_valid/TRY_CAST — so ALL events-only specs
-now run against the hostile fixture. (The scalar.py re-queue this causes
-lands at the BACK of the changed-since-verified class, outside the
-current verdict window; see SCALE.md.)
+now run against the hostile fixture.
 """
 
 from __future__ import annotations
