@@ -42,6 +42,14 @@ CHUNK_STRIDE = 40
 PACK_BUDGET = 2048
 
 
+def _shard_count(spark: SparkSession) -> int:
+    """The partition count Spark's own batch exchanges use: AQE's initial
+    partition number when AQE coalescing is on, else
+    ``spark.sql.shuffle.partitions`` (which a package session keeps at 1
+    for stateful streams, see ``session.get_spark``)."""
+    return int(spark._jsparkSession.sessionState().conf().numShufflePartitions())  # type: ignore[attr-defined]
+
+
 def _doc_id_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """(min, max) of documents.doc_id for arithmetic range sharding —
     parquet footer statistics (driver metadata read, zero Spark jobs),
@@ -164,7 +172,7 @@ def pack_sequences_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     t = d.select("doc_id", "lang", F.size(tokens_col()).alias("n_tokens"))
-    shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    shards = _shard_count(spark)
     # doc_id is a dense integer key: shard by id-range arithmetic with
     # bounds from the parquet footers (driver-side metadata, zero jobs)
     # instead of repartitionByRange, whose boundary sampling would
@@ -308,7 +316,7 @@ def quality_gate_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("score"),
     )
-    shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    shards = _shard_count(spark)
     # histogram-balanced arithmetic shards: no repartitionByRange, so no
     # child-plan sampling pass and no full-data range exchange — the only
     # corpus-scale shuffle left is the local window's own hash exchange
@@ -499,7 +507,7 @@ def corpus_prep_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("test")
     )
     s = kept.withColumn("split", split)
-    shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    shards = _shard_count(spark)
     # Shard by doc_id-range arithmetic (dense key, bounds from the
     # parquet footers — no extra job, and emphatically not from the
     # deduped subplan: repartitionByRange's boundary sampling would

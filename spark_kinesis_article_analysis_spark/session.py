@@ -7,8 +7,11 @@ DuckDB oracle compares naive-UTC timestamps) and for 100 TB posture (AQE,
 skew-join handling, sane shuffle partitioning, Arrow for the Pandas-UDF
 paths).
 
-On a real cluster only ``master`` and the shuffle-partition count change;
-the plan-shaping configs below are scale-independent.
+On a real cluster ``master`` and the batch partition count change; the
+plan-shaping configs below are scale-independent. Batch work and stateful
+streams take their partition counts from two different confs (see
+``get_spark``), so a stream's state is sized to the state, not to the
+core count.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 #: Python worker daemon that starts workers without Spark's archives on
 #: their import path (see ``worker_daemon``).
@@ -50,6 +53,15 @@ def get_spark(
     ``master`` and raise ``shuffle_partitions`` to ~2-3x total cores
     (at 100 TB: thousands; AQE coalesces small post-shuffle partitions
     back down, so over-provisioning the static number is safe).
+
+    ``shuffle_partitions`` is the batch partition count: AQE's initial
+    partition number, which is what batch exchanges use. A new stateful
+    stream starts with one state partition (``spark.sql.shuffle.partitions``,
+    which streams read because Spark runs them without AQE) and records it
+    in its checkpoint, so a restarted stream keeps the count it started
+    with. A stream that needs more state partitions sets
+    ``spark.sql.shuffle.partitions`` in ``extra_conf`` before its first
+    start.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     extra_conf = extra_conf or {}
@@ -65,7 +77,17 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "1")
+        # The default FileContext manager reaches Hadoop's local FS without
+        # native IO, which forks chmod/readlink for every checkpoint and
+        # state file. This one writes through the same checksummed
+        # LocalFileSystem (.crc files kept) and renames with the same
+        # check-then-rename on file: paths.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        )
         # 10 MB broadcast threshold is Spark's default; keep explicit so a
         # cluster profile can widen it. Dim tables (region/nation/customer/
         # supplier/part) stay broadcast even at 100 TB fact scale.

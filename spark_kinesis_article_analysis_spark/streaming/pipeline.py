@@ -16,10 +16,15 @@ parquet + checkpoint (:88-90)            start_parquet_sink
 awaitAnyTermination (:93)                await_all()
 
 Scale notes: state (window x key aggregates, dedup keys) is bounded by
-the watermark; at 100 TB/day use the RocksDB state store provider and
-partition the source so shard count >= executor cores (see
-session/scale docs). The parquet sink commits exactly-once via the
-manifest + checkpoint WAL, identical to the reference's sink semantics.
+the watermark. Under ``session.get_spark`` a new stateful stream starts
+with one state partition, so each micro-batch commits one state store
+whatever the core count; the count is recorded in the checkpoint at
+first start. A stream whose state outgrows one store sets
+``spark.sql.shuffle.partitions`` before its first start (at 100 TB/day
+also the RocksDB state store provider). Reads scale with the source:
+partition it so shard count >= executor cores. The parquet sink commits
+exactly-once via the manifest + checkpoint WAL, identical to the
+reference's sink semantics.
 """
 
 from __future__ import annotations

@@ -567,6 +567,35 @@ class TestFullReferencePipelineOnWire:
         append-mode emission cadence). The assertion is the golden
         equivalence: the sink's closed windows equal the BATCH twin of
         the same payloads filtered to window_end <= final watermark."""
+        got, expected, instances = self._three_runs(spark, tmp_path)
+        assert got == expected and len(got) == 10  # 5 sliding windows x 2 authors
+        assert {g[2] for g in got} == {"alice", "bob"}  # carol/dave still open
+        assert instances == [{1}, {1}, {1}]
+
+    def test_checkpoint_with_four_state_partitions_restarts(self, spark, tmp_path):
+        """A checkpoint first started with 4 state partitions and the
+        FileContext checkpoint manager (the session defaults before one
+        state partition) restarts twice under the current defaults: the
+        offset log's partition count wins, and the sink still holds each
+        closed window exactly once, equal to the batch twin."""
+        got, expected, instances = self._three_runs(
+            spark,
+            tmp_path,
+            first_run_conf={
+                "spark.sql.shuffle.partitions": "4",
+                "spark.sql.streaming.checkpointFileManagerClass": "org.apache.spark.sql."
+                "execution.streaming.checkpointing.FileContextBasedCheckpointFileManager",
+            },
+        )
+        assert instances == [{4}, {4}, {4}]
+        assert got == expected and len(got) == 10
+        assert len({g[:3] for g in got}) == len(got)
+
+    def _three_runs(self, spark, tmp_path, first_run_conf=None):
+        """Three availableNow runs of the wire pipeline on one checkpoint,
+        the first with ``first_run_conf`` set on the session. Returns the
+        sink's windows, the batch twin's closed windows and, per run, the
+        set of ``numStateStoreInstances`` its progress reported."""
         import json as _json
 
         from pyspark import cloudpickle
@@ -637,7 +666,11 @@ class TestFullReferencePipelineOnWire:
                 w = w.option(k, v)
             q = w.trigger(availableNow=True).start()
             q.awaitTermination(180)
+            instances.append({
+                op["numStateStoreInstances"] for p in q.recentProgress for op in p["stateOperators"]
+            })
 
+        instances: list[set[int]] = []
         batch_a = [
             art("a1", "alice", "2024-01-01 00:00:30"),
             art("b1", "bob", "2024-01-01 00:00:45", "w1 w2"),
@@ -645,7 +678,15 @@ class TestFullReferencePipelineOnWire:
         batch_b = [art("c1", "carol", "2024-01-01 02:00:00")]
         batch_c = [art("d1", "dave", "2024-01-01 04:00:00")]
         ingest(batch_a)
-        run_once()  # absorbs alice/bob; nothing closed yet
+        first_run_conf = first_run_conf or {}
+        saved = {k: spark.conf.get(k) for k in first_run_conf}
+        try:
+            for k, v in first_run_conf.items():
+                spark.conf.set(k, v)
+            run_once()  # absorbs alice/bob; nothing closed yet
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
         ingest(batch_b)
         run_once()  # watermark from run 1 still < alice/bob window ends
         ingest(batch_c)
@@ -672,8 +713,7 @@ class TestFullReferencePipelineOnWire:
                 F.col("window_end") <= F.lit("2024-01-01 01:59:50").cast("timestamp")
             ).collect()
         )
-        assert got == expected and len(got) == 10  # 5 sliding windows x 2 authors
-        assert {g[2] for g in got} == {"alice", "bob"}  # carol/dave still open
+        return got, expected, instances
 
 
 class TestOptionMapping:
