@@ -13,10 +13,10 @@ verified against DuckDB:
 
 * codebooks: per subspace, deterministic init (``vec_id < PQ_K``
   subvectors) + ONE Lloyd round over a deterministic
-  ``vec_id % PQ_TRAIN_STRIDE == 0`` subsample — the
-  ``cluster_kmeans_portable`` arithmetic (rounded-d2 argmin with cid
-  tiebreak, vec_id-ORDERED 0.0-seeded mean folds rounded per dim)
-  applied per subspace, and the same train-on-sample /
+  ``vec_id % PQ_TRAIN_STRIDE == 0`` subsample — the centroid kernel of
+  ``functions/similarity.py`` (rounded-d2 argmin with cid tiebreak,
+  vec_id-ORDERED 0.0-seeded mean folds rounded per dim) applied per
+  subspace, and the same train-on-sample /
   encode-full-corpus split the IVF path uses (at 100 TB the sample is
   a fixed-size reservoir; codebook quality needs sample coverage, not
   corpus coverage). The whole codebook is M x PQ_K x SUBDIM doubles —
@@ -38,7 +38,7 @@ verified against DuckDB:
   then ADC scoring over the encoded candidates; the FAISS
   billion-vector layering, verified end to end.
 
-Scale notes: training shuffles at (m, cluster, pos) grain over the
+Scale notes: training shuffles at (m, cluster) grain over the
 subsample; encode is a zero-exchange map stage against a broadcast;
 ADC is one broadcast join + one (query, neighbor) aggregation. The
 deterministic ordered folds exist to make the arithmetic verifiable —
@@ -62,6 +62,8 @@ from spark_kinesis_article_analysis_spark.functions.similarity import (
     N_QUERIES,
     TOP_K,
     VALID_DIM_SQL,
+    centroid_means,
+    nearest_centroid_sql,
 )
 from spark_kinesis_article_analysis_spark.registry import register
 
@@ -121,69 +123,41 @@ def _sub(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.col("s.m").alias("m"), F.col("s.sv").alias("sv"))
 
 
-def _assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
-    """Per (vec_id, m): nearest codebook centroid by (rounded d2, cid).
-    The codebook folds to ONE broadcast row; the argmin runs inside a
-    single map-side higher-order expression — no pair-grain rows."""
-    folded = cents.agg(F.collect_list(F.struct("m", "cid", "cent")).alias("cb"))
-    best = F.expr(
-        """array_min(transform(filter(cb, c -> c.m = m), c -> struct(
-               round(aggregate(zip_with(sv, c.cent, (p, q) -> (p - q) * (p - q)),
-                               cast(0.0 as double), (a, x) -> a + x), 6) AS d2,
-               c.cid AS cid)))"""
-    )
+def _fold_codebook(codebook: DataFrame) -> DataFrame:
+    """One-row frame ``cbm``: a map from subspace m to that subspace's
+    cells, each a centroid-kernel array of struct(cid, cent) — M x PQ_K
+    x SUBDIM doubles, broadcastable at any corpus size."""
     return (
-        sub.join(F.broadcast(folded))
-        .withColumn("b", best)
+        codebook.groupBy("m")
+        .agg(F.collect_list(F.struct("cid", "cent")).alias("cells"))
+        .agg(F.map_from_entries(F.collect_list(F.struct("m", "cells"))).alias("cbm"))
+    )
+
+
+def _assign(sub: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(vec_id, m, sv, cid): each training subvector's nearest cell of
+    its own subspace, by the kernel's rounded-d2 argmin over the
+    broadcast codebook — a map-side expression, no pair-grain rows."""
+    return (
+        sub.join(F.broadcast(_fold_codebook(codebook)))
+        .withColumn("b", F.expr(nearest_centroid_sql("sv", "element_at(cbm, m)")))
         .filter(F.col("b").isNotNull())  # empty codebook -> drop, both engines
-        .select(
-            "vec_id",
-            "m",
-            "sv",
-            F.col("b.cid").alias("cid"),
-            F.col("b.d2").alias("d2"),
-        )
+        .select("vec_id", "m", "sv", F.col("b.cid").alias("cid"))
     )
 
 
 def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(m, cid, cent): per-subspace codebooks — deterministic init from
     the ``vec_id < PQ_K`` subvectors, one Lloyd round over the
-    ``vec_id % PQ_TRAIN_STRIDE == 0`` subsample."""
+    ``vec_id % PQ_TRAIN_STRIDE == 0`` subsample; the update is the
+    kernel's one (m, cluster)-grain aggregation."""
     sub = _sub(spark, sf_dir)
     c0 = sub.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("cent")
     )
-    train = sub.filter(F.col("vec_id") % PQ_TRAIN_STRIDE == 0)
-    a1 = _assign(train, c0)
-    # r13 (guide §2.3/§2.4): ONE (m, cluster)-grain aggregation instead
-    # of the old posexplode -> groupBy(m, cluster, pos) -> groupBy(m,
-    # cluster) pair — one exchange (not two) and SUBDIM x fewer shuffled
-    # rows. Arithmetic is bit-identical: the per-dim mean is still the
-    # vec_id-ASCENDING 0.0-seeded fold (array_sort on struct(vec_id, sv)
-    # orders by the unique vec_id, exactly the old (vec_id, val) sort),
-    # divided by the group count (size(svs) == the old per-pos count(*)
-    # because every sv has all SUBDIM positions) and rounded per dim;
-    # cent is built in pos-ascending order by construction
-    # (sequence(1, SUBDIM) == the old sort-by-pos).
+    a1 = _assign(sub.filter(F.col("vec_id") % PQ_TRAIN_STRIDE == 0), c0)
     return (
-        a1.groupBy("m", F.col("cid").alias("cluster"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("vec_id", "sv"))),
-                lambda s: s["sv"],
-            ).alias("svs")
-        )
-        .select(
-            "m",
-            F.col("cluster").alias("cid"),
-            F.expr(
-                f"""transform(sequence(1, {SUBDIM}), p ->
-                       round(aggregate(transform(svs, v -> element_at(v, p)),
-                                       cast(0.0 as double), (a, x) -> a + x)
-                             / size(svs), 6))"""
-            ).alias("cent"),
-        )
+        centroid_means(a1, ["m", "cid"], "sv", SUBDIM)
         # LAZY lineage cut (the _ivf_trained_cents pattern): the trained
         # codebook is M x PQ_K rows but its subtree is sample-grain
         # clustering; ADC consumers broadcast it TWICE (encode side +
@@ -202,33 +176,25 @@ def _trained_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: higher-order expression over the broadcast codebook MAP (m -> cells).
 #: The inner transform hoists each subspace's slice (computed once, not
 #: once per cell) and element_at replaces a per-m scan of the whole
-#: codebook; array element m is struct(d2, cid) for subspace m
-#: (m-ordered by construction: sequence(0, M-1)).
+#: codebook; array element m is the kernel's struct(score = rounded d2,
+#: cid) for subspace m (m-ordered by construction: sequence(0, M-1)).
 _ENCODE_EXPR = f"""transform(
     transform(sequence(0, {SUBS - 1}),
               mm -> struct(mm AS m, slice(v, mm * {SUBDIM} + 1, {SUBDIM}) AS sv)),
-    s -> array_min(transform(element_at(cbm, s.m), c -> struct(
-        round(aggregate(zip_with(s.sv, c.cent, (p, q) -> (p - q) * (p - q)),
-                        cast(0.0 as double), (a, x) -> a + x), 6) AS d2,
-        c.cid AS cid))))"""
+    s -> {nearest_centroid_sql("s.sv", "element_at(cbm, s.m)")})"""
 
 
 def _encoded(spark: SparkSession, sf_dir: str, codebook: DataFrame) -> DataFrame:
     """(vec_id, arr): the full corpus encoded map-side — arr[m] =
-    struct(d2, cid) for subspace m. ZERO exchanges beyond the codebook
+    struct(score, cid) for subspace m. ZERO exchanges beyond the codebook
     broadcast: this is the stage that runs over 100 TB, and it is a
     pure map. Vectors with any unencodable subspace (empty codebook —
     degenerate corpora only) drop, mirroring the oracle's inner join
     (element_at on a missing subspace yields NULL -> NULL arr element
     -> the exists-NULL filter)."""
-    folded = codebook.groupBy("m").agg(
-        F.collect_list(F.struct("cid", "cent")).alias("cells")
-    ).agg(
-        F.map_from_entries(F.collect_list(F.struct("m", "cells"))).alias("cbm")
-    )
     return (
         _vecs(spark, sf_dir)
-        .join(F.broadcast(folded))
+        .join(F.broadcast(_fold_codebook(codebook)))
         .withColumn("arr", F.expr(_ENCODE_EXPR))
         .filter(~F.exists("arr", lambda x: x.isNull()))
         .select("vec_id", "arr")
@@ -316,7 +282,7 @@ def embed_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sqrt(
                 F.aggregate(
-                    F.transform(F.col("arr"), lambda x: x["d2"]),
+                    F.transform(F.col("arr"), lambda x: x["score"]),
                     F.lit(0.0),
                     lambda a, x: a + x,
                 )

@@ -23,13 +23,16 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
-from spark_kinesis_article_analysis_spark.functions.similarity import EMB_DIM
-from spark_kinesis_article_analysis_spark.registry import register
 from spark_kinesis_article_analysis_spark.functions.similarity import (
+    EMB_DIM,
     VALID_DIM_SQL,
     VALID_OR_NULL_SQL,
+    centroid_means,
+    fold_centroids,
+    nearest_centroid_sql,
     valid_dim_or_null,
 )
+from spark_kinesis_article_analysis_spark.registry import register
 
 # --------------------------------------------------------------------------
 # sample_hash_portable — reproducible content-addressed Bernoulli sampling
@@ -611,19 +614,20 @@ SELECT vec_id, cluster, round(sqrt(d2), 6) AS dist FROM a2
     ),
 )
 def cluster_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same scale shape as sim_ivf_topk's assignment: the centroid set
+    """Same scale shape as sim_ivf_topk's assignment, through the same
+    centroid kernel (``functions/similarity.py``): the centroid set
     folds to ONE array row (K x dim doubles, broadcastable at any corpus
     size) and every vector picks its cluster inside a single map-side
     higher-order expression — no pair-grain rows, no window shuffle.
-    The update is one (cluster, pos) hash agg; the ordered fold costs a
-    collect_list per group of at most |cluster| elements, which is why
+    The update is one cluster-grain hash agg; the ordered fold costs a
+    collect_list per cluster of at most |cluster| vectors, which is why
     production kmeans at 100 TB accepts nondeterministic avg() instead —
     this spec exists to VERIFY the arithmetic, and documents the price
     of determinism."""
     # NULL embedding == no position in the space: excluded on both
     # engine sides (the vector-grain analogue of the NULL-ts window
-    # rule; a NULL otherwise poisons the round-1 centroid means —
-    # posexplode drops it while the oracle's unnest NULLs the mean).
+    # rule; a NULL member otherwise makes its cluster's round-1 mean
+    # NULL).
     e = (
         load(spark, sf_dir, "embeddings")
         .filter(F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM))
@@ -634,18 +638,9 @@ def cluster_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def assign(cents_df: DataFrame) -> DataFrame:
-        folded = cents_df.agg(
-            F.collect_list(F.struct("cid", "cent")).alias("cents")
-        )
-        best = F.expr(
-            """array_min(transform(cents, c -> struct(
-                   round(aggregate(zip_with(v, c.cent, (p, q) -> (p - q) * (p - q)),
-                                   cast(0.0 as double), (a, x) -> a + x), 6) AS d2,
-                   c.cid AS cid)))"""
-        )
         return (
-            e.join(F.broadcast(folded))
-            .withColumn("b", best)
+            e.join(F.broadcast(fold_centroids(cents_df)))
+            .withColumn("b", F.expr(nearest_centroid_sql("v")))
             # Empty centroid set (no valid vector has vec_id < K — fuzz
             # find #24: a corpus of NULL embeddings plus one valid
             # vector): array_min([]) is NULL, and the oracle's cross
@@ -654,40 +649,12 @@ def cluster_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             # cluster (which round 2 then "repaired" into a NULL-cid
             # centroid, emitting Row(cluster=NULL, dist=0.0)).
             .filter(F.col("b").isNotNull())
-            .select("vec_id", "v", F.col("b.cid").alias("cluster"), F.col("b.d2").alias("d2"))
+            .select("vec_id", "v", F.col("b.cid").alias("cid"), F.col("b.score").alias("d2"))
         )
 
-    a1 = assign(cents)
-    sums = (
-        a1.select("cluster", "vec_id", F.posexplode("v").alias("pos", "val"))
-        .groupBy("cluster", "pos")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                        lambda s: s["val"],
-                    ),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-                / F.count("*"),
-                6,
-            ).alias("m")
-        )
-    )
-    c1 = (
-        sums.groupBy("cluster")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-            ).alias("cent")
-        )
-        .select(F.col("cluster").alias("cid"), "cent")
-    )
-    a2 = assign(c1)
+    a2 = assign(centroid_means(assign(cents), ["cid"], "v", EMB_DIM))
     return a2.select(
-        "vec_id", "cluster", F.round(F.sqrt("d2"), 6).alias("dist")
+        "vec_id", F.col("cid").alias("cluster"), F.round(F.sqrt("d2"), 6).alias("dist")
     )
 
 

@@ -14,7 +14,8 @@ This spec is that pipeline in oracle-exact form:
 
 * **Clustering**: one deterministic assignment round to the seeded
   centroid set (vec_id < K, the ``cluster_kmeans_portable`` init), by
-  ROUNDED cosine (argmax, cid tiebreak). The full Lloyd loop is
+  ROUNDED cosine (argmax, cid tiebreak) — the centroid kernel of
+  ``functions/similarity.py``. The full Lloyd loop is
   ``cluster_kmeans_lloyd``'s job; this spec needs a *fixed* partition
   of the space, and one assignment round keeps the oracle one CTE.
 * **Intra-cluster chunking**: clusters are md5-order sub-split at
@@ -43,8 +44,11 @@ from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
 from spark_kinesis_article_analysis_spark.functions.similarity import (
-    EMB_DIM,
     NONZERO_SQL,
+    _cosine_vectors,
+    dot,
+    fold_centroids,
+    nearest_centroid_sql,
 )
 from spark_kinesis_article_analysis_spark.registry import register
 
@@ -121,57 +125,35 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _semantic_keep(ck)
 
 
-def _dot(x, y):
-    return F.aggregate(
-        F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda a, v: a + v
-    )
-
-
 def _semantic_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LAZY (vec_id, v, nrm, cluster, cos_cent, sub) frame — split
     from the registered builder so plan tests can pin the broadcast
     centroid join and map-side argmax before the checkpoint truncates
     the plan (the ``graph._pagerank_frames`` pattern)."""
-    dot = _dot
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .filter((F.size("v") == EMB_DIM) & F.exists("v", lambda x: x != 0.0))
-        .withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
+    e = _cosine_vectors(load(spark, sf_dir, "embeddings")).select(
+        "vec_id", F.col("emb").alias("v"), "nrm"
     )
-    folded = F.broadcast(
-        e.filter(F.col("vec_id") < SEM_K).agg(
-            F.collect_list(
-                F.struct(
-                    F.col("vec_id").alias("cid"),
-                    F.col("v").alias("cent"),
-                    F.col("nrm").alias("cnrm"),
-                )
-            ).alias("cents")
-        )
+    folded = fold_centroids(
+        e.filter(F.col("vec_id") < SEM_K).select(
+            F.col("vec_id").alias("cid"), F.col("v").alias("cent"), F.col("nrm").alias("cnrm")
+        ),
+        "cnrm",
     )
-    # argmax by (rounded cosine DESC, cid ASC) as an array_min over
-    # (-cos, cid) — negation of the ROUNDED value is exact, so the order
-    # matches the oracle's row_number. NULL best (empty centroid set)
-    # drops the row: the oracle's CROSS JOIN against an empty c0 emits
-    # nothing (the kmeans empty-seed rule, fuzz find #24).
-    best = F.expr(
-        f"""array_min(transform(cents, c -> struct(
-               -round(aggregate(zip_with(v, c.cent, (p, q) -> p * q),
-                                cast(0.0 as double), (a, x) -> a + x)
-                      / (nrm * c.cnrm), 6) AS negcos,
-               c.cid AS cid)))"""
-    )
+    # the centroid kernel's cosine argmin: (negated rounded cosine, cid),
+    # so the order matches the oracle's (cos DESC, cid ASC) row_number.
+    # NULL best (empty centroid set) drops the row: the oracle's CROSS
+    # JOIN against an empty c0 emits nothing (the kmeans empty-seed
+    # rule, fuzz find #24).
     a0 = (
-        e.join(folded)
-        .withColumn("b", best)
+        e.join(F.broadcast(folded))
+        .withColumn("b", F.expr(nearest_centroid_sql("v", metric="cos")))
         .filter(F.col("b").isNotNull())
         .select(
             "vec_id",
             "v",
             "nrm",
             F.col("b.cid").alias("cluster"),
-            (-F.col("b.negcos")).alias("cos_cent"),
+            (-F.col("b.score")).alias("cos_cent"),
         )
     )
     w = W.partitionBy("cluster").orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -185,7 +167,7 @@ def _semantic_keep(ck: DataFrame) -> DataFrame:
     a = ck.alias("a")
     b = ck.alias("b")
     pair_cos = F.round(
-        _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
+        dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm")), 6
     )
     better = (F.col("b.cos_cent") > F.col("a.cos_cent")) | (
         (F.col("b.cos_cent") == F.col("a.cos_cent"))

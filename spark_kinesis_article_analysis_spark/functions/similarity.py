@@ -95,12 +95,16 @@ def valid_dim_or_null() -> Column:
     return F.col("embedding").isNull() | (F.size("embedding") == EMB_DIM)
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "embeddings")
-        .filter(valid_dim_or_null())
-        .select("vec_id", "label", F.col("embedding").cast("array<double>").alias("emb"))
+def _vectors(raw: DataFrame) -> DataFrame:
+    """(vec_id, label, emb) of a raw embeddings frame: schema-valid or
+    NULL rows, cast to ``array<double>``."""
+    return raw.filter(valid_dim_or_null()).select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
     )
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _vectors(load(spark, sf_dir, "embeddings"))
 
 
 #: DuckDB twin of the zero-vector guard below (raw `embedding` column):
@@ -118,7 +122,107 @@ def _emb_nonzero(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, quantization) where a zero vector is a legitimate row.
     ``exists`` short-circuits on the first nonzero component — cheaper
     than a norm fold, and no filter-on-fold-column re-inline."""
-    return _emb(spark, sf_dir).filter(F.exists("emb", lambda x: x != 0.0))
+    return _nonzero(_emb(spark, sf_dir))
+
+
+def _nonzero(e: DataFrame) -> DataFrame:
+    return e.filter(F.exists("emb", lambda x: x != 0.0))
+
+
+def _cosine_vectors(raw: DataFrame) -> DataFrame:
+    """(vec_id, label, emb, nrm): the cosine-scorable vectors of a raw
+    embeddings frame — a table scan or a stream's micro-batch — with
+    each norm folded ONCE at vector grain."""
+    return _nonzero(_vectors(raw)).withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
+
+
+# --------------------------------------------------------------------------
+# Centroid kernel — the one "portable centroid" rule that IVF, k-means, PQ
+# and SemDeDup share and their DuckDB oracles mirror:
+#
+# * the centroids fold to ONE broadcast row (``cents``: array<struct<cid,
+#   cent, ...>>), so assignment is a map-side higher-order expression with
+#   no pair-grain rows, no window and no exchange;
+# * the nearest centroid is ``array_min`` over struct(score, cid): rounded
+#   squared distance, or the NEGATED rounded cosine (negating a rounded
+#   value is exact), so ties go to the smaller cid — the oracles'
+#   ``ORDER BY score, cid`` with rn = 1. An empty centroid array gives
+#   NULL, which every caller drops, as the oracles' cross join with an
+#   empty centroid set emits nothing;
+# * a centroid update is ONE aggregation per cluster: each dimension's
+#   mean is a vec_id-ordered fold from 0.0 divided by the member count,
+#   rounded to 6 places — the oracles' ``list(val ORDER BY vec_id)``
+#   reduce.
+# --------------------------------------------------------------------------
+
+
+def fold_centroids(cents: DataFrame, *fields: str) -> DataFrame:
+    """One-row frame ``cents``: the (cid, cent, *fields) rows of
+    ``cents`` as one array of structs, ready to broadcast."""
+    return cents.agg(F.collect_list(F.struct("cid", "cent", *fields)).alias("cents"))
+
+
+def _scores_sql(vec: str, cents: str, metric: str, rounded: bool) -> str:
+    """``transform(cents, c -> struct(score, cid))`` for the vector
+    expression ``vec``. ``metric="cos"`` also reads the row's ``nrm``
+    column and each centroid's ``cnrm`` field."""
+    if metric == "d2":
+        d2 = (
+            f"aggregate(zip_with({vec}, c.cent, (p, q) -> (p - q) * (p - q)), "
+            "cast(0.0 as double), (a, x) -> a + x)"
+        )
+        score = f"round({d2}, 6)" if rounded else d2
+    else:
+        score = (
+            f"-round(aggregate(zip_with({vec}, c.cent, (p, q) -> p * q), "
+            "cast(0.0 as double), (a, x) -> a + x) / (nrm * c.cnrm), 6)"
+        )
+    return f"transform({cents}, c -> struct({score} AS score, c.cid AS cid))"
+
+
+def nearest_centroid_sql(
+    vec: str, cents: str = "cents", metric: str = "d2", rounded: bool = True
+) -> str:
+    """SQL for struct(score, cid) of the nearest centroid in the array
+    expression ``cents``: ``metric`` is ``"d2"`` (squared distance,
+    rounded to 6 places unless ``rounded=False``) or ``"cos"``
+    (negated rounded cosine). NULL when ``cents`` is empty or NULL."""
+    return f"array_min({_scores_sql(vec, cents, metric, rounded)})"
+
+
+def nearest_centroids(vec: str, n: int, metric: str) -> Column:
+    """``array<long>`` of the ``n`` nearest cids in ``cents``, nearest
+    first: the argmin's (score, cid) order, sorted and sliced instead
+    of minimised."""
+    return F.expr(
+        f"transform(slice(array_sort({_scores_sql(vec, 'cents', metric, True)}), 1, {n}), "
+        "x -> x.cid)"
+    )
+
+
+def centroid_means(assigned: DataFrame, keys: list[str], vec: str, dim: int) -> DataFrame:
+    """(*keys, cent): per group of ``keys``, the mean of the ``vec``
+    arrays (length ``dim``) — per dimension the vec_id-ordered fold from
+    0.0, divided by the member count and rounded to 6 places. One
+    aggregation at cluster grain: the sorted member vectors are
+    collected once and every dimension folds over them."""
+    return (
+        assigned.groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("vec_id", vec))), lambda s: s[vec]
+            ).alias("vs")
+        )
+        .select(
+            *keys,
+            F.expr(
+                f"""transform(sequence(1, {dim}), p ->
+                       round(aggregate(transform(vs, v -> element_at(v, p)),
+                                       cast(0.0 as double), (a, x) -> a + x)
+                             / size(vs), 6))"""
+            ).alias("cent"),
+        )
+    )
 
 
 @register(
@@ -155,9 +259,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # higher-order-expression work, the same pathology class the r3
     # sweep caught in dedup_embedding_cosine). sqrt(fold) is the same
     # arithmetic either way, so the pair cosine is bit-identical.
-    e = _emb_nonzero(spark, sf_dir).withColumn(
-        "nrm", F.sqrt(dot(F.col("emb"), F.col("emb")))
-    )
+    e = _cosine_vectors(load(spark, sf_dir, "embeddings"))
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("qe"),
@@ -392,151 +494,88 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(spark, sf_dir, nprobe=IVF_NPROBE)
 
 
-#: argmax over the folded centroid array, one SQL parse: score each
-#: centroid (same rounded-cosine arithmetic as the oracle), take the
-#: lexicographic max of (score, -cid) — max score, ties to the SMALLEST
-#: centroid_id: exactly the oracle's ORDER BY score DESC, centroid_id
-#: ASC with rn = 1. collect_list order is nondeterministic but argmax
-#: over the array is order-invariant given that tie-break. An empty
-#: centroid set (degenerate corpus) gives transform([]) -> [] and
-#: array_max([]) -> NULL, which every consumer drops — the same empty
-#: result as a rn=1 window form. Consumers compute `-(...).negcid`.
-_IVF_ARGMAX_NEGCID = """(array_max(transform(cents, c -> struct(
-               round(aggregate(zip_with(emb, c.ce, (p, q) -> p * q),
-                               cast(0.0 as double), (a, v) -> a + v)
-                     / (nrm * c.cnrm), 6) AS s,
-               -c.cid AS negcid)))).negcid"""
-
-
 def _ivf_trained_cents(e: DataFrame) -> DataFrame:
-    """One-row frame (`cents`: array<struct<cid, ce, cnrm>>) of trained
+    """One-row frame (`cents`: array<struct<cid, cent, cnrm>>) of trained
     IVF cell centers: seeds = every IVF_CENTROID_STRIDE-th vector, one
-    spherical-kmeans round over the IVF_TRAIN_STRIDE subsample. Means
-    are vec_id-ORDERED 0.0-seeded folds rounded per dim (the
-    cluster_kmeans_portable portability discipline) so the DuckDB oracle
-    reproduces the centroids bit-for-bit; zero-norm centers (possible
-    only if a cluster's sample cancels exactly) are dropped on both
-    sides — cosine is undefined for them."""
-    seeds = (
-        e.filter(F.col("vec_id") % IVF_CENTROID_STRIDE == 0)
-        .select(
-            F.struct(
-                F.col("vec_id").alias("cid"),
-                F.col("emb").alias("ce"),
-                F.col("nrm").alias("cnrm"),
-            ).alias("c")
-        )
-        .agg(F.collect_list("c").alias("cents"))
+    spherical-kmeans round over the IVF_TRAIN_STRIDE subsample, through
+    the centroid kernel (cosine argmin, ordered-fold means) so the
+    DuckDB oracle reproduces the centroids bit-for-bit; zero-norm
+    centers (possible only if a cluster's sample cancels exactly) are
+    dropped on both sides — cosine is undefined for them."""
+    seeds = fold_centroids(
+        e.filter(F.col("vec_id") % IVF_CENTROID_STRIDE == 0).select(
+            F.col("vec_id").alias("cid"), F.col("emb").alias("cent"), F.col("nrm").alias("cnrm")
+        ),
+        "cnrm",
     )
     a1 = (
         e.filter(F.col("vec_id") % IVF_TRAIN_STRIDE == 0)
         .join(F.broadcast(seeds))
-        .withColumn("cluster", -F.expr(_IVF_ARGMAX_NEGCID))
-        .filter(F.col("cluster").isNotNull())
-        .select("cluster", "vec_id", "emb")
-    )
-    means = (
-        a1.select("cluster", "vec_id", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("cluster", "pos")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("vec_id", "val"))),
-                        lambda s: s["val"],
-                    ),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-                / F.count("*"),
-                6,
-            ).alias("m")
-        )
+        .withColumn("cid", F.expr(nearest_centroid_sql("emb", metric="cos"))["cid"])
+        .filter(F.col("cid").isNotNull())
     )
     return (
-        means.groupBy("cluster")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-            ).alias("ce")
+        fold_centroids(
+            centroid_means(a1, ["cid"], "emb", EMB_DIM)
+            .withColumn("cnrm", F.sqrt(dot(F.col("cent"), F.col("cent"))))
+            .filter(F.col("cnrm") > 0),
+            "cnrm",
         )
-        .select(F.col("cluster").alias("cid"), "ce")
-        .withColumn("cnrm", F.sqrt(dot(F.col("ce"), F.col("ce"))))
-        .filter(F.col("cnrm") > 0)
-        .select(F.struct("cid", "ce", "cnrm").alias("c"))
-        .agg(F.collect_list("c").alias("cents"))
         # LAZY lineage cut: the trained set feeds BOTH the corpus
         # assignment and the probe side; without the barrier each
         # broadcast re-runs the whole training subtree (a sample
-        # assignment pass + two aggs). Lazy so building the plan (or
-        # explaining it) costs no job — first consumer materializes the
-        # single row, the second reuses it.
+        # assignment pass + the update agg). Lazy so building the plan
+        # (or explaining it) costs no job — first consumer materializes
+        # the single row, the second reuses it.
         .localCheckpoint(eager=False)
     )
 
 
-def _ivf_top_cells(n: int) -> Column:
-    """``array<long>`` of the n nearest cell ids for the current row
-    (columns ``emb``/``nrm`` vs the folded ``cents``). Same struct-array
-    fold as :data:`_IVF_ARGMAX_NEGCID`, but sorted and sliced instead of
-    argmax'd: array_sort orders (s ASC, negcid ASC), reverse gives
-    (s DESC, negcid DESC) = (s DESC, cid ASC) — bit-identical to the
-    oracle's row_number tie-break — then slice(1, n). A pure map
-    expression: no window, no exchange (pinned in test_plans)."""
-    return F.expr(
-        f"""transform(
-               slice(reverse(array_sort(transform(cents, c -> struct(
-                   round(aggregate(zip_with(emb, c.ce, (p, q) -> p * q),
-                                   cast(0.0 as double), (a, v) -> a + v)
-                         / (nrm * c.cnrm), 6) AS s,
-                   -c.cid AS negcid)))), 1, {n}),
-               x -> -x.negcid)"""
+def _ivf_index(e: DataFrame) -> "tuple[DataFrame, DataFrame]":
+    """``(cents, assigned)`` over the :func:`_cosine_vectors` frame ``e``:
+    the trained cells, and (vec_id, emb, nrm, centroid_id) with every
+    vector MULTI-ASSIGNED to its IVF_NASSIGN nearest cells (IVF spill:
+    index size x NASSIGN buys recall at a fixed probe width — boundary
+    vectors stop vanishing behind the single Voronoi cut; measured
+    +0.36 recall@5 at nprobe=4 vs rn=1 assignment)."""
+    cents = _ivf_trained_cents(e)
+    assigned = e.join(F.broadcast(cents)).select(
+        "vec_id",
+        "emb",
+        "nrm",
+        F.explode(nearest_centroids("emb", IVF_NASSIGN, "cos")).alias("centroid_id"),
+    )
+    return cents, assigned
+
+
+def _ivf_probes(q: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qe, qnrm, centroid_id): each query vector of the
+    :func:`_cosine_vectors` frame ``q`` in its ``nprobe`` nearest cells."""
+    return q.join(F.broadcast(cents)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("qe"),
+        F.col("nrm").alias("qnrm"),
+        F.explode(nearest_centroids("emb", nprobe, "cos")).alias("centroid_id"),
     )
 
 
 def ivf_index_and_probes(
     spark: SparkSession, sf_dir: str, nprobe: int
 ) -> "tuple[DataFrame, DataFrame]":
-    """The IVF candidate-generation machinery, shared by ``ivf_topk``
-    and the IVFPQ composition (``functions/pq.sim_ivfpq_topk``) so the
-    assignment/probe semantics exist ONCE Spark-side, mirroring the
-    shared :data:`IVF_TRAIN_CTES` oracle constant. Returns
-    ``(assigned, probes)``:
-
-    * ``assigned`` — (vec_id, emb, nrm, centroid_id): every corpus
-      vector MULTI-ASSIGNED to its IVF_NASSIGN nearest cells (IVF
-      spill: index size x NASSIGN buys recall at a fixed probe width —
-      boundary vectors stop vanishing behind the single Voronoi cut;
-      measured +0.36 recall@5 at nprobe=4 vs rn=1 assignment).
-    * ``probes`` — (query_id, qe, qnrm, centroid_id): each query's
-      ``nprobe`` nearest cells. Derived from the vec_id < N_QUERIES
-      scan directly — that predicate pushes into the parquet scan, so
-      the FULL-corpus assignment executes once (deriving probes from
-      ``assigned`` would re-run the corpus-wide subtree)."""
-    e = _emb_nonzero(spark, sf_dir).withColumn(
-        "nrm", F.sqrt(dot(F.col("emb"), F.col("emb")))
-    )
-    cents = _ivf_trained_cents(e)
-    assigned = (
-        e.join(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            F.explode(_ivf_top_cells(IVF_NASSIGN)).alias("centroid_id"),
-        )
-    )
-    probes = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(cents))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.explode(_ivf_top_cells(nprobe)).alias("centroid_id"),
-        )
-    )
-    return assigned, probes
+    """The IVF candidate-generation machinery, shared by ``ivf_topk``,
+    the IVFPQ composition (``functions/pq.sim_ivfpq_topk``) and, through
+    :func:`_ivf_index` / :func:`_ivf_probes`, the streaming serving path
+    (``streaming/ann_stream.py``), so the assignment/probe semantics
+    exist ONCE Spark-side, mirroring the shared :data:`IVF_TRAIN_CTES`
+    oracle constant. Returns ``(assigned, probes)``: ``assigned`` as in
+    :func:`_ivf_index`, and ``probes`` — each query's ``nprobe``
+    nearest cells. Probes are derived from the vec_id < N_QUERIES scan
+    directly — that predicate pushes into the parquet scan, so the
+    FULL-corpus assignment executes once (deriving probes from
+    ``assigned`` would re-run the corpus-wide subtree)."""
+    e = _cosine_vectors(load(spark, sf_dir, "embeddings"))
+    cents, assigned = _ivf_index(e)
+    return assigned, _ivf_probes(e.filter(F.col("vec_id") < N_QUERIES), cents, nprobe)
 
 
 def ivf_score_and_rank(assigned: DataFrame, probes: DataFrame) -> DataFrame:
@@ -832,8 +871,8 @@ def embed_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "K-means (Lloyd, k=8, 3 rounds, deterministic lowest-vec_id init): "
         "the 8 centroids fold to ONE broadcast array row and every vector "
-        "picks its cluster inside a single map-side array_min(transform(...)) "
-        "expression over struct(d2, cid) — ties broken by centroid id; "
+        "picks its cluster with the centroid kernel's map-side argmin, "
+        "array_min over struct(d2, cid) — ties broken by centroid id; "
         "re-centering is a posexplode (cluster, dim) mean fed straight from "
         "the assignment (emb rides through the map stage, so there is no "
         "join back to the corpus). Per round: one broadcast map pass + one "
@@ -853,7 +892,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
     # NULL embeddings are unclusterable and must be EXCLUDED, not merely
     # tolerated (fuzz find #22): _emb's valid_dim_or_null keeps them, and
     # a NULL-embedding row among the K lowest vec_ids becomes a NULL
-    # centroid whose struct(d2=NULL, cid) sorts FIRST in array_min's
+    # centroid whose struct(score=NULL, cid) sorts FIRST in array_min's
     # ascending struct order — silently assigning EVERY vector to that
     # cluster with NULL dist. Non-seed NULL rows were emitted with NULL
     # cluster. The fixture has no NULL embeddings, so only the
@@ -864,27 +903,22 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
         .limit(K)
         .select(F.col("vec_id").alias("cid"), F.col("emb").alias("cent"))
     )
-    # Map-side argmin over the folded centroid array: struct(d2, cid)
-    # ordering is the same (distance, centroid-id) lexicographic tie-break
-    # the previous min_by form used, but with zero pair-grain rows — the
-    # corpus is scanned once per round with no exchange on the assignment.
-    best = F.expr(
-        """array_min(transform(cents, c -> struct(
-               aggregate(zip_with(emb, c.cent, (p, q) -> (p - q) * (p - q)),
-                         cast(0.0 as double), (a, x) -> a + x) AS d2,
-               c.cid AS cid)))"""
-    )
+    # The centroid kernel's map-side argmin, on the UNROUNDED squared
+    # distance (this spec is rows-only, so its distances stay exact):
+    # (distance, centroid-id) lexicographic tie-break, zero pair-grain
+    # rows — the corpus is scanned once per round with no exchange on
+    # the assignment.
+    best = F.expr(nearest_centroid_sql("emb", rounded=False))
     assign = None
     for _ in range(ROUNDS):
-        folded = cents.agg(F.collect_list(F.struct("cid", "cent")).alias("cents"))
         assign = (
-            e.join(F.broadcast(folded))
+            e.join(F.broadcast(fold_centroids(cents)))
             .withColumn("b", best)
             .select(
                 "vec_id",
                 "emb",
                 F.col("b.cid").alias("cluster"),
-                F.col("b.d2").alias("d2"),
+                F.col("b.score").alias("d2"),
             )
         )
         # (r12 tried a single cluster-grain agg with 64 avg buffers here —

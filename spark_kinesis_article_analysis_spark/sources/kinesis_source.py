@@ -158,23 +158,22 @@ def _list_shards_parent_first(client, stream: str) -> list[dict]:
     return sorted(shards, key=lambda s: (depth(s), s["ShardId"]))
 
 
-def _drain_shard(client, stream: str, shard_id: str) -> list:
+def _drain_shard(client, stream: str, shard_id: str) -> Iterator[dict]:
     """A shard's currently-available records, from TRIM_HORIZON until
-    the shard reports caught-up or closes."""
+    the shard reports caught-up or closes — yielded page by page, so a
+    reader holds one GetRecords page, not the whole shard."""
     it = client.get_shard_iterator(
         StreamName=stream, ShardId=shard_id, ShardIteratorType="TRIM_HORIZON"
     )["ShardIterator"]
-    out: list = []
     while it:
         resp = client.get_records(ShardIterator=it, Limit=_GET_LIMIT)
         recs = resp.get("Records", [])
-        out.extend(recs)
+        yield from recs
         it = resp.get("NextShardIterator")
         if it is None:
             break  # SHARD_END: the shard was split/merged away
         if not recs and resp.get("MillisBehindLatest", 0) == 0:
             break  # caught up with the tip — bounded snapshot ends here
-    return out
 
 
 def _envelope(rec: dict, stream: str, shard_id: str) -> tuple:

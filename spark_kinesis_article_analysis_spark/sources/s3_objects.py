@@ -493,6 +493,17 @@ def _commit_epoch_manifest(options: dict, schema, messages, epoch: int) -> None:
     )
 
 
+def _delete_task_objects(options: dict, messages) -> None:
+    """Abort of either writer: delete the objects this attempt's tasks
+    wrote (a ``None`` message is a task that sent none)."""
+    client = _s3(options)
+    for m in messages:
+        if m is None:
+            continue
+        for k in m.keys:
+            client.delete_object(Bucket=options["bucket"], Key=k)
+
+
 class S3ManifestWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: "StructType", overwrite: bool) -> None:
         if overwrite:
@@ -535,12 +546,7 @@ class S3ManifestWriter(DataSourceArrowWriter):
         )
 
     def abort(self, messages) -> None:
-        client = _s3(self.options)
-        for m in messages:
-            if m is None:
-                continue
-            for k in m.keys:
-                client.delete_object(Bucket=self.options["bucket"], Key=k)
+        _delete_task_objects(self.options, messages)
 
 
 class S3ManifestStreamWriter(DataSourceStreamArrowWriter):
@@ -568,12 +574,7 @@ class S3ManifestStreamWriter(DataSourceStreamArrowWriter):
         _commit_epoch_manifest(self.options, self.schema, messages, batchId)
 
     def abort(self, messages, batchId: int) -> None:
-        client = _s3(self.options)
-        for m in messages:
-            if m is None:
-                continue
-            for k in m.keys:
-                client.delete_object(Bucket=self.options["bucket"], Key=k)
+        _delete_task_objects(self.options, messages)
 
 
 class _ObjectPartition(InputPartition):

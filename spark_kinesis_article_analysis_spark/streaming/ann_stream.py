@@ -8,12 +8,14 @@ each micro-batch's results must land exactly once. This module is that
 composition, built from the same public pieces:
 
 * index (once, outside the stream): the trained cells + the
-  multi-assigned corpus of ``similarity.ivf_index_and_probes`` —
-  byte-one shared code, so the streamed results are definitionally the
-  batch operator's results.
+  multi-assigned corpus, built by ``similarity._ivf_index`` — the
+  helper ``similarity.ivf_index_and_probes`` builds the batch index
+  with, so the streamed results are definitionally the batch
+  operator's results.
 * per micro-batch (``foreachBatch`` — the batch plan runs inside the
   micro-batch, so the top-k window is legal): queries fold the
-  broadcast centroid array map-side to their IVF_NPROBE cells, join
+  broadcast centroid array map-side to their IVF_NPROBE cells
+  (``similarity._ivf_probes``, the batch probe side), join
   the assigned corpus on cell id, score the rounded cosine, rank.
 * exactly-once: the inner write uses the manifest sink's ``epochId``
   mode — every attempt of micro-batch N commits to the SAME
@@ -39,20 +41,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
 from spark_kinesis_article_analysis_spark.functions.similarity import (
-    EMB_DIM,
-    IVF_NASSIGN,
     IVF_NPROBE,
     IVF_TRAIN_CTES,
     N_QUERIES,
     TOP_K,
-    _ivf_top_cells,
-    _ivf_trained_cents,
-    dot,
+    _cosine_vectors,
+    _ivf_index,
+    _ivf_probes,
     ivf_score_and_rank,
 )
 from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
@@ -73,41 +72,17 @@ def run_ann_stream(
     cloudpickle.register_pickle_by_value(_s3o)
     spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
 
-    # static index (built once; reused by every micro-batch)
-    e = (
-        load(spark, os.path.dirname(emb_path) or ".", "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .filter((F.size("emb") == EMB_DIM) & F.exists("emb", lambda x: x != 0.0))
-        .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
+    # static index (built once; reused by every micro-batch) — the same
+    # helpers ivf_index_and_probes builds the batch index with
+    cents, assigned = _ivf_index(
+        _cosine_vectors(load(spark, os.path.dirname(emb_path) or ".", "embeddings"))
     )
-    cents = _ivf_trained_cents(e)
-    assigned = (
-        e.join(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "emb",
-            "nrm",
-            F.explode(_ivf_top_cells(IVF_NASSIGN)).alias("centroid_id"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    assigned = assigned.localCheckpoint(eager=False)
 
     opts = s3_options(prefix)
 
     def score_batch(batch: DataFrame, batch_id: int) -> None:
-        q = (
-            batch.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-            )
-            .filter((F.size("emb") == EMB_DIM) & F.exists("emb", lambda x: x != 0.0))
-            .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
-        )
-        probes = q.join(F.broadcast(cents)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.explode(_ivf_top_cells(IVF_NPROBE)).alias("centroid_id"),
-        )
+        probes = _ivf_probes(_cosine_vectors(batch), cents, IVF_NPROBE)
         # the SHARED score-and-rank back half — one scoring discipline
         # for batch and stream (self-review r12 killed the local copy)
         topk = ivf_score_and_rank(assigned, probes)

@@ -13,6 +13,17 @@ from tests.conftest import SF_CORRECTNESS
 SPECS = all_specs()
 
 
+def _hash_keys(df) -> list[list[str]]:
+    """Key columns (expression ids stripped) of every hash exchange in
+    the formatted plan, in plan order."""
+    import re
+
+    return [
+        re.findall(r"(\w+)#\d+", keys)
+        for keys in re.findall(r"hashpartitioning\((.*?), \d+\)", inspect.explain_str(df))
+    ]
+
+
 class TestBroadcasts:
     def test_dim_joins_broadcast(self, spark):
         for name in ["join_broadcast_dim", "join_multiway_star", "sim_cosine_topk"]:
@@ -255,6 +266,23 @@ class TestIvfAssignmentMapOnly:
         assert "ExistingRDD" in plan, plan
         assert inspect.count_exchanges(df) <= 3, plan
 
+    def test_training_update_is_one_cluster_grain_agg(self, spark, monkeypatch):
+        """The trained cells' update is ONE hash aggregation keyed by the
+        cell alone. The training's lazy localCheckpoint is made a no-op
+        here so the plan keeps the lineage it would otherwise cut."""
+        from spark_kinesis_article_analysis_spark.functions.similarity import (
+            _emb_nonzero,
+            _ivf_trained_cents,
+            dot,
+        )
+
+        e = _emb_nonzero(spark, SF_CORRECTNESS).withColumn(
+            "nrm", F.sqrt(dot(F.col("emb"), F.col("emb")))
+        )
+        monkeypatch.setattr(type(e), "localCheckpoint", lambda self, eager=True: self)
+        df = _ivf_trained_cents(e)
+        assert _hash_keys(df) == [["cid"]], inspect.explain_str(df)
+
     def test_probe_side_filter_pushes_to_scan(self, spark):
         """The probe subtree re-derives its assignment from the
         vec_id < N_QUERIES scan so the corpus-wide assignment pass runs
@@ -375,12 +403,18 @@ class TestScaleOpsPlanShape:
     def test_kmeans_portable_assignment_is_map_side(self, spark):
         """Both assignment passes fold the broadcast centroid array
         map-side: no pair-grain window, no nested loop; the only
-        corpus-grain exchange is the (cluster, pos) update agg."""
+        corpus-grain exchange is the cluster-grain update agg."""
         df = SPECS["cluster_kmeans_portable"].build(spark, SF_CORRECTNESS)
         plan = inspect.explain_str(df)
         assert "CartesianProduct" not in plan, plan
         assert "Window" not in plan, plan
         assert inspect.has_broadcast_join(df), plan
+
+    def test_kmeans_portable_update_is_one_cluster_grain_agg(self, spark):
+        """The centroid update is ONE hash aggregation keyed by the
+        cluster alone — not a (cluster, pos) agg feeding a cluster agg."""
+        df = SPECS["cluster_kmeans_portable"].build(spark, SF_CORRECTNESS)
+        assert _hash_keys(df) == [["cid"]], inspect.explain_str(df)
 
     def test_pq_encode_is_broadcast_assign(self, spark):
         """PQ encode mirrors the kmeans posture: the M x K codebook folds
