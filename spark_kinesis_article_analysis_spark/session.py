@@ -111,8 +111,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
-    # Python workers skip the per-task re-read of pyspark.zip and the
-    # spark-core jar (worker_daemon); Spark's stock daemon otherwise.
+    # Executor Python workers skip the per-task re-read of pyspark.zip and
+    # the spark-core jar (worker_daemon); Spark's stock daemon otherwise.
+    # Driver-side planner workers always come from the stock daemon; the
+    # sink's writers strip their archives themselves
+    # (sources.s3_objects._drop_archive_importers).
     if _workers_import_package(master, extra_conf):
         b = b.config("spark.python.daemon.module", WORKER_DAEMON)
     for k, v in extra_conf.items():

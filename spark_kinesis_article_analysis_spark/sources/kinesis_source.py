@@ -55,6 +55,7 @@ across a restart.
 
 from __future__ import annotations
 
+import gc
 import sys
 import types
 from collections.abc import Iterator, Sequence
@@ -99,9 +100,13 @@ _CLIENTS = "_skaa_boto3_clients"
 def _shared_client(service: str, options: dict):
     """This process's boto3 ``service`` client for the connector
     ``options`` (lower-cased keys), built on first use: a build costs
-    ~7-11 ms of CPU and a micro-batch needs about ten. The SECRET key
-    goes to the secret slot (the reference passes the access key in
-    both, ``process_articles.py:45,57``)."""
+    ~7-11 ms of CPU, and a process needs one per service and options.
+    A new client's service model lives as long as the process, so it is
+    frozen out of the garbage collector with everything else alive at
+    that point: a reused Python worker runs a full collection after
+    every task, which takes ~30-50 ms with clients loaded and ~12-15 ms
+    without them. The SECRET key goes to the secret slot (the
+    reference passes the access key in both, ``process_articles.py:45,57``)."""
     import boto3
 
     kwargs: dict = {"region_name": options.get("regionname", "us-east-1")}
@@ -117,6 +122,8 @@ def _shared_client(service: str, options: dict):
     if client is None:
         # clients are thread-safe; racing first uses keep the first stored
         client = cache.setdefault(key, boto3.client(service, **kwargs))
+        gc.collect()
+        gc.freeze()
     return client
 
 

@@ -84,12 +84,14 @@ incremental reads, and vacuum.
 
 from __future__ import annotations
 
+import gc
 import io
 import itertools
 import json
 import sys
 import types
 import uuid
+import zipimport
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
@@ -123,9 +125,13 @@ _CLIENTS = "_skaa_boto3_clients"
 def _shared_client(service: str, options: dict):
     """This process's boto3 ``service`` client for the connector
     ``options`` (lower-cased keys), built on first use: a build costs
-    ~7-11 ms of CPU and a micro-batch needs about ten. The SECRET key
-    goes to the secret slot (the reference passes the access key in
-    both, ``process_articles.py:45,57``)."""
+    ~7-11 ms of CPU, and a process needs one per service and options.
+    A new client's service model lives as long as the process, so it is
+    frozen out of the garbage collector with everything else alive at
+    that point: a reused Python worker runs a full collection after
+    every task, which takes ~30-50 ms with clients loaded and ~12-15 ms
+    without them. The SECRET key goes to the secret slot (the
+    reference passes the access key in both, ``process_articles.py:45,57``)."""
     import boto3
 
     kwargs: dict = {"region_name": options.get("regionname", "us-east-1")}
@@ -141,6 +147,8 @@ def _shared_client(service: str, options: dict):
     if client is None:
         # clients are thread-safe; racing first uses keep the first stored
         client = cache.setdefault(key, boto3.client(service, **kwargs))
+        gc.collect()
+        gc.freeze()
     return client
 
 
@@ -148,6 +156,40 @@ def _s3(options: dict):
     """boto3 S3 client from connector-style options, shared per process
     (same cache as the Kinesis source)."""
     return _shared_client("s3", options)
+
+
+def _drop_archive_importers() -> None:
+    """Stop this process's later ``importlib.invalidate_caches()`` calls
+    from re-reading Spark's archives.
+
+    Spark starts the driver-side planner workers that run the writers'
+    ``__init__`` and the batch ``commit`` from its stock ``pyspark.daemon``
+    (``worker_daemon`` reaches executor workers only), with ``pyspark.zip``,
+    the py4j zip and the spark-core jar on ``sys.path``. Every call in such
+    a worker begins with ``invalidate_caches()``, and on Python 3.11 each
+    cached ``zipimporter`` re-reads its archive's whole central directory
+    there: ~220 ms of CPU per call, twice per micro-batch. This drops the
+    ``.jar`` entries from ``sys.path`` (Spark's jars carry no Python) and
+    every cached ``zipimporter`` from ``sys.path_importer_cache``. The zips
+    stay on the path, so loaded modules keep their archive and a later
+    import still finds it, through a new importer that reuses the
+    directory already read. A reused planner worker then reads the
+    archives once, not once per call.
+
+    The call that finds a jar is the worker's first: what it has loaded
+    by then (pyspark, pyarrow, this module) lives as long as the process,
+    so it is frozen out of the full collection the daemon runs after
+    every call. Stdlib only: this module may be pickled by value to
+    workers that cannot import the package."""
+    kept = [e for e in sys.path if not str(e).endswith(".jar")]
+    had_jar = len(kept) < len(sys.path)
+    sys.path[:] = kept
+    for key, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(key, None)
+    if had_jar:
+        gc.collect()
+        gc.freeze()
 
 
 def _norm(options: dict) -> dict:
@@ -513,6 +555,7 @@ class S3ManifestWriter(DataSourceArrowWriter):
             # sink stays append-only like the parquet streaming sink it
             # mirrors.
             raise ValueError("s3_parquet_manifest is append-only; use mode('append')")
+        _drop_archive_importers()
         self.options = _norm(options)
         self.schema = schema
 
@@ -520,6 +563,7 @@ class S3ManifestWriter(DataSourceArrowWriter):
         return _write_parquet_object(self.options, self.schema, iterator)
 
     def commit(self, messages) -> None:
+        _drop_archive_importers()
         # foreachBatch exactly-once mode: with an epochId option every
         # attempt of the same micro-batch commits to the SAME epoch key
         # (idempotent overwrite) instead of appending a new manifest —
@@ -561,6 +605,7 @@ class S3ManifestStreamWriter(DataSourceStreamArrowWriter):
     85-91) with object-store-correct atomicity."""
 
     def __init__(self, options: dict, schema: "StructType") -> None:
+        _drop_archive_importers()
         self.options = _norm(options)
         self.schema = schema
 

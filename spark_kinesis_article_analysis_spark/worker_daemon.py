@@ -25,6 +25,16 @@ Then it runs Spark's stock daemon. Archives added per task (``--py-files``,
 ``addPyFile``) are untouched: they join the path after the daemon starts.
 Nothing from ``pyspark`` may be imported before the strip, or its
 modules would keep loading from the zip.
+
+The daemon reaches executor Python workers only: the ones that run a
+query's Python tasks (UDFs, data source reads and writes). Spark starts
+the driver-side planner workers (data source planning, the writers'
+``__init__``, the streaming sink commit) from its own ``pyspark.daemon``
+whatever ``spark.python.daemon.module`` says, so they are not reached.
+Those calls import pyspark before any package code runs, so their
+archives cannot be stripped up front; the sink's writers drop the jar
+and the cached zip importers there instead
+(``sources.s3_objects._drop_archive_importers``).
 """
 
 from __future__ import annotations

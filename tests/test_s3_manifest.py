@@ -401,6 +401,119 @@ class TestStreamingManifestSink:
         epochs = [b["epoch"] for _, b in manifests]
         assert epochs == sorted(epochs) and len(set(epochs)) == len(epochs)
 
+    def test_reused_commit_worker_holds_no_archive_importers(self, spark, tmp_path):
+        """The epoch commit runs in a driver-side planner worker that Spark
+        forks from its stock daemon, with pyspark.zip and the spark-core
+        jar on the path; each call there begins with invalidate_caches(),
+        which re-reads every cached zipimporter's archive. Once a reused
+        worker has run one commit, the next finds no jar on sys.path and
+        no cached zipimporter — and every row still lands exactly once."""
+        import json as _json
+
+        from pyspark import cloudpickle
+
+        from spark_kinesis_article_analysis_spark.sources import s3_objects as _m
+
+        probe = tmp_path / "probe.jsonl"
+
+        class ProbedWriter(_m.S3ManifestStreamWriter):
+            def commit(self, messages, batchId: int) -> None:
+                import json
+                import os
+                import sys
+                import zipimport
+
+                seen = {
+                    "pid": os.getpid(),
+                    "zips": sum(
+                        isinstance(f, zipimport.zipimporter)
+                        for f in list(sys.path_importer_cache.values())
+                    ),
+                    "jar": any(str(e).endswith(".jar") for e in sys.path),
+                }
+                with open(self.options["probefile"], "a") as f:
+                    f.write(json.dumps(seen) + "\n")
+                super().commit(messages, batchId)
+
+        class ProbedSink(_m.S3ParquetManifestDataSource):
+            @classmethod
+            def name(cls) -> str:
+                return "s3_parquet_manifest_probed"
+
+            def streamWriter(self, schema, overwrite):
+                return ProbedWriter(self.options, schema)
+
+        cloudpickle.register_pickle_by_value(_m)
+        spark.dataSource.register(ProbedSink)
+        src = tmp_path / "src"
+        src.mkdir()
+        for part in range(4):
+            (src / f"{part}.json").write_text(
+                "\n".join(
+                    _json.dumps({"k": part * 10 + i, "v": f"p{part}"}) for i in range(5)
+                )
+            )
+        opts = _fresh()
+        w = (
+            spark.readStream.schema("k long, v string")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+            .writeStream.format("s3_parquet_manifest_probed")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .option("probeFile", str(probe))
+        )
+        for k, v in opts.items():
+            w = w.option(k, v)
+        w.trigger(availableNow=True).start().awaitTermination(180)
+
+        rows = _read_rows(opts)
+        assert sorted(rows) == sorted(
+            (part * 10 + i, f"p{part}") for part in range(4) for i in range(5)
+        )
+        commits = [_json.loads(line) for line in probe.read_text().splitlines()]
+        assert len(commits) >= 3
+        later = [c for i, c in enumerate(commits) if any(p["pid"] == c["pid"] for p in commits[:i])]
+        assert later, f"no commit worker was reused: {commits}"
+        assert all(c["zips"] == 0 and not c["jar"] for c in later), commits
+
+    def test_archive_strip_keeps_zips_and_freezes_once(self, tmp_path):
+        """The writers' archive strip drops jar entries from sys.path and
+        every cached zipimporter, keeps zips importable, and freezes the
+        process's loaded objects on the call that found a jar only."""
+        import subprocess
+        import sys
+        from pathlib import Path
+
+        script = (
+            "import gc, sys, zipfile, zipimport\n"
+            "repo, tmp = sys.argv[1:]\n"
+            "sys.path.insert(0, repo)\n"
+            "from spark_kinesis_article_analysis_spark.sources.s3_objects import (\n"
+            "    _drop_archive_importers)\n"
+            "for name, mods in (('lib.zip', ('zmod_a', 'zmod_b')), ('core.jar', ('jmod',))):\n"
+            "    with zipfile.ZipFile(f'{tmp}/{name}', 'w') as z:\n"
+            "        for m in mods:\n"
+            "            z.writestr(f'{m}.py', 'X = 1\\n')\n"
+            "sys.path[:0] = [f'{tmp}/lib.zip', f'{tmp}/core.jar']\n"
+            "import zmod_a, jmod\n"
+            "_drop_archive_importers()\n"
+            "first = gc.get_freeze_count()\n"
+            "cached = [f for f in sys.path_importer_cache.values()\n"
+            "          if isinstance(f, zipimport.zipimporter)]\n"
+            "assert not cached and f'{tmp}/core.jar' not in sys.path\n"
+            "import zmod_b\n"
+            "_drop_archive_importers()\n"
+            "print(first, gc.get_freeze_count())\n"
+        )
+        repo = str(Path(__file__).resolve().parent.parent)
+        done = subprocess.run(
+            [sys.executable, "-c", script, repo, str(tmp_path)],
+            capture_output=True, text=True, timeout=120,
+        )
+        assert done.returncode == 0, done.stderr[-4000:]
+        first, second = map(int, done.stdout.split())
+        assert first > 0 and second == first
+
     def test_recommitted_epoch_overwrites_not_appends(self):
         """The fence itself: committing the same epoch twice (a replayed
         microbatch after driver failure) leaves ONE manifest whose
@@ -530,6 +643,34 @@ class TestClientReuse:
             sys.setswitchinterval(interval)
         assert not any(t.is_alive() for t in threads)
         assert len(got) == 8 and len({id(c) for c in got}) == 1
+
+    def test_new_client_is_frozen_out_of_gc(self):
+        """A client's service model lives as long as its process, so a
+        new client is moved out of the collector's generations: a reused
+        worker's gc.collect() after every task no longer walks it."""
+        import subprocess
+        import sys
+        from pathlib import Path
+
+        script = (
+            "import gc, sys\n"
+            "sys.path.insert(0, sys.argv[1])\n"
+            "import boto3\n"
+            "from spark_kinesis_article_analysis_spark.sources.s3_objects import _s3\n"
+            "gc.collect()\n"
+            "before = len(gc.get_objects())\n"
+            "_s3({'regionname': 'us-east-1', 'endpointurl': 'http://127.0.0.1:9',\n"
+            "     'awsaccesskeyid': 'x', 'awssecretkey': 'x'})\n"
+            "print(gc.get_freeze_count(), before, len(gc.get_objects()))\n"
+        )
+        repo = str(Path(__file__).resolve().parent.parent)
+        done = subprocess.run(
+            [sys.executable, "-c", script, repo], capture_output=True, text=True, timeout=120
+        )
+        assert done.returncode == 0, done.stderr[-4000:]
+        frozen, before, after = map(int, done.stdout.split())
+        assert frozen > 0
+        assert after < before
 
     def test_shared_client_copies_identical(self):
         """Each source carries its own copy of the cache helper (either
