@@ -41,7 +41,7 @@ from spark_kinesis_article_analysis_spark.operators.skew import salted_join, two
 from spark_kinesis_article_analysis_spark.registry import register
 from spark_kinesis_article_analysis_spark.functions.similarity import (
     VALID_OR_NULL_SQL,
-    valid_dim_or_null,
+    valid_vector,
 )
 
 #: Segment-dedup geometry: words per segment. 3 gives a realistic
@@ -228,7 +228,7 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All arithmetic is Catalyst higher-order expressions over doubles
     (float→double widening is exact, fold order matches the oracle's
     list_transform/list_sum left-to-right order); zero shuffles."""
-    emb = load(spark, sf_dir, "embeddings").filter(valid_dim_or_null())
+    emb = load(spark, sf_dir, "embeddings").filter(valid_vector(or_null=True))
     e = F.transform("embedding", lambda x: x.cast("double"))
     b = emb.select("vec_id", e.alias("e"))
     scale = (
@@ -307,7 +307,7 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same plan shape as sim_cosine_topk (broadcast bounded query set,
     JVM higher-order dot, row_number top-k); the quantized form is what
     you'd actually ship to 100 TB ANN serving."""
-    emb = load(spark, sf_dir, "embeddings").filter(valid_dim_or_null())
+    emb = load(spark, sf_dir, "embeddings").filter(valid_vector(or_null=True))
     e = F.transform("embedding", lambda x: x.cast("double"))
     b = emb.select("vec_id", e.alias("e"))
     scale = (

@@ -33,7 +33,7 @@ from spark_kinesis_article_analysis_spark.catalog import load
 from spark_kinesis_article_analysis_spark.functions.dedup import (
     MAX_SHINGLE_DF,
     _SHINGLE_SQL,
-    _shingles,
+    shared_shingle_counts,
 )
 from spark_kinesis_article_analysis_spark.registry import register
 
@@ -78,58 +78,14 @@ WHERE inter / sa.sz >= {CONTAINMENT_MIN} OR inter / sb.sz >= {CONTAINMENT_MIN}
     ),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    sh = _shingles(d, 3)
-    groups = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") <= MAX_SHINGLE_DF)
-        # consumed twice (sizes + pairs), df-capped. r12: persist(), the
-        # dedup_ngram_jaccard treatment, replacing the r11 EAGER
-        # localCheckpoint — eager ran the whole scan->shingle->index
-        # subtree as a separate pre-materialization job at build time,
-        # and a checkpoint's ExistingRDD also hides size stats from the
-        # planner (the downstream sizes joins lost their broadcast).
-        # persist keeps one corpus pass AND the InMemoryRelation stats:
-        # measured 3.9s (eager ckpt) / 2.9s (lazy ckpt) / 2.0s (persist)
-        # at sf0.1. The known persist trade (pin lives until LRU/clear)
-        # is the one jaccard already accepts; bench releases per query.
-        .persist()
-    )
-    sizes = (
-        groups.select(F.explode("ids").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("sz"))
-    )
-    pair_list = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    pairs = (
-        groups.filter(F.size("ids") > 1)
-        .select(F.explode(pair_list).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
+    counts = shared_shingle_counts(load(spark, sf_dir, "documents"))
     ca = F.col("inter") / F.col("sa.sz")
     cb = F.col("inter") / F.col("sb.sz")
-    return (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter((ca >= CONTAINMENT_MIN) | (cb >= CONTAINMENT_MIN))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(ca, 6).alias("containment_a"),
-            F.round(cb, 6).alias("containment_b"),
-        )
+    return counts.filter((ca >= CONTAINMENT_MIN) | (cb >= CONTAINMENT_MIN)).select(
+        "doc_a",
+        "doc_b",
+        F.round(ca, 6).alias("containment_a"),
+        F.round(cb, 6).alias("containment_b"),
     )
 
 

@@ -31,7 +31,7 @@ loops). Scale posture per operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
@@ -147,50 +147,67 @@ WHERE inter / (sa.sz + sb.sz - inter) >= {VERIFY_JACCARD_MIN}
     ),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    sh = _shingles(d, 3)
-    # ONE shuffle on shingle builds the inverted index; the df cap is a
-    # free filter on posting-list size, and pairs expand intra-group with
-    # the same higher-order combination expression the LSH family uses —
-    # no shingle self-join (which would scan+explode the corpus twice AND
-    # shuffle both sides). Pair expansion per shingle is bounded by
-    # MAX_SHINGLE_DF²/2 elements, so no group can straggle.
+    counts = shared_shingle_counts(load(spark, sf_dir, "documents"))
+    jac = F.col("inter") / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
+    return counts.filter(jac >= VERIFY_JACCARD_MIN).select(
+        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
+    )
+
+
+def pair_list(ids: str) -> Column:
+    """Every (doc_a, doc_b) struct with doc_a before doc_b in the sorted
+    array column ``ids`` — intra-group pair expansion as one higher-order
+    expression, so no group needs a self-join."""
+    return F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(F.col(ids), i + 2, F.size(ids)),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+            ),
+        )
+    )
+
+
+def shared_shingle_counts(d: DataFrame) -> DataFrame:
+    """documents -> (doc_a, doc_b, inter) joined to the per-doc shingle
+    counts ``sa.sz`` / ``sb.sz``, over the df-capped shingle universe:
+    the input of both ``dedup_ngram_jaccard`` and ``dedup_containment``.
+
+    ONE shuffle on shingle builds the inverted index; the df cap is a
+    free filter on posting-list size, and pairs expand intra-group with
+    ``pair_list`` — no shingle self-join (which would scan+explode the
+    corpus twice AND shuffle both sides). Pair expansion per shingle is
+    bounded by MAX_SHINGLE_DF²/2 elements, so no group can straggle."""
     groups = (
-        sh.groupBy("shingle")
+        _shingles(d, 3)
+        .groupBy("shingle")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") <= MAX_SHINGLE_DF)
-        .persist()  # consumed twice (sizes + pairs); posting lists are
-        # df-capped so the index is far smaller than the corpus scan +
-        # explode it replaces
+        # consumed twice (sizes + pairs), df-capped, so far smaller than
+        # the corpus scan + explode it replaces. persist, not an eager
+        # localCheckpoint: eager ran the scan->shingle->index subtree as a
+        # separate job at build time, and a checkpoint's ExistingRDD hides
+        # size stats from the planner (the sizes joins lost their
+        # broadcast); measured 3.9 s (eager ckpt) / 2.9 s (lazy ckpt) /
+        # 2.0 s (persist) for dedup_containment at sf0.1.
+        .persist()
     )
     sizes = (
         groups.select(F.explode("ids").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count("*").alias("sz"))
     )
-    pair_list = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     pairs = (
         groups.filter(F.size("ids") > 1)
-        .select(F.explode(pair_list).alias("p"))
+        .select(F.explode(pair_list("ids")).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .agg(F.count("*").alias("inter"))
     )
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
-    jac = F.col("inter") / (F.col("sa.sz") + F.col("sb.sz") - F.col("inter"))
-    return (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(jac >= VERIFY_JACCARD_MIN)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+    return pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id")).join(
+        sb, F.col("doc_b") == F.col("sb.doc_id")
     )
 
 
@@ -313,18 +330,8 @@ def _minhash_lsh_candidates(sh: DataFrame, minhash_aggs: list, band_key_fn):
         .agg(F.sort_array(F.collect_set("doc_id")).alias("docs"))
         .filter(F.size("docs") > 1)
     )
-    pair_list = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice(F.col("docs"), i + 2, F.size("docs")), lambda y: F.struct(
-                    x.alias("doc_a"), y.alias("doc_b")
-                )
-            ),
-        )
-    )
     return (
-        buckets.select(F.explode(pair_list).alias("p"))
+        buckets.select(F.explode(pair_list("docs")).alias("p"))
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
         .persist()  # reused 3x (both id sides + final join); tiny by LSH construction
@@ -549,8 +556,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _embedding_cosine_pairs(load(spark, sf_dir, "embeddings"))
 
 
-def _cosine_block_assignments(e: DataFrame) -> DataFrame:
-    """(vec_id, table_id, bucket, sub) block ids for ``e`` (vec_id, emb).
+def _cosine_block_assignments(e: DataFrame, bits: int = COSINE_LSH_BITS) -> DataFrame:
+    """(vec_id, ..., table_id, bucket, sub) block ids for ``e`` (vec_id,
+    emb, ...): COSINE_LSH_TABLES sign-plane tables of ``bits`` bits (8
+    for dedup_embedding_cosine, nsw.NSW_BITS for the NSW graph).
 
     Every (table_id, bucket, sub) block holds <= COSINE_BLOCK_CAP rows BY
     CONSTRUCTION: md5-ordered row_number within (table, bucket), integer-
@@ -566,7 +575,7 @@ def _cosine_block_assignments(e: DataFrame) -> DataFrame:
     tables = [
         F.struct(
             F.lit(t).alias("table_id"),
-            portable_bucket(t, COSINE_LSH_BITS).alias("bucket"),
+            portable_bucket(t, bits).alias("bucket"),
         )
         for t in range(COSINE_LSH_TABLES)
     ]
@@ -586,39 +595,18 @@ def _cosine_block_assignments(e: DataFrame) -> DataFrame:
     )
 
 
-def _embedding_cosine_pairs(emb_df: DataFrame) -> DataFrame:
-    from spark_kinesis_article_analysis_spark.functions.similarity import dot
+def scored_block_pairs(ck: DataFrame, min_cosine: "float | None" = None) -> DataFrame:
+    """(vec_a, vec_b, cosine) for every intra-block pair of ``ck`` (block
+    ids over vec_id, emb, nrm), vec_a < vec_b, cosine rounded to 6 places
+    and, with ``min_cosine``, thresholded inside the expression.
 
-    # Norms are per-VECTOR quantities: fold them once at vector grain
-    # (N rows) before the pair join, not inside the pair-grain cosine
-    # (candidate-grain rows — and the >= threshold filter pushdown would
-    # inline and re-evaluate every fold a second time). Same fold order,
-    # so the value is bit-identical to the inline form
-    # (tests/test_rows_only.py pins that equality).
-    # Zero-norm vectors are excluded BEFORE the norm fold (exists()
-    # short-circuits; a filter on nrm itself would re-inline the fold):
-    # cosine is undefined for them and one all-zero embedding would
-    # otherwise kill the job under ANSI mode. Oracle twin: NONZERO_SQL.
-    from spark_kinesis_article_analysis_spark.functions.similarity import EMB_DIM
-
-    e = (
-        emb_df.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        # schema-validity + zero-norm guard, mirroring NONZERO_SQL: a
-        # wrong-dim row would zip_with-truncate into a garbage cosine
-        # here and crash DuckDB's list_cosine_similarity in the oracle
-        .filter((F.size("emb") == EMB_DIM) & F.exists("emb", lambda x: x != 0.0))
-        .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
-    )
-
-    ck = _cosine_block_assignments(e)
-    # Intra-chunk pair expansion via higher-order combinations (the
-    # _minhash_lsh_pipeline pattern — a self-join would re-derive the
-    # bucket assignment once per side). The full (vec_id, emb, nrm)
-    # struct rides into the chunk so the cosine is scored MAP-SIDE
-    # inside the chunk row — no join back to the vector table at all
-    # (the join form cost two extra pair-grain exchanges). collect_list
-    # is bounded by the cap (<= CAP structs, ~CAP * dim * 8 bytes), so
-    # no group exceeds COSINE_BLOCK_CAP rows by construction.
+    Intra-chunk pair expansion via higher-order combinations (the
+    _minhash_lsh_pipeline pattern — a self-join would re-derive the
+    bucket assignment once per side). The full (vec_id, emb, nrm) struct
+    rides into the chunk so the cosine is scored MAP-SIDE inside the
+    chunk row — no join back to the vector table at all (the join form
+    cost two extra pair-grain exchanges). collect_list is bounded by the
+    cap (<= CAP structs, ~CAP * dim * 8 bytes)."""
     chunks = (
         ck.groupBy("table_id", "bucket", "sub")
         .agg(F.sort_array(F.collect_list(F.struct("vec_id", "emb", "nrm"))).alias("vs"))
@@ -630,9 +618,7 @@ def _embedding_cosine_pairs(emb_df: DataFrame) -> DataFrame:
     # rounded THEN thresholded (matching the oracle's WHERE round(...)),
     # filtered inside the expression so only survivors are exploded and
     # deduplicated.
-    pair_list = F.expr(
-        """filter(
-        flatten(transform(vs, (x, i) ->
+    pairs = """flatten(transform(vs, (x, i) ->
             transform(slice(vs, i + 2, size(vs)), y ->
                 named_struct(
                     'vec_a', x.vec_id,
@@ -640,17 +626,41 @@ def _embedding_cosine_pairs(emb_df: DataFrame) -> DataFrame:
                     'cosine', round(
                         aggregate(zip_with(x.emb, y.emb, (p, q) -> p * q),
                                   cast(0.0 as double), (a, v) -> a + v)
-                        / (x.nrm * y.nrm), 6))))),
-        s -> s.cosine >= 0.2)"""
-    )
+                        / (x.nrm * y.nrm), 6)))))"""
+    if min_cosine is not None:
+        pairs = f"filter({pairs}, s -> s.cosine >= {min_cosine})"
     # distinct AFTER scoring: a pair can surface in both tables' chunks;
     # its cosine is the identical double both times, so the struct rows
     # collapse exactly.
     return (
-        chunks.select(F.explode(pair_list).alias("p"))
+        chunks.select(F.explode(F.expr(pairs)).alias("p"))
         .select("p.vec_a", "p.vec_b", "p.cosine")
         .distinct()
     )
+
+
+def _embedding_cosine_pairs(emb_df: DataFrame) -> DataFrame:
+    from spark_kinesis_article_analysis_spark.functions.similarity import dot, valid_vector
+
+    # Norms are per-VECTOR quantities: fold them once at vector grain
+    # (N rows) before the pair join, not inside the pair-grain cosine
+    # (candidate-grain rows — and the >= threshold filter pushdown would
+    # inline and re-evaluate every fold a second time). Same fold order,
+    # so the value is bit-identical to the inline form
+    # (tests/test_rows_only.py pins that equality).
+    # Zero-norm vectors are excluded BEFORE the norm fold (exists()
+    # short-circuits; a filter on nrm itself would re-inline the fold):
+    # cosine is undefined for them and one all-zero embedding would
+    # otherwise kill the job under ANSI mode. Oracle twin: NONZERO_SQL.
+    e = (
+        emb_df.select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
+        # schema-validity + zero-norm guard, mirroring NONZERO_SQL: a
+        # wrong-dim row would zip_with-truncate into a garbage cosine
+        # here and crash DuckDB's list_cosine_similarity in the oracle
+        .filter(valid_vector("emb") & F.exists("emb", lambda x: x != 0.0))
+        .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
+    )
+    return scored_block_pairs(_cosine_block_assignments(e), min_cosine=0.2)
 
 
 @register(

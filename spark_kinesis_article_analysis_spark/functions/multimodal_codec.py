@@ -51,6 +51,7 @@ from __future__ import annotations
 import struct
 from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -83,6 +84,35 @@ _HEIGHT = "3 + abs(doc_id % 5)"
 _R_BYTE = "abs(doc_id % 256)"
 _G_BYTE = "abs(coalesce(n_chars, 0) % 256)"
 _B_BYTE = "abs((doc_id + coalesce(n_chars, 0)) % 256)"
+#: Per-doc PNG filter phase: scanline y of doc k uses filter (k + y) % 5,
+#: so every payload taller than 4 rows exercises ALL five RFC 2083 filter
+#: types (None/Sub/Up/Average/Paeth) and the decoder's distinct-filter
+#: count has the closed form least(height, 5).
+_PNG_FILTER_BASE = "abs(doc_id % 5)"
+#: AVI frame count per document (bounded 2..5 — the wrap analysis in the
+#: oracle relies on r_byte + width-1 + 7*(n_frames-1) < 512).
+_AVI_N_FRAMES = "2 + abs(doc_id % 4)"
+
+#: Every codec's parameters: the corrupt flag and the raster geometry /
+#: channel bytes. A codec names the extras it also needs.
+_PARAMS = {
+    "corrupt": _CORRUPT,
+    "width": _WIDTH,
+    "height": _HEIGHT,
+    "r_byte": _R_BYTE,
+    "g_byte": _G_BYTE,
+    "b_byte": _B_BYTE,
+}
+_EXTRA_PARAMS = {
+    "mime": _MIME,
+    "rate": _RATE,
+    "n_samples": _N_SAMPLES,
+    "amp": _AMP,
+    "f_base": _PNG_FILTER_BASE,
+    "n_frames": _AVI_N_FRAMES,
+}
+#: The WAV/PPM codec's extras (``multimodal_codec_decode`` and ``_frames``).
+WAV_EXTRAS = ("mime", "rate", "n_samples", "amp")
 
 #: Frame geometry for the windowed-RMS operator: 16-bit mono samples
 #: per frame. n_samples ∈ [64, 254] → 2..8 frames per payload.
@@ -103,20 +133,148 @@ FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_samples int, frame_rms doubl
 _MAX_FRAME_IDX = (64 + 190 + FRAME_SAMPLES - 1) // FRAME_SAMPLES - 1
 
 
-def _codec_params(docs: DataFrame) -> DataFrame:
-    """documents → one row of JVM-computed synthesis parameters per doc."""
-    return docs.select(
-        "doc_id",
-        F.expr(_MIME).alias("mime"),
-        F.expr(_CORRUPT).alias("corrupt"),
-        F.expr(_RATE).cast("int").alias("rate"),
-        F.expr(_N_SAMPLES).cast("int").alias("n_samples"),
-        F.expr(_AMP).cast("int").alias("amp"),
-        F.expr(_WIDTH).cast("int").alias("width"),
-        F.expr(_HEIGHT).cast("int").alias("height"),
-        F.expr(_R_BYTE).cast("int").alias("r_byte"),
-        F.expr(_G_BYTE).cast("int").alias("g_byte"),
-        F.expr(_B_BYTE).cast("int").alias("b_byte"),
+# ---------------------------------------------------------------------------
+# Codec skeleton — one parameter projection, one synthesis UDF, one decode
+# loop. A codec supplies ``pack(params) -> bytes`` and
+# ``rows_of(payload, *kept) -> list[dict]``; everything else is here.
+#
+# Both Python bodies are closures returned by a factory, and import pandas
+# inside it, so cloudpickle ships them to the workers BY VALUE: a nested
+# function has no importable name, and its worker-local imports resolve in
+# the worker's own interpreter.
+# ---------------------------------------------------------------------------
+
+
+def codec_params(docs: DataFrame, extras: "tuple[str, ...]" = ()) -> DataFrame:
+    """documents → (doc_id, p): ``p`` is one struct of JVM-computed
+    synthesis parameters — doc_id, the shared ``_PARAMS`` and the named
+    ``extras`` — so Python never derives a value the oracle models."""
+    frags = {**_PARAMS, **{k: _EXTRA_PARAMS[k] for k in extras}}
+    fields = [
+        (F.expr(sql) if k in ("corrupt", "mime") else F.expr(sql).cast("int")).alias(k)
+        for k, sql in frags.items()
+    ]
+    return docs.select("doc_id", F.struct("doc_id", *fields).alias("p"))
+
+
+def _synthesizer(
+    pack: "Callable[[dict], bytes]", magic_len: int
+) -> "Callable[[pd.DataFrame], pd.Series]":
+    """pandas_udf(BINARY) body around ``pack``: a NULL-keyed row gets the
+    4 junk bytes ``b"DEAD"``; a corrupt row gets the full payload with its
+    first ``magic_len`` bytes overwritten — same length, broken magic."""
+    import pandas as pd  # noqa: F811 — worker-local import
+
+    def synth(p: pd.DataFrame) -> pd.Series:
+        out: list[bytes] = []
+        for params in p.to_dict("records"):
+            if pd.isna(params["doc_id"]):
+                out.append(b"DEAD")
+                continue
+            payload = pack(params)
+            if params["corrupt"]:
+                payload = b"X" * magic_len + payload[magic_len:]
+            out.append(payload)
+        return pd.Series(out)
+
+    return synth
+
+
+def synthesize(
+    docs: DataFrame,
+    pack: "Callable[[dict], bytes]",
+    magic_len: int,
+    extras: "tuple[str, ...]" = (),
+    keep: "tuple[str, ...]" = (),
+) -> DataFrame:
+    """documents → (doc_id, *keep, payload binary): the real-bytes
+    multimodal column. One Arrow-batched projection, no shuffle; ``keep``
+    names parameters that ride along to the decoder."""
+    synth_udf = F.pandas_udf(_synthesizer(pack, magic_len), "binary")
+    return codec_params(docs, extras).select(
+        "doc_id", *[F.col("p")[k].alias(k) for k in keep], synth_udf("p").alias("payload")
+    )
+
+
+#: pandas nullable dtype per DDL type: None must reach Arrow as NULL (a
+#: plain float64 column would smuggle it through as NaN, which is NOT
+#: SQL NULL on the Spark side).
+_NULLABLE_DTYPES = {
+    "bigint": "Int64",
+    "int": "Int32",
+    "double": "Float64",
+    "boolean": "boolean",
+    "string": "string",
+}
+
+
+def _decoder(
+    rows_of: "Callable[..., list[dict]]", schema: str, kept: "list[str]"
+) -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
+    """mapInPandas body around ``rows_of``: each payload yields the rows
+    ``rows_of(payload_bytes, *kept_values)`` returns, each stamped with
+    doc_id and the kept columns. A key a row lacks is NULL, ``[]`` drops
+    the document, and a lone ``{"valid": False}`` is the error row — one
+    bad object must never kill a 100 TB scan."""
+    import pandas as pd  # noqa: F811 — worker-local import
+
+    cols = [(f.split()[0], _NULLABLE_DTYPES[f.split()[1]]) for f in schema.split(", ")]
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[dict] = []
+            for doc_id, payload, *vals in zip(
+                pdf["doc_id"], pdf["payload"], *(pdf[k] for k in kept)
+            ):
+                b = bytes(payload) if payload is not None else b""
+                stamp = {"doc_id": doc_id, **dict(zip(kept, vals))}
+                rows.extend({**stamp, **r} for r in rows_of(b, *vals))
+            yield pd.DataFrame(
+                {n: pd.array([r.get(n) for r in rows], dtype=dt) for n, dt in cols}
+            )
+
+    return decode
+
+
+def decode_payloads(
+    payloads: DataFrame, rows_of: "Callable[..., list[dict]]", schema: str
+) -> DataFrame:
+    """(doc_id, *kept, payload) → ``schema`` rows, one mapInPandas. Every
+    column besides doc_id and payload is passed to ``rows_of``."""
+    kept = [c for c in payloads.columns if c not in ("doc_id", "payload")]
+    return payloads.mapInPandas(_decoder(rows_of, schema, kept), schema=schema)
+
+
+def _mean(a: "object") -> float:
+    return float(np.asarray(a, dtype=np.float64).mean())
+
+
+def _rms(x: "object") -> float:
+    x = np.asarray(x, dtype=np.float64)
+    return float(np.sqrt((x**2).mean())) if len(x) else 0.0
+
+
+def _rgb(w: int, h: int, r: "object", g: "object", b: "object") -> "object":
+    """h x w x 3 uint8 raster; each channel broadcasts (a scalar, a
+    length-w row ramp, or an h x 1 column ramp)."""
+    px = np.empty((h, w, 3), dtype=np.uint8)
+    px[:, :, 0], px[:, :, 1], px[:, :, 2] = r, g, b
+    return px
+
+
+def gradient_raster(p: dict) -> "object":
+    """The PNG/BMP two-axis gradient — R ramps along x as (r_byte+x)%256,
+    G constant, B ramps along y as (b_byte+y)%256 — so the horizontal
+    (Sub/Paeth left) and vertical (Up/Paeth above) predictors all see
+    non-constant input and channel means keep closed forms the oracle
+    can state."""
+    w, h = int(p["width"]), int(p["height"])
+    return _rgb(
+        w,
+        h,
+        (int(p["r_byte"]) + np.arange(w, dtype=np.int64)) % 256,
+        int(p["g_byte"]),
+        ((int(p["b_byte"]) + np.arange(h, dtype=np.int64)) % 256)[:, None],
     )
 
 
@@ -221,135 +379,30 @@ def decode_ppm_p6(payload: bytes) -> "tuple[int, int, object] | None":
     return width, height, np.frombuffer(raster, dtype=np.uint8).reshape(height, width, 3)
 
 
-def make_synthesizer() -> "Callable[..., pd.Series]":
-    """pandas_udf(BINARY) body: packs REAL format bytes from the
-    JVM-computed parameter columns. Pure packing — every numeric
-    parameter arrives precomputed so Python arithmetic (whose ``%``
-    differs from SQL's on negatives) can never define a value the
-    oracle models. Closure-returned so cloudpickle ships it by value
-    (workers never import this repo). Corrupt rows get the full valid
-    payload with the 4 magic bytes smashed — same length, broken
-    header; NULL-keyed rows (all params NULL) get 4 junk bytes."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def synth(
-        mime: pd.Series,
-        corrupt: pd.Series,
-        rate: pd.Series,
-        n_samples: pd.Series,
-        amp: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        r_byte: pd.Series,
-        g_byte: pd.Series,
-        b_byte: pd.Series,
-    ) -> pd.Series:
-        out: list[bytes] = []
-        for i in range(len(mime)):
-            m = mime.iloc[i]
-            if m is None or pd.isna(m):
-                out.append(b"DEAD")
-                continue
-            if m == "audio/wav":
-                n, a = int(n_samples.iloc[i]), int(amp.iloc[i])
-                wave = np.full(n, a, dtype="<i2")
-                wave[1::2] = -a  # ±amp square wave → RMS == amp exactly
-                payload = encode_wav_pcm16(int(rate.iloc[i]), wave)
-            else:
-                w, h = int(width.iloc[i]), int(height.iloc[i])
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = int(r_byte.iloc[i])
-                px[:, :, 1] = int(g_byte.iloc[i])
-                px[:, :, 2] = int(b_byte.iloc[i])
-                payload = encode_ppm_p6(w, h, px.tobytes())
-            if bool(corrupt.iloc[i]):
-                payload = b"DEAD" + payload[4:]
-            out.append(payload)
-        return pd.Series(out)
-
-    return synth
+def _pack_wav_ppm(p: dict) -> bytes:
+    """WAV for even keys (a ±amp square wave, so RMS == amp exactly),
+    PPM for odd keys (constant channels)."""
+    if p["mime"] == "audio/wav":
+        n, a = int(p["n_samples"]), int(p["amp"])
+        wave = np.full(n, a, dtype="<i2")
+        wave[1::2] = -a
+        return encode_wav_pcm16(int(p["rate"]), wave)
+    w, h = int(p["width"]), int(p["height"])
+    px = _rgb(w, h, int(p["r_byte"]), int(p["g_byte"]), int(p["b_byte"]))
+    return encode_ppm_p6(w, h, px.tobytes())
 
 
-def synthesize_payloads(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, mime, payload binary): the real-bytes
-    multimodal column. One Arrow-batched projection, no shuffle."""
-    synth_udf = F.pandas_udf(make_synthesizer(), "binary")
-    p = _codec_params(docs)
-    return p.select(
-        "doc_id",
-        "mime",
-        synth_udf(
-            "mime", "corrupt", "rate", "n_samples", "amp",
-            "width", "height", "r_byte", "g_byte", "b_byte",
-        ).alias("payload"),
-    )
-
-
-def make_decoder() -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    """mapInPandas body: REAL decode. Dispatches on mime, parses the
-    actual bytes (chunk walk / header scan), computes statistics over
-    the actual samples/raster, and maps ANY undecodable payload to
-    valid=false + NULL features instead of raising — the error-row
-    policy a 100 TB scan needs. Closure-returned for by-value pickling."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "mime", "n_bytes", "valid", "sample_rate",
-                    "n_samples", "rms", "width", "height", "mean_r",
-                )
-            }
-            for doc_id, mime, payload in zip(pdf["doc_id"], pdf["mime"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                feat = dict.fromkeys(cols)
-                feat.update(doc_id=doc_id, mime=mime, n_bytes=len(b), valid=False)
-                if mime == "audio/wav":
-                    dec = decode_wav_pcm16(b)
-                    if dec is not None:
-                        rate, samples = dec
-                        sq = samples.astype(np.float64) ** 2
-                        feat.update(
-                            valid=True,
-                            sample_rate=rate,
-                            n_samples=len(samples),
-                            rms=float(np.sqrt(sq.mean())) if len(samples) else 0.0,
-                        )
-                elif mime == "image/x-portable-pixmap":
-                    dec = decode_ppm_p6(b)
-                    if dec is not None:
-                        w, h, raster = dec
-                        feat.update(
-                            valid=True,
-                            width=w,
-                            height=h,
-                            mean_r=float(raster[:, :, 0].astype(np.float64).mean()),
-                        )
-                for k, v in feat.items():
-                    cols[k].append(v)
-            # Nullable extension dtypes: None must reach Arrow as NULL
-            # (a plain float64 column would smuggle it through as NaN,
-            # which is NOT SQL NULL on the Spark side).
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols["doc_id"], dtype="Int64"),
-                    "mime": pd.array(cols["mime"], dtype="string"),
-                    "n_bytes": pd.array(cols["n_bytes"], dtype="int32"),
-                    "valid": pd.array(cols["valid"], dtype="boolean"),
-                    "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                    "n_samples": pd.array(cols["n_samples"], dtype="Int32"),
-                    "rms": pd.array(cols["rms"], dtype="Float64"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "mean_r": pd.array(cols["mean_r"], dtype="Float64"),
-                }
-            )
-
-    return decode
+def _wav_ppm_rows(b: bytes, mime: "str | None") -> "list[dict]":
+    """Dispatches on mime; RMS over the real samples, channel mean over
+    the real raster; n_bytes on every row, error rows included."""
+    row: dict = {"n_bytes": len(b), "valid": False}
+    if mime == "audio/wav" and (wav := decode_wav_pcm16(b)) is not None:
+        rate, samples = wav
+        row.update(valid=True, sample_rate=rate, n_samples=len(samples), rms=_rms(samples))
+    elif mime == "image/x-portable-pixmap" and (ppm := decode_ppm_p6(b)) is not None:
+        w, h, raster = ppm
+        row.update(valid=True, width=w, height=h, mean_r=_mean(raster[:, :, 0]))
+    return [row]
 
 
 @register(
@@ -409,7 +462,8 @@ FROM p
 )
 def multimodal_codec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return synthesize_payloads(docs).mapInPandas(make_decoder(), schema=DECODE_SCHEMA)
+    payloads = synthesize(docs, _pack_wav_ppm, 4, WAV_EXTRAS, keep=("mime",))
+    return decode_payloads(payloads, _wav_ppm_rows, DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -418,11 +472,6 @@ def multimodal_codec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
-#: Per-doc filter phase: scanline y of doc k uses filter (k + y) % 5, so
-#: every payload taller than 4 rows exercises ALL five RFC 2083 filter
-#: types (None/Sub/Up/Average/Paeth) and the decoder's distinct-filter
-#: count has the closed form least(height, 5).
-_PNG_FILTER_BASE = "abs(doc_id % 5)"
 
 PNG_SCHEMA = (
     "doc_id bigint, valid boolean, width int, height int, "
@@ -596,123 +645,28 @@ def decode_png_rgb8(payload: bytes) -> "tuple[int, int, object, int] | None":
     return width, height, raster, len(filters)
 
 
-def _png_params(docs: DataFrame) -> DataFrame:
-    """documents → JVM-computed PNG synthesis parameters (same shared-SQL
-    discipline as ``_codec_params``: Python never derives a value the
-    oracle models)."""
-    return docs.select(
-        "doc_id",
-        F.expr(_CORRUPT).alias("corrupt"),
-        F.expr(_WIDTH).cast("int").alias("width"),
-        F.expr(_HEIGHT).cast("int").alias("height"),
-        F.expr(_R_BYTE).cast("int").alias("r_byte"),
-        F.expr(_G_BYTE).cast("int").alias("g_byte"),
-        F.expr(_B_BYTE).cast("int").alias("b_byte"),
-        F.expr(_PNG_FILTER_BASE).cast("int").alias("f_base"),
+def _pack_png(p: dict) -> bytes:
+    return encode_png_rgb8(
+        int(p["width"]), int(p["height"]), gradient_raster(p), filter_base=int(p["f_base"])
     )
 
 
-def make_png_synthesizer() -> "Callable[..., pd.Series]":
-    """pandas_udf(BINARY) body: packs real PNG bytes. The raster is a
-    two-axis gradient — R ramps along x as (r_byte+x)%256, G constant,
-    B ramps along y as (b_byte+y)%256 — so the horizontal (Sub/Paeth
-    left) and vertical (Up/Paeth above) predictors all see non-constant
-    input and channel means keep closed forms the oracle can state.
-    Corrupt rows get the full payload with the 8-byte signature's first
-    4 bytes smashed; NULL-keyed rows get 4 junk bytes."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def synth(
-        corrupt: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        r_byte: pd.Series,
-        g_byte: pd.Series,
-        b_byte: pd.Series,
-        f_base: pd.Series,
-    ) -> pd.Series:
-        out: list[bytes] = []
-        for i in range(len(corrupt)):
-            if pd.isna(width.iloc[i]) or pd.isna(f_base.iloc[i]):
-                out.append(b"DEAD")
-                continue
-            w, h = int(width.iloc[i]), int(height.iloc[i])
-            px = np.empty((h, w, 3), dtype=np.uint8)
-            px[:, :, 0] = (int(r_byte.iloc[i]) + np.arange(w, dtype=np.int64)) % 256
-            px[:, :, 1] = int(g_byte.iloc[i])
-            px[:, :, 2] = (
-                (int(b_byte.iloc[i]) + np.arange(h, dtype=np.int64)) % 256
-            )[:, None]
-            payload = encode_png_rgb8(w, h, px, filter_base=int(f_base.iloc[i]))
-            if bool(corrupt.iloc[i]):
-                payload = b"DEAD" + payload[4:]
-            out.append(payload)
-        return pd.Series(out)
-
-    return synth
-
-
-def synthesize_png_payloads(docs: DataFrame) -> DataFrame:
-    """documents → (doc_id, payload binary) of real PNG bytes. One
-    Arrow-batched projection, no shuffle."""
-    synth_udf = F.pandas_udf(make_png_synthesizer(), "binary")
-    p = _png_params(docs)
-    return p.select(
-        "doc_id",
-        synth_udf(
-            "corrupt", "width", "height", "r_byte", "g_byte", "b_byte", "f_base"
-        ).alias("payload"),
-    )
-
-
-def make_png_decoder() -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    """mapInPandas body: real PNG decode with the decode spec's error-row
-    policy — undecodable payloads become valid=false + NULL features."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "valid", "width", "height",
-                    "raw_bytes", "n_filter_types", "mean_r", "mean_b",
-                )
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                feat = dict.fromkeys(cols)
-                feat.update(doc_id=doc_id, valid=False)
-                dec = decode_png_rgb8(b)
-                if dec is not None:
-                    w, h, raster, n_filters = dec
-                    feat.update(
-                        valid=True,
-                        width=w,
-                        height=h,
-                        raw_bytes=h * (1 + w * 3),
-                        n_filter_types=n_filters,
-                        mean_r=float(raster[:, :, 0].astype(np.float64).mean()),
-                        mean_b=float(raster[:, :, 2].astype(np.float64).mean()),
-                    )
-                for k, v in feat.items():
-                    cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols["doc_id"], dtype="Int64"),
-                    "valid": pd.array(cols["valid"], dtype="boolean"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "raw_bytes": pd.array(cols["raw_bytes"], dtype="Int32"),
-                    "n_filter_types": pd.array(cols["n_filter_types"], dtype="Int32"),
-                    "mean_r": pd.array(cols["mean_r"], dtype="Float64"),
-                    "mean_b": pd.array(cols["mean_b"], dtype="Float64"),
-                }
-            )
-
-    return decode
+def _png_rows(b: bytes) -> "list[dict]":
+    png = decode_png_rgb8(b)
+    if png is None:
+        return [{"valid": False}]
+    w, h, raster, n_filters = png
+    return [
+        dict(
+            valid=True,
+            width=w,
+            height=h,
+            raw_bytes=h * (1 + w * 3),
+            n_filter_types=n_filters,
+            mean_r=_mean(raster[:, :, 0]),
+            mean_b=_mean(raster[:, :, 2]),
+        )
+    ]
 
 
 @register(
@@ -773,47 +727,26 @@ FROM p
 )
 def multimodal_codec_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return synthesize_png_payloads(docs).mapInPandas(
-        make_png_decoder(), schema=PNG_SCHEMA
-    )
+    return decode_payloads(synthesize(docs, _pack_png, 4, ("f_base",)), _png_rows, PNG_SCHEMA)
 
 
-def make_frame_extractor(
-    frame_samples: int = FRAME_SAMPLES,
-) -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    """mapInPandas body: real audio framing — decode the WAV, slice the
-    PCM into ``frame_samples``-sample windows (last frame ragged), emit
-    per-frame RMS. The 1-to-N explode shape of real feature extraction,
-    computed from the actual bytes. Undecodable payloads emit nothing
-    (the upstream decode spec owns error accounting)."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, sizes, rmss = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                dec = decode_wav_pcm16(bytes(payload) if payload is not None else b"")
-                if dec is None:
-                    continue
-                _rate, samples = dec
-                x = samples.astype(np.float64)
-                for i in range(0, max(len(x), 1), frame_samples):
-                    frame = x[i : i + frame_samples]
-                    ids.append(doc_id)
-                    idxs.append(i // frame_samples)
-                    sizes.append(len(frame))
-                    rmss.append(float(np.sqrt((frame**2).mean())) if len(frame) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(ids, dtype="int64"),
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame_samples": pd.array(sizes, dtype="int32"),
-                    "frame_rms": pd.array(rmss, dtype="float64"),
-                }
-            )
-
-    return frames
+def _frame_rows(b: bytes) -> "list[dict]":
+    """Real audio framing: the PCM sliced into FRAME_SAMPLES-sample
+    windows (last frame ragged) with per-frame RMS — the 1-to-N explode
+    shape of real feature extraction. Undecodable payloads emit nothing
+    (the decode spec owns error accounting)."""
+    wav = decode_wav_pcm16(b)
+    if wav is None:
+        return []
+    x = wav[1]
+    return [
+        dict(
+            frame_idx=i // FRAME_SAMPLES,
+            frame_samples=len(x[i : i + FRAME_SAMPLES]),
+            frame_rms=_rms(x[i : i + FRAME_SAMPLES]),
+        )
+        for i in range(0, max(len(x), 1), FRAME_SAMPLES)
+    ]
 
 
 @register(
@@ -854,5 +787,5 @@ def multimodal_codec_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(
         F.expr(f"doc_id IS NOT NULL AND doc_id % 2 = 0 AND NOT {_CORRUPT}")
     )
-    wav = synthesize_payloads(docs).select("doc_id", "payload")
-    return wav.mapInPandas(make_frame_extractor(), schema=FRAME_SCHEMA)
+    payloads = synthesize(docs, _pack_wav_ppm, 4, WAV_EXTRAS)
+    return decode_payloads(payloads, _frame_rows, FRAME_SCHEMA)

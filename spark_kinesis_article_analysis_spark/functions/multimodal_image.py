@@ -29,32 +29,30 @@ documented codec exception (a production deployment swaps the stdlib
 codec for an imaging library behind the same batch signature).
 """
 
-# NOTE: no `from __future__ import annotations` here — pandas_udf
-# resolves the worker function's signature from LIVE annotation objects
-# (multimodal_codec.py's convention); stringized annotations raise
-# UNSUPPORTED_SIGNATURE.
-import struct
-from collections.abc import Callable, Iterator
-from typing import TYPE_CHECKING
+from __future__ import annotations
 
+import struct
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
 from spark_kinesis_article_analysis_spark.functions.multimodal_codec import (
+    _AVI_N_FRAMES,
     _B_BYTE,
     _CORRUPT,
-    _G_BYTE,
     _HEIGHT,
     _R_BYTE,
     _WIDTH,
+    _mean,
+    _pack_png,
+    _rgb,
+    decode_payloads,
     decode_png_rgb8,
-    synthesize_png_payloads,
+    gradient_raster,
+    synthesize,
 )
 from spark_kinesis_article_analysis_spark.registry import register
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 BMP_SCHEMA = (
     "doc_id bigint, valid boolean, width int, height int, "
@@ -124,118 +122,27 @@ def decode_bmp_24(payload: bytes) -> "tuple[int, int, int, int, object] | None":
     return width, height, stride, file_size, raster
 
 
-def _bmp_params(docs: DataFrame) -> DataFrame:
-    """documents -> JVM-computed BMP synthesis parameters (the codec
-    module's shared-SQL discipline: Python never derives a value the
-    oracle can't restate)."""
-    return docs.select(
-        "doc_id",
-        F.expr(_CORRUPT).alias("corrupt"),
-        F.expr(_WIDTH).cast("int").alias("width"),
-        F.expr(_HEIGHT).cast("int").alias("height"),
-        F.expr(_R_BYTE).cast("int").alias("r_byte"),
-        F.expr(_G_BYTE).cast("int").alias("g_byte"),
-        F.expr(_B_BYTE).cast("int").alias("b_byte"),
-    )
+def _pack_bmp(p: dict) -> bytes:
+    """The PNG spec's two-axis gradient, as a BMP."""
+    return encode_bmp_24(int(p["width"]), int(p["height"]), gradient_raster(p))
 
 
-def make_bmp_synthesizer() -> "Callable[..., pd.Series]":
-    """pandas_udf(BINARY) body: packs real BMP bytes over the PNG spec's
-    two-axis gradient (R ramps along x, G constant, B ramps along y).
-    Corrupt rows get the full payload with the 2-byte magic smashed;
-    NULL-keyed rows get 4 junk bytes."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def synth(
-        corrupt: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        r_byte: pd.Series,
-        g_byte: pd.Series,
-        b_byte: pd.Series,
-    ) -> pd.Series:
-        out: list[bytes] = []
-        for i in range(len(corrupt)):
-            if pd.isna(width.iloc[i]) or pd.isna(height.iloc[i]):
-                out.append(b"DEAD")
-                continue
-            w, h = int(width.iloc[i]), int(height.iloc[i])
-            px = np.empty((h, w, 3), dtype=np.uint8)
-            px[:, :, 0] = (int(r_byte.iloc[i]) + np.arange(w, dtype=np.int64)) % 256
-            px[:, :, 1] = int(g_byte.iloc[i])
-            px[:, :, 2] = (
-                (int(b_byte.iloc[i]) + np.arange(h, dtype=np.int64)) % 256
-            )[:, None]
-            payload = encode_bmp_24(w, h, px)
-            if bool(corrupt.iloc[i]):
-                payload = b"XX" + payload[2:]
-            out.append(payload)
-        return pd.Series(out)
-
-    return synth
-
-
-def synthesize_bmp_payloads(docs: DataFrame) -> DataFrame:
-    """documents -> (doc_id, payload binary) of real BMP bytes. One
-    Arrow-batched projection, no shuffle."""
-    synth_udf = F.pandas_udf(make_bmp_synthesizer(), "binary")
-    p = _bmp_params(docs)
-    return p.select(
-        "doc_id",
-        synth_udf("corrupt", "width", "height", "r_byte", "g_byte", "b_byte").alias(
-            "payload"
-        ),
-    )
-
-
-def make_bmp_decoder() -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    """mapInPandas body: real BMP decode with the codec error-row policy
-    (undecodable payload -> valid=false + NULL features)."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "valid", "width", "height",
-                    "row_stride", "file_size", "mean_r", "mean_b",
-                )
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                feat = dict.fromkeys(cols)
-                feat.update(doc_id=doc_id, valid=False)
-                dec = decode_bmp_24(b)
-                if dec is not None:
-                    w, h, stride, fsize, raster = dec
-                    feat.update(
-                        valid=True,
-                        width=w,
-                        height=h,
-                        row_stride=stride,
-                        file_size=fsize,
-                        mean_r=float(raster[:, :, 0].astype(np.float64).mean()),
-                        mean_b=float(raster[:, :, 2].astype(np.float64).mean()),
-                    )
-                for k, v in feat.items():
-                    cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols["doc_id"], dtype="Int64"),
-                    "valid": pd.array(cols["valid"], dtype="boolean"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "row_stride": pd.array(cols["row_stride"], dtype="Int32"),
-                    "file_size": pd.array(cols["file_size"], dtype="Int32"),
-                    "mean_r": pd.array(cols["mean_r"], dtype="Float64"),
-                    "mean_b": pd.array(cols["mean_b"], dtype="Float64"),
-                }
-            )
-
-    return decode
+def _bmp_rows(b: bytes) -> "list[dict]":
+    bmp = decode_bmp_24(b)
+    if bmp is None:
+        return [{"valid": False}]
+    w, h, stride, fsize, raster = bmp
+    return [
+        dict(
+            valid=True,
+            width=w,
+            height=h,
+            row_stride=stride,
+            file_size=fsize,
+            mean_r=_mean(raster[:, :, 0]),
+            mean_b=_mean(raster[:, :, 2]),
+        )
+    ]
 
 
 @register(
@@ -290,55 +197,26 @@ FROM p
 )
 def multimodal_codec_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return synthesize_bmp_payloads(docs).mapInPandas(
-        make_bmp_decoder(), schema=BMP_SCHEMA
-    )
+    return decode_payloads(synthesize(docs, _pack_bmp, 2), _bmp_rows, BMP_SCHEMA)
 
 
-def make_resize_decoder() -> (
-    "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]"
-):
-    """mapInPandas body: real PNG decode, then a REAL nearest-neighbor
-    2x downsample (``raster[::2, ::2]`` — out(y', x') = in(2y', 2x'))
-    and feature extraction from the resized raster."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def resize(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in ("doc_id", "valid", "out_width", "out_height", "mean_r", "mean_b")
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                feat = dict.fromkeys(cols)
-                feat.update(doc_id=doc_id, valid=False)
-                dec = decode_png_rgb8(b)
-                if dec is not None:
-                    _w, _h, raster, _nf = dec
-                    small = raster[::2, ::2]
-                    feat.update(
-                        valid=True,
-                        out_width=small.shape[1],
-                        out_height=small.shape[0],
-                        mean_r=float(small[:, :, 0].astype(np.float64).mean()),
-                        mean_b=float(small[:, :, 2].astype(np.float64).mean()),
-                    )
-                for k, v in feat.items():
-                    cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols["doc_id"], dtype="Int64"),
-                    "valid": pd.array(cols["valid"], dtype="boolean"),
-                    "out_width": pd.array(cols["out_width"], dtype="Int32"),
-                    "out_height": pd.array(cols["out_height"], dtype="Int32"),
-                    "mean_r": pd.array(cols["mean_r"], dtype="Float64"),
-                    "mean_b": pd.array(cols["mean_b"], dtype="Float64"),
-                }
-            )
-
-    return resize
+def _resize_rows(b: bytes) -> "list[dict]":
+    """Real PNG decode, then a REAL nearest-neighbor 2x downsample
+    (``raster[::2, ::2]`` — out(y', x') = in(2y', 2x')) and feature
+    extraction from the resized raster."""
+    png = decode_png_rgb8(b)
+    if png is None:
+        return [{"valid": False}]
+    small = png[2][::2, ::2]
+    return [
+        dict(
+            valid=True,
+            out_width=small.shape[1],
+            out_height=small.shape[0],
+            mean_r=_mean(small[:, :, 0]),
+            mean_b=_mean(small[:, :, 2]),
+        )
+    ]
 
 
 @register(
@@ -388,9 +266,8 @@ FROM p
 )
 def multimodal_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return synthesize_png_payloads(docs).mapInPandas(
-        make_resize_decoder(), schema=RESIZE_SCHEMA
-    )
+    payloads = synthesize(docs, _pack_png, 4, ("f_base",))
+    return decode_payloads(payloads, _resize_rows, RESIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -626,95 +503,33 @@ def decode_gif87a(payload: bytes) -> "tuple[int, int, object] | None":
     return width, height, palette[idx]
 
 
-def make_gif_synthesizer() -> "Callable[..., pd.Series]":
-    """pandas_udf(BINARY) body: packs real GIF87a bytes. Index at (y, x)
-    is (r_byte + x + y) % 256 — a diagonal ramp, so the LZW dictionary
-    sees repeating-but-shifted runs and every scanline differs (a
-    decoder that misplaces row boundaries changes the means). Corrupt
-    rows get the signature's first 3 bytes smashed; NULL-keyed rows get
-    4 junk bytes."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def synth(
-        corrupt: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        r_byte: pd.Series,
-        g_byte: pd.Series,
-    ) -> pd.Series:
-        out: list[bytes] = []
-        for i in range(len(corrupt)):
-            if pd.isna(width.iloc[i]) or pd.isna(height.iloc[i]):
-                out.append(b"DEAD")
-                continue
-            w, h = int(width.iloc[i]), int(height.iloc[i])
-            x = np.arange(w, dtype=np.int64)
-            y = np.arange(h, dtype=np.int64)[:, None]
-            idx = ((int(r_byte.iloc[i]) + x + y) % 256).astype(np.uint8)
-            payload = encode_gif87a(w, h, idx, int(g_byte.iloc[i]))
-            if bool(corrupt.iloc[i]):
-                payload = b"BAD" + payload[3:]
-            out.append(payload)
-        return pd.Series(out)
-
-    return synth
+def _pack_gif(p: dict) -> bytes:
+    """Index at (y, x) is (r_byte + x + y) % 256 — a diagonal ramp, so
+    the LZW dictionary sees repeating-but-shifted runs and every scanline
+    differs (a decoder that misplaces row boundaries changes the means)."""
+    w, h = int(p["width"]), int(p["height"])
+    x = np.arange(w, dtype=np.int64)
+    y = np.arange(h, dtype=np.int64)[:, None]
+    idx = ((int(p["r_byte"]) + x + y) % 256).astype(np.uint8)
+    return encode_gif87a(w, h, idx, int(p["g_byte"]))
 
 
-def synthesize_gif_payloads(docs: DataFrame) -> DataFrame:
-    synth_udf = F.pandas_udf(make_gif_synthesizer(), "binary")
-    p = _bmp_params(docs)  # same JVM-computed parameter family
-    return p.select(
-        "doc_id",
-        synth_udf("corrupt", "width", "height", "r_byte", "g_byte").alias("payload"),
-    )
-
-
-def make_gif_decoder() -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "valid", "width", "height",
-                    "n_pixels", "palette_size", "mean_r", "mean_b",
-                )
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                feat = dict.fromkeys(cols)
-                feat.update(doc_id=doc_id, valid=False)
-                dec = decode_gif87a(b)
-                if dec is not None:
-                    w, h, raster = dec
-                    feat.update(
-                        valid=True,
-                        width=w,
-                        height=h,
-                        n_pixels=w * h,
-                        palette_size=256,
-                        mean_r=float(raster[:, :, 0].astype(np.float64).mean()),
-                        mean_b=float(raster[:, :, 2].astype(np.float64).mean()),
-                    )
-                for k, v in feat.items():
-                    cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols["doc_id"], dtype="Int64"),
-                    "valid": pd.array(cols["valid"], dtype="boolean"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "n_pixels": pd.array(cols["n_pixels"], dtype="Int32"),
-                    "palette_size": pd.array(cols["palette_size"], dtype="Int32"),
-                    "mean_r": pd.array(cols["mean_r"], dtype="Float64"),
-                    "mean_b": pd.array(cols["mean_b"], dtype="Float64"),
-                }
-            )
-
-    return decode
+def _gif_rows(b: bytes) -> "list[dict]":
+    gif = decode_gif87a(b)
+    if gif is None:
+        return [{"valid": False}]
+    w, h, raster = gif
+    return [
+        dict(
+            valid=True,
+            width=w,
+            height=h,
+            n_pixels=w * h,
+            palette_size=256,
+            mean_r=_mean(raster[:, :, 0]),
+            mean_b=_mean(raster[:, :, 2]),
+        )
+    ]
 
 
 @register(
@@ -783,9 +598,7 @@ FROM p LEFT JOIN wraps w ON w.doc_id = p.doc_id
 )
 def multimodal_codec_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return synthesize_gif_payloads(docs).mapInPandas(
-        make_gif_decoder(), schema=GIF_SCHEMA
-    )
+    return decode_payloads(synthesize(docs, _pack_gif, 3), _gif_rows, GIF_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1165,91 +978,26 @@ def decode_jpeg_gray(payload: bytes) -> "tuple[int, int, object] | None":
     return width, height, out[:height, :width]
 
 
-def make_jpeg_synthesizer() -> "Callable[..., pd.Series]":
-    """pandas_udf(BINARY) body: packs real baseline JPEGs. The raster is
-    constant per 8x8 block column — v(bx) = (r_byte + 17*bx) % 256 —
-    which the unit quant table preserves EXACTLY through the real
-    DCT/Huffman pipeline (constant blocks carry only DC energy), so the
-    decoded means stay closed-form while markers, canonical Huffman
-    tables, DC DPCM, byte stuffing, and MCU padding are all genuinely
-    exercised. Corrupt rows get the SOI marker smashed; NULL-keyed rows
-    get 4 junk bytes."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def synth(
-        corrupt: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        r_byte: pd.Series,
-    ) -> pd.Series:
-        out: list[bytes] = []
-        for i in range(len(corrupt)):
-            if pd.isna(width.iloc[i]) or pd.isna(height.iloc[i]):
-                out.append(b"DEAD")
-                continue
-            w, h = int(width.iloc[i]), int(height.iloc[i])
-            bw = (w + 7) // 8
-            cols = (int(r_byte.iloc[i]) + 17 * np.arange(bw, dtype=np.int64)) % 256
-            px = np.repeat(cols, 8)[:w][None, :].repeat(h, axis=0).astype(np.uint8)
-            payload = encode_jpeg_gray(w, h, px)
-            if bool(corrupt.iloc[i]):
-                payload = b"XX" + payload[2:]
-            out.append(payload)
-        return pd.Series(out)
-
-    return synth
+def _pack_jpeg(p: dict) -> bytes:
+    """The raster is constant per 8x8 block column — v(bx) = (r_byte +
+    17*bx) % 256 — which the unit quant table preserves EXACTLY through
+    the real DCT/Huffman pipeline (constant blocks carry only DC energy),
+    so the decoded means stay closed-form while markers, canonical
+    Huffman tables, DC DPCM, byte stuffing, and MCU padding are all
+    genuinely exercised."""
+    w, h = int(p["width"]), int(p["height"])
+    bw = (w + 7) // 8
+    cols = (int(p["r_byte"]) + _JPEG_BLOCK_STEP * np.arange(bw, dtype=np.int64)) % 256
+    px = np.repeat(cols, 8)[:w][None, :].repeat(h, axis=0).astype(np.uint8)
+    return encode_jpeg_gray(w, h, px)
 
 
-def synthesize_jpeg_payloads(docs: DataFrame) -> DataFrame:
-    synth_udf = F.pandas_udf(make_jpeg_synthesizer(), "binary")
-    p = _bmp_params(docs)  # same JVM-computed parameter family
-    return p.select(
-        "doc_id",
-        synth_udf("corrupt", "width", "height", "r_byte").alias("payload"),
-    )
-
-
-def make_jpeg_decoder() -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def decode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "valid", "width", "height", "n_blocks_x", "mean_luma",
-                )
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                feat = dict.fromkeys(cols)
-                feat.update(doc_id=doc_id, valid=False)
-                dec = decode_jpeg_gray(b)
-                if dec is not None:
-                    w, h, raster = dec
-                    feat.update(
-                        valid=True,
-                        width=w,
-                        height=h,
-                        n_blocks_x=(w + 7) // 8,
-                        mean_luma=float(raster.astype(np.float64).mean()),
-                    )
-                for k, v in feat.items():
-                    cols[k].append(v)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols["doc_id"], dtype="Int64"),
-                    "valid": pd.array(cols["valid"], dtype="boolean"),
-                    "width": pd.array(cols["width"], dtype="Int32"),
-                    "height": pd.array(cols["height"], dtype="Int32"),
-                    "n_blocks_x": pd.array(cols["n_blocks_x"], dtype="Int32"),
-                    "mean_luma": pd.array(cols["mean_luma"], dtype="Float64"),
-                }
-            )
-
-    return decode
+def _jpeg_rows(b: bytes) -> "list[dict]":
+    jpeg = decode_jpeg_gray(b)
+    if jpeg is None:
+        return [{"valid": False}]
+    w, h, raster = jpeg
+    return [dict(valid=True, width=w, height=h, n_blocks_x=(w + 7) // 8, mean_luma=_mean(raster))]
 
 
 @register(
@@ -1303,9 +1051,7 @@ FROM p LEFT JOIN sums s ON s.doc_id = p.doc_id
 )
 def multimodal_codec_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return synthesize_jpeg_payloads(docs).mapInPandas(
-        make_jpeg_decoder(), schema=JPEG_SCHEMA
-    )
+    return decode_payloads(synthesize(docs, _pack_jpeg, 2), _jpeg_rows, JPEG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1321,9 +1067,6 @@ AVI_SCHEMA = (
 #: decoder that drops, duplicates, or reorders '00db' chunks moves the
 #: per-frame means and hash-fails.
 _AVI_FRAME_SHIFT = 7
-#: Frame count per document (bounded 2..5 — the wrap analysis in the
-#: oracle relies on r_byte + width-1 + 7*(n_frames-1) < 512).
-_AVI_N_FRAMES = "2 + abs(doc_id % 4)"
 
 
 def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
@@ -1450,103 +1193,38 @@ def decode_avi_dib(payload: bytes) -> "tuple[int, int, list] | None":
     return width, height, out
 
 
-def make_avi_synthesizer() -> "Callable[..., pd.Series]":
-    """pandas_udf(BINARY) body: packs real AVI bytes — frame f's red
-    channel ramps as (r_byte + x + 7*f) % 256 (G constant, B zero), so
-    consecutive frames shift and the per-frame means stay closed-form.
-    Corrupt rows get the RIFF signature smashed; NULL-keyed rows get 4
-    junk bytes."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def synth(
-        corrupt: pd.Series,
-        width: pd.Series,
-        height: pd.Series,
-        r_byte: pd.Series,
-        g_byte: pd.Series,
-        n_frames: pd.Series,
-    ) -> pd.Series:
-        out: list[bytes] = []
-        for i in range(len(corrupt)):
-            if pd.isna(width.iloc[i]) or pd.isna(n_frames.iloc[i]):
-                out.append(b"DEAD")
-                continue
-            w, h = int(width.iloc[i]), int(height.iloc[i])
-            frames = []
-            for f in range(int(n_frames.iloc[i])):
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[:, :, 0] = (
-                    int(r_byte.iloc[i])
-                    + _AVI_FRAME_SHIFT * f
-                    + np.arange(w, dtype=np.int64)
-                ) % 256
-                px[:, :, 1] = int(g_byte.iloc[i])
-                px[:, :, 2] = 0
-                frames.append(px)
-            payload = encode_avi_dib(w, h, frames)
-            if bool(corrupt.iloc[i]):
-                payload = b"XXXX" + payload[4:]
-            out.append(payload)
-        return pd.Series(out)
-
-    return synth
+def _pack_avi(p: dict) -> bytes:
+    """Frame f's red channel ramps as (r_byte + x + 7*f) % 256 (G
+    constant, B zero), so consecutive frames shift and the per-frame
+    means stay closed-form."""
+    w, h = int(p["width"]), int(p["height"])
+    x = np.arange(w, dtype=np.int64)
+    frames = [
+        _rgb(w, h, (int(p["r_byte"]) + _AVI_FRAME_SHIFT * f + x) % 256, int(p["g_byte"]), 0)
+        for f in range(int(p["n_frames"]))
+    ]
+    return encode_avi_dib(w, h, frames)
 
 
-def synthesize_avi_payloads(docs: DataFrame) -> DataFrame:
-    synth_udf = F.pandas_udf(make_avi_synthesizer(), "binary")
-    p = _bmp_params(docs).withColumn("n_frames", F.expr(_AVI_N_FRAMES).cast("int"))
-    return p.select(
-        "doc_id",
-        synth_udf("corrupt", "width", "height", "r_byte", "g_byte", "n_frames").alias(
-            "payload"
-        ),
-    )
-
-
-def make_avi_frame_extractor() -> (
-    "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]"
-):
-    """mapInPandas body: real AVI decode, ONE OUTPUT ROW PER FRAME (the
-    1-to-N video frame-sampling shape). Undecodable payloads emit a
-    single valid=false row so corruption stays visible per document."""
-    import numpy as np
-    import pandas as pd  # noqa: F811 — worker-local import
-
-    def frames(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows: list[dict] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                dec = decode_avi_dib(b)
-                if dec is None:
-                    rows.append(
-                        dict(doc_id=doc_id, frame_idx=None, valid=False, width=None,
-                             height=None, n_frames=None, mean_r=None)
-                    )
-                    continue
-                w, h, frs = dec
-                for f, raster in enumerate(frs):
-                    rows.append(
-                        dict(
-                            doc_id=doc_id, frame_idx=f, valid=True, width=w, height=h,
-                            n_frames=len(frs),
-                            mean_r=float(raster[:, :, 0].astype(np.float64).mean()),
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array([r["doc_id"] for r in rows], dtype="Int64"),
-                    "frame_idx": pd.array([r["frame_idx"] for r in rows], dtype="Int32"),
-                    "valid": pd.array([r["valid"] for r in rows], dtype="boolean"),
-                    "width": pd.array([r["width"] for r in rows], dtype="Int32"),
-                    "height": pd.array([r["height"] for r in rows], dtype="Int32"),
-                    "n_frames": pd.array([r["n_frames"] for r in rows], dtype="Int32"),
-                    "mean_r": pd.array([r["mean_r"] for r in rows], dtype="Float64"),
-                }
-            )
-
-    return frames
+def _avi_rows(b: bytes) -> "list[dict]":
+    """ONE ROW PER FRAME (the 1-to-N video frame-sampling shape); an
+    undecodable payload is a single valid=false row, so corruption stays
+    visible per document."""
+    avi = decode_avi_dib(b)
+    if avi is None:
+        return [{"valid": False}]
+    w, h, frames = avi
+    return [
+        dict(
+            frame_idx=f,
+            valid=True,
+            width=w,
+            height=h,
+            n_frames=len(frames),
+            mean_r=_mean(raster[:, :, 0]),
+        )
+        for f, raster in enumerate(frames)
+    ]
 
 
 @register(
@@ -1598,6 +1276,5 @@ FROM p WHERE coalesce(corrupt, TRUE)
 )
 def multimodal_codec_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return synthesize_avi_payloads(docs).mapInPandas(
-        make_avi_frame_extractor(), schema=AVI_SCHEMA
-    )
+    payloads = synthesize(docs, _pack_avi, 4, ("n_frames",))
+    return decode_payloads(payloads, _avi_rows, AVI_SCHEMA)

@@ -8,9 +8,9 @@ when per-query latency matters more than build cost.
 
 Construction (relational, oracle-mirrorable): candidate edges come from
 the SAME md5-portable sign-plane LSH blocking ``dedup_embedding_cosine``
-uses (NSW_TABLES tables x NSW_BITS bits, blocks hard-capped at NSW_CAP
-vectors by the md5-ordered sub-split — per-task pair work <= CAP^2,
-total linear in N), then each node keeps its NSW_M best bucket-mates by
+uses (COSINE_LSH_TABLES tables x NSW_BITS bits, blocks hard-capped at
+COSINE_BLOCK_CAP vectors by the md5-ordered sub-split — per-task pair
+work <= CAP^2, total linear in N), then each node keeps its NSW_M best bucket-mates by
 (cosine DESC, neighbor ASC). Both directions of a block pair are
 emitted, so the graph is symmetric before the degree cap — the NSW
 "navigable" property comes from LSH mates being mostly-near with a few
@@ -49,6 +49,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.functions.dedup import (
+    COSINE_BLOCK_CAP,
+    COSINE_LSH_TABLES,
+    _cosine_block_assignments,
+    scored_block_pairs,
+)
 from spark_kinesis_article_analysis_spark.functions.similarity import (
     EMB_DIM,
     N_QUERIES,
@@ -56,7 +62,7 @@ from spark_kinesis_article_analysis_spark.functions.similarity import (
     TOP_K,
     dot,
     plane_bit_sql,
-    portable_bucket,
+    valid_vector,
 )
 from spark_kinesis_article_analysis_spark.registry import register
 
@@ -74,17 +80,17 @@ NSW_HOPS = 4
 #: DIVERSITY buys more than beam width — the flat-geometry twin of
 #: IVF's multiprobe lesson).
 NSW_ENTRY_STRIDE = 100
-#: LSH blocking geometry for edge candidates (shared md5-plane family)
-NSW_TABLES = 2
+#: sign bits per LSH table for edge candidates (dedup_embedding_cosine's
+#: blocking — its COSINE_LSH_TABLES tables, blocks capped at
+#: COSINE_BLOCK_CAP — with fewer bits)
 NSW_BITS = 6
-NSW_CAP = 64
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .filter((F.size("emb") == EMB_DIM) & F.exists("emb", lambda x: x != 0.0))
+        .filter(valid_vector("emb") & F.exists("emb", lambda x: x != 0.0))
         .filter(F.col("vec_id") >= N_QUERIES)
         .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
     )
@@ -94,48 +100,12 @@ def nsw_edges(e: DataFrame) -> DataFrame:
     """(src, dst, cosine): each node's NSW_M best LSH-block-mates.
     The dedup_embedding_cosine blocking (md5-ordered sub-split caps
     every block) with a per-node degree cap instead of a threshold."""
-    tables = [
-        F.struct(
-            F.lit(t).alias("table_id"),
-            portable_bucket(t, NSW_BITS).alias("bucket"),
-        )
-        for t in range(NSW_TABLES)
-    ]
-    bk = e.select("vec_id", "emb", "nrm", F.explode(F.array(*tables)).alias("t")).select(
-        "vec_id", "emb", "nrm", F.col("t.table_id").alias("table_id"), F.col("t.bucket").alias("bucket")
-    )
-    w = W.partitionBy("table_id", "bucket").orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    )
-    ck = bk.withColumn(
-        "sub", F.floor((F.row_number().over(w) - F.lit(1)) / F.lit(NSW_CAP))
-    )
-    chunks = (
-        ck.groupBy("table_id", "bucket", "sub")
-        .agg(F.sort_array(F.collect_list(F.struct("vec_id", "emb", "nrm"))).alias("vs"))
-        .filter(F.size("vs") > 1)
-    )
-    # both directions of every intra-block pair, scored map-side in the
-    # chunk row (no join back to the vector table)
-    pair_list = F.expr(
-        """flatten(transform(vs, (x, i) ->
-            transform(slice(vs, i + 2, size(vs)), y ->
-                named_struct(
-                    'a', x.vec_id, 'b', y.vec_id,
-                    'cosine', round(
-                        aggregate(zip_with(x.emb, y.emb, (p, q) -> p * q),
-                                  cast(0.0 as double), (acc, v) -> acc + v)
-                        / (x.nrm * y.nrm), 6)))))"""
-    )
-    pairs = (
-        chunks.select(F.explode(pair_list).alias("p"))
-        .select("p.a", "p.b", "p.cosine")
-        .distinct()
-    )
+    pairs = scored_block_pairs(_cosine_block_assignments(e, NSW_BITS))
+    # both directions of every intra-block pair
     sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "cosine"
+        F.col("vec_a").alias("src"), F.col("vec_b").alias("dst"), "cosine"
     ).unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), "cosine")
+        pairs.select(F.col("vec_b").alias("src"), F.col("vec_a").alias("dst"), "cosine")
     )
     # degree cap: candidate count per src is bounded by construction
     # (<= TABLES * (CAP - 1)), so the plain window is already bounded
@@ -172,7 +142,7 @@ def nsw_topk(spark: SparkSession, sf_dir: str, hops: int = NSW_HOPS) -> DataFram
     q = (
         load(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .filter((F.size("emb") == EMB_DIM) & F.exists("emb", lambda x: x != 0.0))
+        .filter(valid_vector("emb") & F.exists("emb", lambda x: x != 0.0))
         .filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
@@ -283,7 +253,7 @@ q AS (
            sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS qnrm
     FROM embeddings WHERE vec_id < {N_QUERIES} AND {NONZERO_SQL}
 ),
-tb AS (SELECT unnest(generate_series(0, {NSW_TABLES - 1})) AS table_id),
+tb AS (SELECT unnest(generate_series(0, {COSINE_LSH_TABLES - 1})) AS table_id),
 bk AS (
     SELECT vec_id, table_id, {plane_bit_sql(NSW_BITS)} AS bucket
     FROM (SELECT vec_id, emb FROM e) e CROSS JOIN tb
@@ -292,7 +262,7 @@ ck AS (
     SELECT vec_id, table_id, bucket,
            (row_number() OVER (PARTITION BY table_id, bucket
                                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1)
-               // {NSW_CAP} AS sub
+               // {COSINE_BLOCK_CAP} AS sub
     FROM bk
 ),
 pairs AS (

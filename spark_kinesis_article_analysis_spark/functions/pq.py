@@ -64,6 +64,7 @@ from spark_kinesis_article_analysis_spark.functions.similarity import (
     VALID_DIM_SQL,
     centroid_means,
     nearest_centroid_sql,
+    valid_vector,
 )
 from spark_kinesis_article_analysis_spark.registry import register
 
@@ -100,7 +101,7 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v): schema-valid embeddings as double arrays."""
     return (
         load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM))
+        .filter(valid_vector())
         .select(
             "vec_id",
             F.expr("transform(embedding, x -> cast(x as double))").alias("v"),

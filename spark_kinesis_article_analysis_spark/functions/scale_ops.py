@@ -30,7 +30,7 @@ from spark_kinesis_article_analysis_spark.functions.similarity import (
     centroid_means,
     fold_centroids,
     nearest_centroid_sql,
-    valid_dim_or_null,
+    valid_vector,
 )
 from spark_kinesis_article_analysis_spark.registry import register
 
@@ -308,7 +308,7 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     API per-element form was measured at ~2.6 s of driver-side plan
     construction). At 100 TB this is a scan-fused projection that cuts
     downstream ANN shuffle bytes 8x."""
-    e = load(spark, sf_dir, "embeddings").filter(valid_dim_or_null())
+    e = load(spark, sf_dir, "embeddings").filter(valid_vector(or_null=True))
     exprs = []
     for k in range(PROJ_DIM):
         row = "array(" + ", ".join(f"{w!r}D" for w in _PROJ[k]) + ")"
@@ -630,7 +630,7 @@ def cluster_kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL).
     e = (
         load(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull() & (F.size("embedding") == EMB_DIM))
+        .filter(valid_vector())
         .select("vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("v"))
     )
     cents = e.filter(F.col("vec_id") < KMEANS_K).select(

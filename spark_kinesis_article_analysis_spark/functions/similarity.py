@@ -69,16 +69,21 @@ EMB_DIM = 64
 #: TOPK_SHARDS * TOP_K rows per query regardless of corpus size.
 TOPK_SHARDS = 32
 
-#: Schema-validity guard (DuckDB twins of the Spark filters below): a
+#: Schema-validity guard (DuckDB twins of :func:`valid_vector`): a
 #: 100 TB feed WILL contain corrupt rows whose array length is not
-#: EMB_DIM — truncated writes, concatenation bugs, empty lists. zip_with
-#: silently folds over the shorter length (garbage cosines, skewed
-#: centroids) and DuckDB's list_cosine_similarity throws outright, so
-#: every vector operator excludes wrong-dim rows up front. NULL
-#: embeddings keep their documented per-spec semantics (propagate or
-#: drop), hence the two flavors.
-VALID_DIM_SQL = f"len(embedding) = {EMB_DIM}"
-VALID_OR_NULL_SQL = f"(embedding IS NULL OR len(embedding) = {EMB_DIM})"
+#: EMB_DIM — truncated writes, concatenation bugs, empty lists — or
+#: whose elements are NULL or NaN. zip_with silently folds over the
+#: shorter length (garbage cosines, skewed centroids), a NaN element
+#: wins every max and loses every min differently in each engine, and
+#: DuckDB's list_cosine_similarity throws outright, so every vector
+#: operator excludes such rows up front. NULL embeddings keep their
+#: documented per-spec semantics (propagate or drop), hence the two
+#: flavors.
+VALID_DIM_SQL = (
+    f"(len(embedding) = {EMB_DIM} "
+    "AND len(list_filter(embedding, x -> x IS NULL OR isnan(x))) = 0)"
+)
+VALID_OR_NULL_SQL = f"(embedding IS NULL OR {VALID_DIM_SQL})"
 
 
 def dot(x: Column, y: Column) -> Column:
@@ -89,16 +94,18 @@ def cosine(x: Column, y: Column) -> Column:
     return dot(x, y) / (F.sqrt(dot(x, x)) * F.sqrt(dot(y, y)))
 
 
-def valid_dim_or_null() -> Column:
-    """Spark twin of :data:`VALID_OR_NULL_SQL` over the raw ``embedding``
-    column (before any cast/rename)."""
-    return F.col("embedding").isNull() | (F.size("embedding") == EMB_DIM)
+def valid_vector(v: str = "embedding", or_null: bool = False) -> Column:
+    """Spark twin of :data:`VALID_DIM_SQL` over the array column ``v``:
+    EMB_DIM elements, none NULL or NaN. ``or_null`` also keeps a NULL
+    array (:data:`VALID_OR_NULL_SQL`)."""
+    ok = (F.size(v) == EMB_DIM) & F.forall(v, lambda x: x.isNotNull() & ~F.isnan(x))
+    return F.col(v).isNull() | ok if or_null else ok
 
 
 def _vectors(raw: DataFrame) -> DataFrame:
     """(vec_id, label, emb) of a raw embeddings frame: schema-valid or
     NULL rows, cast to ``array<double>``."""
-    return raw.filter(valid_dim_or_null()).select(
+    return raw.filter(valid_vector(or_null=True)).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
     )
 
@@ -890,7 +897,7 @@ def cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmeans_lloyd(spark: SparkSession, sf_dir: str, rounds: int) -> DataFrame:
     K, ROUNDS = 8, rounds
     # NULL embeddings are unclusterable and must be EXCLUDED, not merely
-    # tolerated (fuzz find #22): _emb's valid_dim_or_null keeps them, and
+    # tolerated (fuzz find #22): _emb's valid_vector(or_null=True) keeps them, and
     # a NULL-embedding row among the K lowest vec_ids becomes a NULL
     # centroid whose struct(score=NULL, cid) sorts FIRST in array_min's
     # ascending struct order — silently assigning EVERY vector to that

@@ -23,7 +23,7 @@ from spark_kinesis_article_analysis_spark.catalog import load
 from spark_kinesis_article_analysis_spark.registry import register
 from spark_kinesis_article_analysis_spark.functions.similarity import (
     VALID_OR_NULL_SQL,
-    valid_dim_or_null,
+    valid_vector,
 )
 
 
@@ -98,7 +98,7 @@ def udf_pandas_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = (
         load(spark, sf_dir, "embeddings")
-        .filter(valid_dim_or_null())
+        .filter(valid_vector(or_null=True))
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     )
     return e.select("vec_id", F.round(l2_norm("emb"), 6).alias("l2_norm"))

@@ -12,7 +12,7 @@ bookkeeping.
 The documents table carries no URL column, so the specs first derive a
 raw URL per document from its keys — the same JVM-expression-shared-
 with-the-oracle discipline as the codec params
-(``multimodal_codec._codec_params``): Python never invents a value the
+(``multimodal_codec.codec_params``): Python never invents a value the
 oracle can't restate, and the derivation deliberately sprays the
 equivalence classes (case, port, param order, tracking params,
 fragments) so normalization has real work to do. The OPERATOR under

@@ -14,9 +14,12 @@ clustering/scoring operators on BOTH engine sides (it otherwise poisons
 k-means round-1 centroid means asymmetrically: Spark's posexplode drops
 it, DuckDB's unnest NULLs the whole mean) and NULL-propagated by the
 norm operators (the pandas UDF previously killed its whole Arrow batch
-on np.dot(None, None)). These tests run every embeddings-only oracle
-spec against a corpus where the edge cases are always present, so
-parity cannot regress with a future testdata generation.
+on np.dot(None, None)). A vector with a NULL or NaN ELEMENT is as
+invalid as a wrong-dimension one (similarity.valid_vector and its twin
+VALID_DIM_SQL): every operator drops it on both engine sides. These
+tests run every embeddings-only oracle spec against a corpus where the
+edge cases are always present, so parity cannot regress with a future
+testdata generation.
 """
 
 from __future__ import annotations
@@ -43,6 +46,8 @@ _VECS = (
         for i in range(8, 30)
     ]
     + [(30, None, 2)]                                      # NULL embedding
+    + [(31, [0.25] * 20 + [float("nan")] + [0.25] * 43, 0)]  # NaN element
+    + [(32, [-0.25] * 40 + [None] + [-0.25] * 23, 1)]        # NULL element
 )
 
 

@@ -235,17 +235,112 @@ class TestPngCodec:
         assert decode_png_rgb8(payload) is None
 
 
+#: The eight oracle-backed codec specs -> the feature columns an error
+#: row must leave NULL.
+CODEC_FEATURES = {
+    "multimodal_codec_decode": ("sample_rate", "n_samples", "rms", "width", "height", "mean_r"),
+    "multimodal_codec_png": ("width", "height", "raw_bytes", "n_filter_types", "mean_r", "mean_b"),
+    "multimodal_codec_frames": ("frame_idx", "frame_samples", "frame_rms"),
+    "multimodal_codec_bmp": ("width", "height", "row_stride", "file_size", "mean_r", "mean_b"),
+    "multimodal_codec_gif": ("width", "height", "n_pixels", "palette_size", "mean_r", "mean_b"),
+    "multimodal_codec_jpeg": ("width", "height", "n_blocks_x", "mean_luma"),
+    "multimodal_codec_avi_frames": ("frame_idx", "width", "height", "n_frames", "mean_r"),
+    "multimodal_resize_nearest": ("out_width", "out_height", "mean_r", "mean_b"),
+}
+
+#: Hostile keys: a NULL key, corrupt keys (multiples of 97, both signs),
+#: and ordinary keys of both parities, some with NULL n_chars.
+_HOSTILE_DOCS = [(None, 5), (0, 0), (97, None), (-194, 17), (2**40 * 97, 3)] + [
+    (k, None if k % 7 == 0 else k * 13) for k in range(-9, 21) if k % 97
+]
+
+
+@pytest.fixture(scope="module")
+def hostile_docs(tmp_path_factory):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("codec_hostile_docs")
+    n = len(_HOSTILE_DOCS)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([k for k, _ in _HOSTILE_DOCS], pa.int64()),
+                "text": pa.array([None] * n, pa.string()),
+                "lang": pa.array(["en"] * n, pa.string()),
+                "source": pa.array(["hostile"] * n, pa.string()),
+                "n_chars": pa.array([c for _, c in _HOSTILE_DOCS], pa.int64()),
+            }
+        ),
+        d / "documents.parquet",
+    )
+    return str(d)
+
+
 class TestCodecSpecs:
-    def test_decode_error_rows_are_null_not_fatal(self, spark):
-        """Every 97th doc is magic-smashed; the decode spec must keep the
-        row with valid=false and NULL features (never raise, never drop)."""
+    @pytest.mark.parametrize("name", sorted(CODEC_FEATURES))
+    def test_error_rows_are_null_not_fatal(self, spark, hostile_docs, name):
+        """Corrupt-magic (every 97th key) and NULL-keyed docs keep exactly
+        one row with valid=false and every feature NULL — never raise,
+        never drop — except the WAV framing spec, which emits no row for
+        them (the decode spec owns error accounting)."""
+        df = SPECS[name].build(spark, hostile_docs).toPandas()
+        bad_keys = [k for k, _ in _HOSTILE_DOCS if k is None or k % 97 == 0]
+        is_bad = df["doc_id"].isna() | (df["doc_id"].fillna(1) % 97 == 0)
+        bad, good = df[is_bad], df[~is_bad]
+        assert len(good) > 0
+        if name == "multimodal_codec_frames":
+            assert bad.empty, bad
+            return
+        assert len(bad) == len(bad_keys), bad
+        assert bad["doc_id"].isna().sum() == 1
+        assert (~bad["valid"].astype(bool)).all()
+        for c in CODEC_FEATURES[name]:
+            assert bad[c].isna().all(), f"{name}: corrupt rows must have NULL {c}"
+        assert good["valid"].astype(bool).all()
+
+    @staticmethod
+    def _assert_scan_plus_arrow_stages_no_shuffle(spark, name):
+        """Scale shape: parquet scan pruned to the two key columns, one
+        ArrowEvalPython (synth) + one MapInPandas (decode), zero
+        exchanges — embarrassingly parallel at any partition count."""
+        df = SPECS[name].build(spark, SF_SMOKE)
+        assert inspect.count_exchanges(df) == 0, inspect.explain_str(df)
+        cols = inspect.read_schema_columns(df)
+        assert set(cols) == {"doc_id", "n_chars"}, cols
+        plan = inspect.explain_str(df)
+        assert "ArrowEvalPython" in plan and "MapInPandas" in plan, plan
+
+    def test_plan_is_scan_plus_arrow_stages_no_shuffle(self, spark):
+        self._assert_scan_plus_arrow_stages_no_shuffle(spark, "multimodal_codec_decode")
+
+    def test_png_plan_is_scan_plus_arrow_stages_no_shuffle(self, spark):
+        self._assert_scan_plus_arrow_stages_no_shuffle(spark, "multimodal_codec_png")
+
+    def test_frames_plan_no_shuffle(self, spark):
+        self._assert_scan_plus_arrow_stages_no_shuffle(spark, "multimodal_codec_frames")
+
+    @pytest.mark.parametrize(
+        "name",
+        sorted(
+            set(CODEC_FEATURES)
+            - {"multimodal_codec_decode", "multimodal_codec_png", "multimodal_codec_frames"}
+        ),
+    )
+    def test_other_codec_plans_are_scan_plus_arrow_stages_no_shuffle(self, spark, name):
+        self._assert_scan_plus_arrow_stages_no_shuffle(spark, name)
+
+    def test_smoke_corpus_corruption_is_the_exception(self, spark):
         df = SPECS["multimodal_codec_decode"].build(spark, SF_SMOKE).toPandas()
         bad = df[~df["valid"]]
         assert len(bad) > 0, "corrupt rows missing from the smoke corpus"
-        for c in ("sample_rate", "n_samples", "rms", "width", "height", "mean_r"):
-            assert bad[c].isna().all(), f"corrupt rows must have NULL {c}"
-        good = df[df["valid"]]
-        assert len(good) > len(bad)  # corruption is the exception path
+        assert len(df[df["valid"]]) > len(bad)
+
+    def test_png_tall_payloads_use_all_five_filters(self, spark):
+        """Every valid payload tall enough must have exercised all 5 filters."""
+        df = SPECS["multimodal_codec_png"].build(spark, SF_SMOKE).toPandas()
+        tall = df[df["valid"] & (df["height"] >= 5)]
+        assert len(tall) > 0 and (tall["n_filter_types"] == 5).all()
 
     def test_frames_cover_all_samples(self, spark):
         """Per-doc frame sizes must sum to the decoded sample count and
@@ -263,43 +358,6 @@ class TestCodecSpecs:
             idx = sorted(g["frame_idx"])
             assert idx == list(range(len(idx)))
             assert (g["frame_samples"] <= FRAME_SAMPLES).all()
-
-    def test_plan_is_scan_plus_arrow_stages_no_shuffle(self, spark):
-        """Scale shape: parquet scan pruned to the two key columns, one
-        ArrowEvalPython (synth) + one MapInPandas (decode), zero
-        exchanges — embarrassingly parallel at any partition count."""
-        df = SPECS["multimodal_codec_decode"].build(spark, SF_SMOKE)
-        assert inspect.count_exchanges(df) == 0, inspect.explain_str(df)
-        cols = inspect.read_schema_columns(df)
-        assert set(cols) == {"doc_id", "n_chars"}, cols
-        plan = inspect.explain_str(df)
-        assert "ArrowEvalPython" in plan and "MapInPandas" in plan, plan
-
-    def test_frames_plan_no_shuffle(self, spark):
-        df = SPECS["multimodal_codec_frames"].build(spark, SF_SMOKE)
-        assert inspect.count_exchanges(df) == 0, inspect.explain_str(df)
-
-    def test_png_error_rows_are_null_not_fatal(self, spark):
-        """Same error-row contract as the WAV/PPM decode spec: corrupt
-        PNGs keep their row with valid=false + NULL features."""
-        df = SPECS["multimodal_codec_png"].build(spark, SF_SMOKE).toPandas()
-        bad = df[~df["valid"]]
-        assert len(bad) > 0, "corrupt rows missing from the smoke corpus"
-        for c in ("width", "height", "raw_bytes", "n_filter_types", "mean_r", "mean_b"):
-            assert bad[c].isna().all(), f"corrupt rows must have NULL {c}"
-        good = df[df["valid"]]
-        assert len(good) > len(bad)
-        # every valid payload tall enough must have exercised all 5 filters
-        tall = good[good["height"] >= 5]
-        assert (tall["n_filter_types"] == 5).all()
-
-    def test_png_plan_is_scan_plus_arrow_stages_no_shuffle(self, spark):
-        df = SPECS["multimodal_codec_png"].build(spark, SF_SMOKE)
-        assert inspect.count_exchanges(df) == 0, inspect.explain_str(df)
-        cols = inspect.read_schema_columns(df)
-        assert set(cols) == {"doc_id", "n_chars"}, cols
-        plan = inspect.explain_str(df)
-        assert "ArrowEvalPython" in plan and "MapInPandas" in plan, plan
 
 
 class TestPngFuzz:
