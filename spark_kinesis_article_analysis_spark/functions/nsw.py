@@ -60,9 +60,9 @@ from spark_kinesis_article_analysis_spark.functions.similarity import (
     N_QUERIES,
     NONZERO_SQL,
     TOP_K,
+    _cosine_vectors,
     dot,
     plane_bit_sql,
-    valid_vector,
 )
 from spark_kinesis_article_analysis_spark.registry import register
 
@@ -87,13 +87,10 @@ NSW_BITS = 6
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .filter(valid_vector("emb") & F.exists("emb", lambda x: x != 0.0))
-        .filter(F.col("vec_id") >= N_QUERIES)
-        .withColumn("nrm", F.sqrt(dot(F.col("emb"), F.col("emb"))))
-    )
+    """(vec_id, emb, nrm) of the graph's nodes: the cosine vectors that
+    are not queries."""
+    e = _cosine_vectors(load(spark, sf_dir, "embeddings"))
+    return e.filter(F.col("vec_id") >= N_QUERIES).select("vec_id", "emb", "nrm")
 
 
 def nsw_edges(e: DataFrame) -> DataFrame:
@@ -140,14 +137,12 @@ def nsw_topk(spark: SparkSession, sf_dir: str, hops: int = NSW_HOPS) -> DataFram
         .localCheckpoint(eager=False)
     )
     q = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .filter(valid_vector("emb") & F.exists("emb", lambda x: x != 0.0))
+        _cosine_vectors(load(spark, sf_dir, "embeddings"))
         .filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("emb").alias("qe"),
-            F.sqrt(dot(F.col("emb"), F.col("emb"))).alias("qnrm"),
+            F.col("nrm").alias("qnrm"),
         )
     )
     # entry score reads (emb, nrm) from the entry row; edge score reads

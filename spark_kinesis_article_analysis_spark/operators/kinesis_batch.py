@@ -13,9 +13,10 @@ The oracle computes the same projection straight off ``documents``, so
 a hash match proves the producer + the service + the source preserved
 every payload byte and the parse inverted the envelope exactly.
 
-Lifecycle: one ThreadedMotoServer per driver process (port 0 — OS
-assigned, no collisions), started lazily and stopped atexit; one stream
-per (process, sf_dir), ingested once — the module-level registry makes
+Lifecycle: the shared in-process endpoint of ``operators/s3_batch``
+(one ThreadedMotoServer per driver process, port 0 — OS assigned, no
+collisions — started lazily and stopped atexit); one stream per
+(process, sf_dir), ingested once through ``s3_batch.built_once``, so
 rebuilds reuse the already-ingested stream instead of appending
 duplicates. The producer is technically at-least-once under task
 RETRY (as every real Kinesis producer is); against the local in-process
@@ -24,8 +25,6 @@ a duplicate loudly if one ever appeared.
 """
 
 from __future__ import annotations
-
-import atexit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,30 +35,16 @@ from spark_kinesis_article_analysis_spark.operators.article import (
     parse_articles,
     with_word_count,
 )
+from spark_kinesis_article_analysis_spark.operators.s3_batch import (
+    _endpoint,
+    built_once,
+    registered,
+)
 from spark_kinesis_article_analysis_spark.registry import register
 
 #: Shard count for the round-trip stream: >1 so the read is genuinely
 #: shard-parallel and partition-key routing is exercised.
 N_SHARDS = 4
-
-_STATE: dict = {"server": None, "port": None, "streams": {}}
-
-
-def _endpoint() -> str:
-    """Start (once per process) the in-process Kinesis API endpoint."""
-    if _STATE["server"] is None:
-        import logging
-
-        from moto.server import ThreadedMotoServer
-
-        # one log line per API call otherwise (werkzeug access log)
-        logging.getLogger("werkzeug").setLevel(logging.ERROR)
-        server = ThreadedMotoServer(port=0, verbose=False)
-        server.start()
-        _STATE["server"] = server
-        _STATE["port"] = server._server.socket.getsockname()[1]
-        atexit.register(server.stop)
-    return f"http://127.0.0.1:{_STATE['port']}"
 
 
 def kinesis_options(stream: str) -> dict:
@@ -79,26 +64,24 @@ def _ingested_stream(spark: SparkSession, sf_dir: str) -> str:
     process): distributed PutRecords of the wire-format article
     envelopes, partition-keyed by article_id — Kinesis' md5 hash-range
     routing spreads keys over the shards exactly as production would."""
-    stream = "articles-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if stream in _STATE["streams"]:
-        return stream
-    from pyspark import cloudpickle
-
     from spark_kinesis_article_analysis_spark.sources import kinesis_source as _ks
 
-    opts = kinesis_options(stream)
-    _ks._client(_ks._norm_options(opts)).create_stream(StreamName=stream, ShardCount=N_SHARDS)
-    cloudpickle.register_pickle_by_value(_ks)
-    payload = documents_as_article_payload(spark, sf_dir)
-    records = payload.select(
-        F.get_json_object(F.col("data"), "$.article_id").alias("partition_key"),
-        F.col("data"),
-    )
-    records.foreachPartition(
-        lambda rows: _ks.put_records_partition(opts, rows) and None
-    )
-    _STATE["streams"][stream] = True
-    return stream
+    def build(stream: str) -> str:
+        opts = kinesis_options(stream)
+        _ks._client(_ks._norm_options(opts)).create_stream(
+            StreamName=stream, ShardCount=N_SHARDS
+        )
+        registered(spark)
+        records = documents_as_article_payload(spark, sf_dir).select(
+            F.get_json_object(F.col("data"), "$.article_id").alias("partition_key"),
+            F.col("data"),
+        )
+        records.foreachPartition(
+            lambda rows: _ks.put_records_partition(opts, rows) and None
+        )
+        return stream
+
+    return built_once(sf_dir, "articles", build)
 
 
 @register(
@@ -127,25 +110,10 @@ FROM documents
     ),
 )
 def kinesis_api_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import kinesis_source as _ks
-    from spark_kinesis_article_analysis_spark.sources.kinesis_source import (
-        KinesisApiDataSource,
-    )
-
-    # by-value pickling: nothing guarantees the repo is on the Python
-    # workers' sys.path under the driver's session — the module imports
-    # only stdlib, pyspark and boto3, all importable in workers, and
-    # keeps its per-process client cache in sys.modules rather than
-    # this package.
-    cloudpickle.register_pickle_by_value(_ks)
-    spark.dataSource.register(KinesisApiDataSource)
     stream = _ingested_stream(spark, sf_dir)
-    reader = spark.read.format("kinesis_api")
-    for k, v in kinesis_options(stream).items():
-        reader = reader.option(k, v)
-    replayed = reader.load()
+    replayed = (
+        registered(spark).read.format("kinesis_api").options(**kinesis_options(stream)).load()
+    )
     parsed = with_word_count(parse_articles(replayed))
     return parsed.select(
         "article_id", "title", "author", "publish_date", "content", "word_count"

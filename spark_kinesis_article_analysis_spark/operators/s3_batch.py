@@ -3,47 +3,81 @@ parquet sink/source — the reference's S2/S3 output path (parquet on an
 object store, ``process_articles.py:88-90``) exercised against the real
 S3 wire API.
 
-Same lifecycle pattern as ``kinesis_batch``: one in-process moto server
-per driver (shared — both AWS services ride the same endpoint), one
-bucket+prefix per (process, sf_dir), written once; rebuilds reuse the
-committed manifests instead of appending duplicates. At 100 TB the
-identical plan runs against real S3 — the endpoint URL is the only
-change (jar-equipped deployments use S3A + a magic committer instead;
-the manifest protocol here is the same commit model).
+This module is also the manifest table's one front door for the
+wire-protocol queries (``s3_snapshot``, ``s3_incremental``,
+``kinesis_batch``, ``stream_wire`` and the ``streaming`` modules):
+
+* :func:`_endpoint` — one in-process moto server per driver (both AWS
+  services ride the same endpoint), started lazily, stopped atexit;
+* :func:`registered` — both wire sources pickled by value and both
+  DataSources registered on the session;
+* :func:`manifest_reader` / :func:`manifest_append` — the table's read
+  and append, options through :func:`s3_options`;
+* :func:`parquet_file_stream` and :func:`run_available_now` — a parquet
+  file as a stream and one bounded drain of a streaming query;
+* :func:`built_once` — one bucket+prefix per (process, sf_dir, stem),
+  built once; rebuilds reuse the committed manifests instead of
+  appending duplicates.
+
+At 100 TB the identical plan runs against real S3 — the endpoint URL is
+the only change (jar-equipped deployments use S3A + a magic committer
+instead; the manifest protocol here is the same commit model).
 """
 
 from __future__ import annotations
 
+import atexit
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-from spark_kinesis_article_analysis_spark.operators.kinesis_batch import _endpoint
 from spark_kinesis_article_analysis_spark.registry import register
-
-_WRITTEN: dict[str, bool] = {}
 
 BUCKET = "analytics-output"
 
+FORMAT = "s3_parquet_manifest"
+
+_SERVER: dict = {}
+
+_BUILT: dict = {}
+
+
+def _endpoint() -> str:
+    """Start (once per process) the in-process AWS API endpoint."""
+    if not _SERVER:
+        import logging
+
+        from moto.server import ThreadedMotoServer
+
+        # one log line per API call otherwise (werkzeug access log)
+        logging.getLogger("werkzeug").setLevel(logging.ERROR)
+        server = ThreadedMotoServer(port=0, verbose=False)
+        server.start()
+        atexit.register(server.stop)
+        _SERVER["port"] = server._server.socket.getsockname()[1]
+    return f"http://127.0.0.1:{_SERVER['port']}"
+
 
 def s3_options(prefix: str) -> dict:
+    """Connector options for the table at ``prefix``, keyed the way
+    ``sources/s3_objects`` reads them (lower case; Spark's reader and
+    writer options are case-insensitive)."""
     return {
         "bucket": BUCKET,
         "prefix": prefix,
-        "regionName": "us-east-1",
-        "endpointUrl": _endpoint(),
-        "awsAccessKeyId": "testing",
-        "awsSecretKey": "testing",
+        "regionname": "us-east-1",
+        "endpointurl": _endpoint(),
+        "awsaccesskeyid": "testing",
+        "awssecretkey": "testing",
     }
 
 
 def ensure_bucket():
     """Create the shared test bucket if absent (idempotent) and return
-    the boto3 client. ONE copy of the create/``BucketAlreadyOwnedByYou``
-    dance — five modules had grown their own byte-identical copies
-    (self-review r12), so an endpoint/credential fix would predictably
-    have missed one."""
+    the boto3 client."""
     from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
 
-    client = _s3o._s3({k.lower(): v for k, v in s3_options("").items()})
+    client = _s3o._s3(s3_options(""))
     try:
         client.create_bucket(Bucket=BUCKET)
     except client.exceptions.BucketAlreadyOwnedByYou:
@@ -51,50 +85,111 @@ def ensure_bucket():
     return client
 
 
-_STREAMED: dict[str, str] = {}
+def registered(spark: SparkSession) -> SparkSession:
+    """``spark`` with both wire sources usable: ``s3_objects`` and
+    ``kinesis_source`` pickled by value (nothing guarantees the package
+    is on the Python workers' path under a driver's session; both import
+    only stdlib, pyspark, pyarrow and boto3) and both DataSources
+    registered."""
+    from pyspark import cloudpickle
+
+    from spark_kinesis_article_analysis_spark.sources import kinesis_source as _ks
+    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
+
+    for module in (_ks, _s3o):
+        cloudpickle.register_pickle_by_value(module)
+    spark.dataSource.register(_ks.KinesisApiDataSource)
+    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
+    return spark
+
+
+def manifest_reader(spark: SparkSession, prefix: str, stream: bool = False):
+    """The batch (or, with ``stream``, streaming) reader of the table
+    at ``prefix``."""
+    spark = registered(spark)
+    return (spark.readStream if stream else spark.read).format(FORMAT).options(
+        **s3_options(prefix)
+    )
+
+
+def manifest_append(df: DataFrame, prefix: str, **options) -> None:
+    """Append ``df`` to the table at ``prefix``: one manifest commit.
+    ``options`` are extra writer options (``epochId``)."""
+    registered(df.sparkSession)
+    df.write.format(FORMAT).mode("append").options(**s3_options(prefix), **options).save()
+
+
+def manifest_stream(df: DataFrame, prefix: str, checkpoint: str, name: str) -> None:
+    """One bounded drain of the streaming frame ``df`` into the table at
+    ``prefix``: one epoch-keyed manifest per micro-batch. Restartable —
+    the same checkpoint resumes, and a replayed epoch overwrites its own
+    manifest."""
+    registered(df.sparkSession)
+    writer = df.writeStream.format(FORMAT).options(**s3_options(prefix))
+    run_available_now(writer.option("checkpointLocation", checkpoint), name)
+
+
+def run_available_now(writer, name: str) -> None:
+    """Start ``writer`` with the availableNow trigger and block until
+    it has drained what was there at start. A query still running after
+    300 s is stopped and raised as a ``TimeoutError``: the callers'
+    memo (:func:`built_once`) must never serve a half-written table."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(
+            f"{name}: availableNow query did not finish within 300s "
+            f"(exception: {q.exception()})"
+        )
+
+
+def parquet_file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The parquet at ``path`` as a file stream. The file stream source
+    needs a DIRECTORY, so a single file (the sf_dir layout) streams via
+    its parent directory and a filename glob that keeps sibling tables
+    out."""
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if os.path.isfile(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return reader.parquet(path)
+
+
+def built_once(sf_dir: str, stem: str, build):
+    """``build(prefix)``'s result, built once per (process, sf_dir,
+    stem); ``prefix`` is ``<stem>-<sf_dir basename>``, so two stems on
+    one sf_dir never share a table. The bucket exists before ``build``
+    runs. A build that raises is not memoized: the next call retries
+    instead of serving a half-written table."""
+    prefix = f"{stem}-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    if prefix not in _BUILT:
+        ensure_bucket()
+        _BUILT[prefix] = build(prefix)
+    return _BUILT[prefix]
 
 
 def streamed_prefix_once(sf_dir: str, stem: str, run) -> str:
-    """Shared lifecycle for the wire-streaming specs (stream_wire,
-    gate_stream, ann_stream): ensure the bucket, run the streaming
-    build ONCE per (process, sf_dir), memoize the manifest prefix so
-    rebuilds reuse the committed manifests instead of appending
-    duplicates. ``run(prefix, checkpoint_dir)`` must block until the
-    stream has drained (availableNow) — a raise leaves the prefix
-    un-memoized so the next call retries rather than serving a
-    half-written table. Extracted from three near-identical module
-    copies (self-review r12)."""
+    """The wire-streaming specs' lifecycle (``stream_wire``,
+    ``gate_stream``, ``join_stream``, ``table_stream``, ``ann_stream``):
+    :func:`built_once` around ``run(prefix, checkpoint_dir)``, which
+    must block until the stream has drained (availableNow)."""
     import tempfile
 
-    prefix = f"{stem}-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if prefix in _STREAMED:
+    def build(prefix: str) -> str:
+        run(prefix, tempfile.mkdtemp(prefix=stem.replace("-", "_") + "_ckpt_"))
         return prefix
-    ensure_bucket()
-    run(prefix, tempfile.mkdtemp(prefix=stem.replace("-", "_") + "_ckpt_"))
-    _STREAMED[prefix] = prefix
-    return prefix
+
+    return built_once(sf_dir, stem, build)
 
 
 def _written_prefix(spark: SparkSession, sf_dir: str) -> str:
-    from pyspark import cloudpickle
-
     from spark_kinesis_article_analysis_spark.catalog import load
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
 
-    prefix = "documents-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if prefix in _WRITTEN:
+    def build(prefix: str) -> str:
+        manifest_append(load(spark, sf_dir, "documents"), prefix)
         return prefix
-    cloudpickle.register_pickle_by_value(_s3o)
-    ensure_bucket()
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    d = load(spark, sf_dir, "documents")
-    opts = s3_options(prefix)
-    writer = d.write.format("s3_parquet_manifest").mode("append")
-    for k, v in opts.items():
-        writer = writer.option(k, v)
-    writer.save()
-    _WRITTEN[prefix] = True
-    return prefix
+
+    return built_once(sf_dir, "documents", build)
 
 
 @register(
@@ -115,14 +210,7 @@ SELECT doc_id, text, lang, source, n_chars FROM documents
     ),
 )
 def s3_manifest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
     prefix = _written_prefix(spark, sf_dir)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(prefix).items():
-        reader = reader.option(k, v)
-    return reader.load().select("doc_id", "text", "lang", "source", "n_chars")
+    return manifest_reader(spark, prefix).load().select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    )

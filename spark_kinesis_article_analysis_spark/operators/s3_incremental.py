@@ -32,37 +32,35 @@ primitives a 100 TB training pipeline actually runs daily:
   delete-matched (semi-join position planning) + append — with
   append/delete/merge the format carries the full DML surface.
 
-Both specs reuse ``s3_snapshot._prepared``'s table state (append evens,
-snapshot, append odds, compact — once per process), so the whole
-lifecycle chain is exercised against ONE table the way a real one
-evolves, not against per-spec fixtures.
+The changes-since, snapshot-at-time and vacuum specs reuse
+``s3_snapshot._prepared``'s table state (append evens, snapshot, append
+odds, compact — once per process), so that lifecycle chain is exercised
+against ONE table the way a real one evolves; the DML, zone-map and
+schema-evolution specs each build their own table once per process
+(``operators/s3_batch.built_once``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
+from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.operators.s3_batch import (
+    built_once,
+    manifest_append,
+    manifest_reader,
+    s3_options,
+)
 from spark_kinesis_article_analysis_spark.operators.s3_snapshot import (
     _COLS,
     _prepared,
 )
 from spark_kinesis_article_analysis_spark.registry import register
+from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
 
-_VACUUMED: dict[str, bool] = {}
 
-
-def _reader(spark: SparkSession, prefix: str):
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(prefix).items():
-        reader = reader.option(k, v)
-    return reader
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load(spark, sf_dir, "documents").select(*_COLS)
 
 
 @register(
@@ -86,7 +84,7 @@ SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id % 2 <> 0
 def s3_manifest_changes_since(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = _prepared(spark, sf_dir)
     return (
-        _reader(spark, st["prefix"])
+        manifest_reader(spark, st["prefix"])
         .option("sinceManifest", st["snap_key"])
         .load()
         .select(*_COLS)
@@ -99,25 +97,21 @@ def _vacuumed(spark: SparkSession, sf_dir: str) -> dict:
     behind), vacuum it, fail loudly if vacuum missed it. Once per
     (process, sf_dir)."""
     st = _prepared(spark, sf_dir)
-    if st["prefix"] in _VACUUMED:
-        return st
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
 
-    opts = {k.lower(): v for k, v in s3_options(st["prefix"]).items()}
-    orphan = f"{st['prefix']}/data/part-deadbeef-aborted-attempt.parquet"
-    _s3o._s3(opts).put_object(
-        Bucket=opts["bucket"], Key=orphan, Body=b"not committed"
-    )
-    deleted = _s3o.vacuum_orphans(opts)
-    if orphan not in deleted:
-        raise AssertionError(
-            f"vacuum_orphans missed the planted orphan: deleted={deleted!r}"
+    def build(_: str) -> dict:
+        opts = s3_options(st["prefix"])
+        orphan = f"{st['prefix']}/data/part-deadbeef-aborted-attempt.parquet"
+        _s3o._s3(opts).put_object(
+            Bucket=opts["bucket"], Key=orphan, Body=b"not committed"
         )
-    _VACUUMED[st["prefix"]] = True
-    return st
+        deleted = _s3o.vacuum_orphans(opts)
+        if orphan not in deleted:
+            raise AssertionError(
+                f"vacuum_orphans missed the planted orphan: deleted={deleted!r}"
+            )
+        return st
 
-
-_DELETED: dict[str, str] = {}
+    return built_once(sf_dir, "docsnap-vacuumed", build)
 
 
 def _deleted_prefix(spark: SparkSession, sf_dir: str) -> str:
@@ -125,31 +119,18 @@ def _deleted_prefix(spark: SparkSession, sf_dir: str) -> str:
     divisible by 7 — every object is touched), merge-on-read: one
     positional delete manifest, zero object rewrites. Once per
     (process, sf_dir); fails loudly if the delete matched nothing."""
-    from pyspark import cloudpickle
 
-    from spark_kinesis_article_analysis_spark.catalog import load
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import ensure_bucket
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    prefix = "docdel-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if prefix in _DELETED:
+    def build(prefix: str) -> str:
+        d = _documents(spark, sf_dir)
+        manifest_append(d, prefix)
+        key = _s3o.delete_where(spark, s3_options(prefix), "doc_id % 7 = 0")
+        # loud-failure guard — but only when there was anything TO match:
+        # the degenerate empty-corpus parity drive runs this fixture too
+        if not key and d.head(1):
+            raise AssertionError("delete_where matched nothing — fixture broken")
         return prefix
-    ensure_bucket()
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    opts = s3_options(prefix)
-    d = load(spark, sf_dir, "documents").select(*_COLS)
-    w = d.write.format("s3_parquet_manifest").mode("append")
-    for k, v in opts.items():
-        w = w.option(k, v)
-    w.save()
-    key = _s3o.delete_where(spark, opts, "doc_id % 7 = 0")
-    # loud-failure guard — but only when there was anything TO match:
-    # the degenerate empty-corpus parity drive runs this fixture too
-    if not key and d.head(1):
-        raise AssertionError("delete_where matched nothing — fixture broken")
-    _DELETED[prefix] = prefix
-    return prefix
+
+    return built_once(sf_dir, "docdel", build)
 
 
 @register(
@@ -174,7 +155,7 @@ SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id % 7 <> 0
 )
 def s3_manifest_row_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = _deleted_prefix(spark, sf_dir)
-    return _reader(spark, prefix).load().select(*_COLS)
+    return manifest_reader(spark, prefix).load().select(*_COLS)
 
 
 @register(
@@ -197,62 +178,41 @@ SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id % 2 = 0
     ),
 )
 def s3_manifest_snapshot_at_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
     st = _prepared(spark, sf_dir)
-    opts = {k.lower(): v for k, v in s3_options(st["prefix"]).items()}
+    opts = s3_options(st["prefix"])
     bodies = dict(_s3o._load_manifests(_s3o._s3(opts), opts["bucket"], opts["prefix"]))
     at_us = bodies[st["snap_key"]]["committed_at_us"]
     return (
-        _reader(spark, st["prefix"])
+        manifest_reader(spark, st["prefix"])
         .option("snapshotAtUs", str(at_us))
         .load()
         .select(*_COLS)
     )
 
 
-_STATS: dict[str, str] = {}
-
-
 def _stats_prefix(spark: SparkSession, sf_dir: str) -> str:
     """Build a range-chunked table (four appends, one object each, by
     doc_id quartile) so the zone maps are selective. Once per
     (process, sf_dir)."""
-    from pyspark import cloudpickle
     from pyspark.sql import functions as F
 
-    from spark_kinesis_article_analysis_spark.catalog import load
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import ensure_bucket
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
+    def build(prefix: str) -> str:
+        d = _documents(spark, sf_dir)
+        [[lo, hi]] = d.agg(F.min("doc_id"), F.max("doc_id")).collect()
+        if lo is None:  # empty corpus (degenerate parity drive): one
+            manifest_append(d, prefix)  # empty append commits the schema
+            return prefix
+        step = max((hi - lo + 4) // 4, 1)
+        for i in range(4):
+            chunk = d.where(
+                (d.doc_id >= lo + i * step) & (d.doc_id < lo + (i + 1) * step)
+                if i < 3
+                else (d.doc_id >= lo + 3 * step)
+            )
+            manifest_append(chunk.coalesce(1), prefix)
+        return prefix
 
-    prefix = "docstat-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if prefix in _STATS:
-        return prefix
-    ensure_bucket()
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    d = load(spark, sf_dir, "documents").select(*_COLS)
-    [[lo, hi]] = d.agg(F.min("doc_id"), F.max("doc_id")).collect()
-    if lo is None:  # empty corpus (degenerate parity drive): one
-        w = d.write.format("s3_parquet_manifest").mode("append")
-        for k, v in s3_options(prefix).items():  # empty append commits
-            w = w.option(k, v)  # the schema-carrying manifest
-        w.save()
-        _STATS[prefix] = prefix
-        return prefix
-    step = max((hi - lo + 4) // 4, 1)
-    for i in range(4):
-        chunk = d.where(
-            (d.doc_id >= lo + i * step) & (d.doc_id < lo + (i + 1) * step)
-            if i < 3
-            else (d.doc_id >= lo + 3 * step)
-        ).coalesce(1)
-        w = chunk.write.format("s3_parquet_manifest").mode("append")
-        for k, v in s3_options(prefix).items():
-            w = w.option(k, v)
-        w.save()
-    _STATS[prefix] = prefix
-    return prefix
+    return built_once(sf_dir, "docstat", build)
 
 
 @register(
@@ -279,11 +239,8 @@ WHERE doc_id >= 100 AND doc_id < 200
 )
 def s3_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = _stats_prefix(spark, sf_dir)
-    df = _reader(spark, prefix).option("dataSkipping", "true").load().select(*_COLS)
+    df = manifest_reader(spark, prefix).option("dataSkipping", "true").load().select(*_COLS)
     return df.where((df.doc_id >= 100) & (df.doc_id < 200))
-
-
-_MERGED: dict[str, str] = {}
 
 
 def _merged_prefix(spark: SparkSession, sf_dir: str) -> str:
@@ -292,39 +249,26 @@ def _merged_prefix(spark: SparkSession, sf_dir: str) -> str:
     utf8proc case mapping diverges on exotic code points, the r8 fuzz
     lesson) + inserts (doc_id % 11 == 0 re-keyed +10M). Once per
     (process, sf_dir)."""
-    from pyspark import cloudpickle
     from pyspark.sql import functions as F
 
-    from spark_kinesis_article_analysis_spark.catalog import load
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import ensure_bucket
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    prefix = "docmerge-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if prefix in _MERGED:
+    def build(prefix: str) -> str:
+        d = _documents(spark, sf_dir)
+        manifest_append(d, prefix)
+        v2 = F.concat(F.lit("v2:"), F.col("text")).alias("text")
+        updates = d.where(d.doc_id % 5 == 0).select("doc_id", v2, "lang", "source", "n_chars")
+        inserts = d.where(d.doc_id % 11 == 0).select(
+            (F.col("doc_id") + 10_000_000).alias("doc_id"), v2, "lang", "source", "n_chars"
+        )
+        delete_key = _s3o.merge_into(
+            spark, s3_options(prefix), updates.unionByName(inserts), "doc_id"
+        )
+        # loud-failure guard — skipped on an empty corpus (degenerate
+        # parity drive), where a merge legitimately matches nothing
+        if not delete_key and d.head(1):
+            raise AssertionError("merge_into matched no target rows — fixture broken")
         return prefix
-    ensure_bucket()
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    opts = s3_options(prefix)
-    d = load(spark, sf_dir, "documents").select(*_COLS)
-    w = d.write.format("s3_parquet_manifest").mode("append")
-    for k, v in opts.items():
-        w = w.option(k, v)
-    w.save()
-    v2 = F.concat(F.lit("v2:"), F.col("text")).alias("text")
-    updates = d.where(d.doc_id % 5 == 0).select("doc_id", v2, "lang", "source", "n_chars")
-    inserts = d.where(d.doc_id % 11 == 0).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), v2, "lang", "source", "n_chars"
-    )
-    delete_key = _s3o.merge_into(
-        spark, opts, updates.unionByName(inserts), "doc_id"
-    )
-    # loud-failure guard — skipped on an empty corpus (degenerate
-    # parity drive), where a merge legitimately matches nothing
-    if not delete_key and d.head(1):
-        raise AssertionError("merge_into matched no target rows — fixture broken")
-    _MERGED[prefix] = prefix
-    return prefix
+
+    return built_once(sf_dir, "docmerge", build)
 
 
 @register(
@@ -355,10 +299,7 @@ FROM documents WHERE doc_id % 11 = 0
 )
 def s3_manifest_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = _merged_prefix(spark, sf_dir)
-    return _reader(spark, prefix).load().select(*_COLS)
-
-
-_EVOLVED: dict[str, str] = {}
+    return manifest_reader(spark, prefix).load().select(*_COLS)
 
 
 def _evolved_prefix(spark: SparkSession, sf_dir: str) -> str:
@@ -366,30 +307,16 @@ def _evolved_prefix(spark: SparkSession, sf_dir: str) -> str:
     (even doc_ids) writes WITHOUT ``n_chars`` — the pre-evolution
     schema — append 2 (odd) writes the full five columns. Once per
     (process, sf_dir)."""
-    from pyspark import cloudpickle
 
-    from spark_kinesis_article_analysis_spark.catalog import load
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import ensure_bucket
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    prefix = "docevo-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if prefix in _EVOLVED:
+    def build(prefix: str) -> str:
+        d = load(spark, sf_dir, "documents")
+        manifest_append(
+            d.where(d.doc_id % 2 == 0).select("doc_id", "text", "lang", "source"), prefix
+        )
+        manifest_append(d.where(d.doc_id % 2 != 0).select(*_COLS), prefix)
         return prefix
-    ensure_bucket()
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    d = load(spark, sf_dir, "documents")
 
-    def append(df: DataFrame) -> None:
-        w = df.write.format("s3_parquet_manifest").mode("append")
-        for k, v in s3_options(prefix).items():
-            w = w.option(k, v)
-        w.save()
-
-    append(d.where(d.doc_id % 2 == 0).select("doc_id", "text", "lang", "source"))
-    append(d.where(d.doc_id % 2 != 0).select(*_COLS))
-    _EVOLVED[prefix] = prefix
-    return prefix
+    return built_once(sf_dir, "docevo", build)
 
 
 @register(
@@ -415,7 +342,7 @@ FROM documents
 )
 def s3_manifest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix = _evolved_prefix(spark, sf_dir)
-    return _reader(spark, prefix).load().select(*_COLS)
+    return manifest_reader(spark, prefix).load().select(*_COLS)
 
 
 @register(
@@ -438,4 +365,4 @@ SELECT doc_id, text, lang, source, n_chars FROM documents
 )
 def s3_manifest_vacuumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = _vacuumed(spark, sf_dir)
-    return _reader(spark, st["prefix"]).load().select(*_COLS)
+    return manifest_reader(spark, st["prefix"]).load().select(*_COLS)

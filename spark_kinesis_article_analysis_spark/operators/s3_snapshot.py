@@ -15,9 +15,9 @@ two prove the MANIFEST LOG semantics that make the format operable at
   tombstoning rewrite) into one. Oracle = all documents: a hash match
   proves compaction changed enumeration cost, not content.
 
-Setup is idempotent per (process, sf_dir), same lifecycle pattern as
-``operators/s3_batch`` / ``operators/kinesis_batch`` (shared in-process
-moto endpoint, one prefix per sf_dir, written once).
+Setup is idempotent per (process, sf_dir) through the shared front
+door in ``operators/s3_batch`` (in-process moto endpoint, one prefix
+per sf_dir, built once).
 """
 
 from __future__ import annotations
@@ -26,58 +26,36 @@ from pyspark.sql import DataFrame, SparkSession
 
 from spark_kinesis_article_analysis_spark.operators.s3_batch import (
     BUCKET,
-    ensure_bucket,
+    built_once,
+    manifest_append,
+    manifest_reader,
     s3_options,
 )
 from spark_kinesis_article_analysis_spark.registry import register
-
-_STATE: dict[str, dict] = {}
 
 _COLS = ["doc_id", "text", "lang", "source", "n_chars"]
 
 
 def _prepared(spark: SparkSession, sf_dir: str) -> dict:
     """Append evens, snapshot, append odds, compact — once per process."""
-    prefix = "docsnap-" + sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    if prefix in _STATE:
-        return _STATE[prefix]
-    from pyspark import cloudpickle
-
     from spark_kinesis_article_analysis_spark.catalog import load
     from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
 
-    ensure_bucket()
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    opts = s3_options(prefix)
-    d = load(spark, sf_dir, "documents").select(*_COLS)
+    def build(prefix: str) -> dict:
+        opts = s3_options(prefix)
+        d = load(spark, sf_dir, "documents").select(*_COLS)
+        manifest_append(d.where(d.doc_id % 2 == 0), prefix)
+        [snap_key] = _s3o._manifest_keys(_s3o._s3(opts), BUCKET, prefix)
+        manifest_append(d.where(d.doc_id % 2 != 0), prefix)
+        _s3o.compact_manifests(opts)
+        return {"prefix": prefix, "snap_key": snap_key}
 
-    def append(df: DataFrame) -> None:
-        w = df.write.format("s3_parquet_manifest").mode("append")
-        for k, v in opts.items():
-            w = w.option(k, v)
-        w.save()
-
-    append(d.where(d.doc_id % 2 == 0))
-    low = {k.lower(): v for k, v in opts.items()}
-    [snap_key] = _s3o._manifest_keys(_s3o._s3(low), BUCKET, prefix)
-    append(d.where(d.doc_id % 2 != 0))
-    _s3o.compact_manifests(opts)
-    _STATE[prefix] = {"prefix": prefix, "snap_key": snap_key}
-    return _STATE[prefix]
+    return built_once(sf_dir, "docsnap", build)
 
 
 def _read(spark: SparkSession, sf_dir: str, snapshot: bool) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
     st = _prepared(spark, sf_dir)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(st["prefix"]).items():
-        reader = reader.option(k, v)
+    reader = manifest_reader(spark, st["prefix"])
     if snapshot:
         reader = reader.option("snapshotManifest", st["snap_key"])
     return reader.load().select(*_COLS)

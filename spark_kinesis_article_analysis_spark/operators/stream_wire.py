@@ -43,7 +43,9 @@ from spark_kinesis_article_analysis_spark.operators.kinesis_batch import (
     kinesis_options,
 )
 from spark_kinesis_article_analysis_spark.operators.s3_batch import (
-    s3_options,
+    manifest_reader,
+    manifest_stream,
+    registered,
     streamed_prefix_once,
 )
 from spark_kinesis_article_analysis_spark.registry import register
@@ -58,38 +60,11 @@ def _streamed_prefix(spark: SparkSession, sf_dir: str) -> str:
     :func:`operators.s3_batch.streamed_prefix_once`."""
 
     def _run(prefix: str, ckpt: str) -> None:
-        from pyspark import cloudpickle
-
-        from spark_kinesis_article_analysis_spark.sources import kinesis_source as _ks
-        from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-        cloudpickle.register_pickle_by_value(_ks)
-        cloudpickle.register_pickle_by_value(_s3o)
-        spark.dataSource.register(_ks.KinesisApiDataSource)
-        spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
         stream = _ingested_stream(spark, sf_dir)
-
-        reader = spark.readStream.format("kinesis_api")
-        for k, v in kinesis_options(stream).items():
-            reader = reader.option(k, v)
-        parsed = with_word_count(parse_articles(reader.load())).select(*_COLS)
-
-        writer = parsed.writeStream.format("s3_parquet_manifest").option(
-            "checkpointLocation", ckpt
-        )
-        for k, v in s3_options(prefix).items():
-            writer = writer.option(k, v)
-        q = writer.trigger(availableNow=True).start()
-        finished = q.awaitTermination(300)
-        if not finished:
-            # memoizing a partial run would serve a half-written table
-            # to every later call in the process — fail loudly instead
-            # (streamed_prefix_once only memoizes after _run returns)
-            q.stop()
-            raise TimeoutError(
-                "stream_wire_end_to_end: availableNow query did not finish "
-                f"within 300s (exception: {q.exception()})"
-            )
+        reader = registered(spark).readStream.format("kinesis_api")
+        raw = reader.options(**kinesis_options(stream)).load()
+        parsed = with_word_count(parse_articles(raw)).select(*_COLS)
+        manifest_stream(parsed, prefix, ckpt, "stream_wire_end_to_end")
 
     return streamed_prefix_once(sf_dir, "stream-wire", _run)
 
@@ -120,14 +95,5 @@ FROM documents
     ),
 )
 def stream_wire_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
     prefix = _streamed_prefix(spark, sf_dir)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(prefix).items():
-        reader = reader.option(k, v)
-    return reader.load().select(*_COLS)
+    return manifest_reader(spark, prefix).load().select(*_COLS)

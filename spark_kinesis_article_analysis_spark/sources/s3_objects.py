@@ -71,10 +71,13 @@ This module implements that protocol as a Spark 4 Python DataSource:
   filters are returned to Spark for post-scan re-evaluation, so stats
   are an IO optimization, never a correctness input.
 
-Options (shared surface with the kinesis source): ``bucket``,
-``prefix``, ``endpointUrl``, ``regionName``, ``awsAccessKeyId``,
-``awsSecretKey``, plus ``snapshotManifest`` / ``sinceManifest`` /
-``withRowPosition`` (read).
+Options (shared surface with the kinesis source; keys are matched case-
+insensitively): ``bucket``, ``prefix``, ``endpointUrl``, ``regionName``,
+``awsAccessKeyId``, ``awsSecretKey``; for reads ``snapshotManifest`` /
+``snapshotAtUs`` (epoch micros, the last commit at-or-before it) /
+``sinceManifest`` / ``withRowPosition`` / ``dataSkipping`` (the zone-map
+pruning reader); for batch writes ``epochId`` (commit at the epoch-keyed
+manifest, the foreachBatch exactly-once fence).
 Tested against the real S3 API served by moto
 (``tests/test_s3_manifest.py``, ``tests/test_s3_incremental.py``),
 including abort/rogue-object invisibility, append semantics,
@@ -209,19 +212,19 @@ def _now_us() -> int:
     return time.time_ns() // 1_000
 
 
-def _manifest_keys(client, bucket: str, prefix: str) -> list[str]:
-    keys: list[str] = []
-    token = None
+def _list_keys(client, bucket: str, prefix: str) -> Iterator[str]:
+    """Every key under ``prefix``, one paginated LIST per 1000 keys."""
+    kwargs = {"Bucket": bucket, "Prefix": prefix}
     while True:
-        kwargs = {"Bucket": bucket, "Prefix": f"{prefix}/manifests/"}
-        if token:
-            kwargs["ContinuationToken"] = token
         resp = client.list_objects_v2(**kwargs)
-        keys.extend(o["Key"] for o in resp.get("Contents", []))
+        yield from (o["Key"] for o in resp.get("Contents", []))
         if not resp.get("IsTruncated"):
-            break
-        token = resp.get("NextContinuationToken")
-    return sorted(keys)
+            return
+        kwargs["ContinuationToken"] = resp.get("NextContinuationToken")
+
+
+def _manifest_keys(client, bucket: str, prefix: str) -> list[str]:
+    return sorted(_list_keys(client, bucket, f"{prefix}/manifests/"))
 
 
 def _load_manifests(client, bucket: str, prefix: str) -> list[tuple[str, dict]]:
@@ -239,16 +242,31 @@ def _load_manifests(client, bucket: str, prefix: str) -> list[tuple[str, dict]]:
     return out
 
 
+def _pos(key: str, body: dict) -> tuple[int, str]:
+    """A manifest's commit-log position: (body time, key) is the log's
+    total order."""
+    return (body.get("committed_at_us", 0), key)
+
+
+def _position(manifests: list[tuple[str, dict]], key: str, option: str) -> tuple[int, str]:
+    """The log position of the committed manifest ``key``, named by the
+    read ``option``; a key that is not committed is a loud error."""
+    for k, body in manifests:
+        if k == key:
+            return _pos(k, body)
+    raise ValueError(f"{option} {key!r} is not a committed manifest")
+
+
 def _resolve_snapshot(options: dict, manifests: list[tuple[str, dict]]):
-    """The read's snapshot pin: ``snapshotManifest`` (a key) wins; else
-    ``snapshotAtUs`` (epoch micros) resolves AS-OF-TIMESTAMP to the
-    last manifest committed at-or-before that instant — the
-    Iceberg/Delta timestamp-travel twin of the key pin. A timestamp
-    before the first commit is a loud error (an empty read there would
-    silently masquerade as an empty table)."""
+    """The log position of the read's snapshot pin (None = head):
+    ``snapshotManifest`` (a key) wins; else ``snapshotAtUs`` (epoch
+    micros) resolves AS-OF-TIMESTAMP to the last manifest committed
+    at-or-before that instant — the Iceberg/Delta timestamp-travel twin
+    of the key pin. A timestamp before the first commit is a loud error
+    (an empty read there would silently masquerade as an empty table)."""
     key = options.get("snapshotmanifest")
     if key is not None:
-        return key
+        return _position(manifests, key, "snapshotManifest")
     at = options.get("snapshotatus")
     if at is None:
         return None
@@ -256,7 +274,7 @@ def _resolve_snapshot(options: dict, manifests: list[tuple[str, dict]]):
     best = None
     for k, body in manifests:  # commit-log order
         if body.get("committed_at_us", 0) <= at_us:
-            best = k
+            best = _pos(k, body)
     if best is None:
         raise ValueError(
             f"snapshotAtUs {at_us} precedes the first commit "
@@ -266,22 +284,17 @@ def _resolve_snapshot(options: dict, manifests: list[tuple[str, dict]]):
 
 
 def _active_manifests(
-    manifests: list[tuple[str, dict]], snapshot_key: str | None = None
+    manifests: list[tuple[str, dict]], end: tuple[int, str] | None = None
 ) -> list[tuple[str, dict]]:
     """Apply snapshot truncation, then compaction tombstones.
 
-    Snapshot: keep only manifests committed at-or-before the named one
-    (commit-log order). Tombstones: a manifest's ``replaces`` list names
+    Snapshot: keep only manifests at-or-before log position ``end``
+    (None = head). Tombstones: a manifest's ``replaces`` list names
     manifest keys it subsumes — those are dropped, but only tombstones
     from manifests INSIDE the snapshot apply, so a post-snapshot
     compaction cannot rewrite history under a pinned read."""
-    if snapshot_key is not None:
-        keys = [k for k, _ in manifests]
-        if snapshot_key not in keys:
-            raise ValueError(
-                f"snapshotManifest {snapshot_key!r} is not a committed manifest"
-            )
-        manifests = manifests[: keys.index(snapshot_key) + 1]
+    if end is not None:
+        manifests = [(k, b) for k, b in manifests if _pos(k, b) <= end]
     dead: set[str] = set()
     for _, body in manifests:
         dead.update(body.get("replaces", []))
@@ -535,6 +548,22 @@ def _commit_epoch_manifest(options: dict, schema, messages, epoch: int) -> None:
     )
 
 
+def _put_manifest(options: dict, body: dict) -> str:
+    """PUT ``body`` as a new timestamp-keyed manifest — THE atomic commit
+    point of a batch append, a compaction or a delete: until this
+    object exists, nothing it lists is reachable by any reader. The
+    timestamp prefix keeps these names monotonic (the ordering authority
+    is still the body's ``committed_at_us``). Returns the key."""
+    key = (
+        f"{options['prefix']}/manifests/"
+        f"manifest-{body['committed_at_us']:020d}-{uuid.uuid4().hex[:8]}.json"
+    )
+    _s3(options).put_object(
+        Bucket=options["bucket"], Key=key, Body=json.dumps(body).encode("utf-8")
+    )
+    return key
+
+
 def _delete_task_objects(options: dict, messages) -> None:
     """Abort of either writer: delete the objects this attempt's tasks
     wrote (a ``None`` message is a task that sent none)."""
@@ -575,19 +604,7 @@ class S3ManifestWriter(DataSourceArrowWriter):
                 self.options, self.schema, messages, int(self.options["epochid"])
             )
             return
-        body = _manifest_body(messages, self.schema)
-        # THE atomic commit point: a single PUT. Until this object
-        # exists, nothing the tasks wrote is reachable by any reader.
-        # The timestamp prefix keeps batch manifest names monotonic
-        # (ordering authority is still the body's committed_at_us).
-        _s3(self.options).put_object(
-            Bucket=self.options["bucket"],
-            Key=(
-                f"{self.options['prefix']}/manifests/"
-                f"manifest-{body['committed_at_us']:020d}-{uuid.uuid4().hex[:8]}.json"
-            ),
-            Body=json.dumps(body).encode("utf-8"),
-        )
+        _put_manifest(self.options, _manifest_body(messages, self.schema))
 
     def abort(self, messages) -> None:
         _delete_task_objects(self.options, messages)
@@ -628,6 +645,44 @@ class _ObjectPartition(InputPartition):
         #: positional delete vector for this object (sorted row indexes
         #: from active delete manifests) — merge-on-read row deletes
         self.deletes = deletes
+
+
+def _object_partitions(
+    manifests: list[tuple[str, dict]],
+    end: tuple[int, str] | None = None,
+    start: tuple[int, str] | None = None,
+    filters: Sequence = (),
+) -> list[_ObjectPartition]:
+    """The one object walk behind both readers: data objects listed up
+    to log position ``end`` (None = head) MINUS those listed up to
+    ``start`` (None = none), in first-listed order, each carrying the
+    positional delete vector active at ``end``.
+
+    The difference is taken over OBJECT sets, not manifests: a
+    compaction manifest re-lists every historical object, so a
+    manifest-grain cut would replay the whole table as changes. Object
+    identity is append-immutable (tasks never rewrite data objects), so
+    the difference is exact. ``filters`` (an AND) drop objects whose
+    zone-map stats prove no row can match — planning-time IO
+    elimination, the manifest-level twin of parquet row-group pruning;
+    objects without stats always survive and Spark re-applies every
+    filter post-scan."""
+    active = _active_manifests(manifests, end)
+    seen: set[str] = set()
+    if start is not None:
+        seen = {k for _, body in _active_manifests(manifests, start) for k in body["objects"]}
+    stats = _active_object_stats(active) if filters else {}
+    dv = _active_delete_vectors(active)  # merge-on-read row deletes
+    out: list[_ObjectPartition] = []
+    for _, body in active:
+        for k in body["objects"]:
+            if k in seen:
+                continue
+            seen.add(k)  # an object belongs once
+            if k in stats and any(_stats_exclude(stats[k], f) for f in filters):
+                continue
+            out.append(_ObjectPartition(k, dv.get(k, ())))
+    return out
 
 
 def _active_object_stats(active: list[tuple[str, dict]]) -> dict:
@@ -713,50 +768,20 @@ class S3ManifestReader(DataSourceReader):
         self.pruning_filters: list = []
 
     def partitions(self) -> Sequence[_ObjectPartition]:
-        client = _s3(self.options)
+        """The snapshot (or head) read; ``sinceManifest`` makes it the
+        incremental (CDC-shaped) read of only the rows appended AFTER
+        that commit, and composes with a snapshot pin for a (since,
+        snapshot] range read."""
         manifests = _load_manifests(
-            client, self.options["bucket"], self.options["prefix"]
+            _s3(self.options), self.options["bucket"], self.options["prefix"]
         )
-        active = _active_manifests(manifests, _resolve_snapshot(self.options, manifests))
-        # sinceManifest: incremental (CDC-shaped) read — only rows
-        # appended AFTER the named commit. Computed as a set difference
-        # of the two snapshots' OBJECT lists (objects now minus objects
-        # as-of-since), not "manifests after since": a compaction
-        # manifest committed after `since` re-lists every historical
-        # object, so the manifest-grain cut would replay the whole
-        # table as changes. Object identity is append-immutable (tasks
-        # never rewrite data objects), so the diff is exact. Composes
-        # with snapshotManifest for a (since, snapshot] range read.
-        baseline: set[str] = set()
         since = self.options.get("sincemanifest")
-        if since is not None:
-            baseline = {
-                k
-                for _, body in _active_manifests(manifests, since)
-                for k in body["objects"]
-            }
-        keys: list[str] = []
-        seen: set[str] = set()
-        for _, body in active:
-            for k in body["objects"]:
-                if k not in seen and k not in baseline:
-                    seen.add(k)  # belt+braces: an object belongs once
-                    keys.append(k)
-        if self.pruning_filters:
-            # zone-map data skipping: drop objects whose recorded
-            # column ranges PROVE the pushed filters (an AND) can't
-            # match — planning-time IO elimination, the manifest-level
-            # twin of parquet row-group pruning. Objects without stats
-            # always survive; Spark re-applies every filter post-scan.
-            st = _active_object_stats(active)
-            keys = [
-                k
-                for k in keys
-                if k not in st
-                or not any(_stats_exclude(st[k], f) for f in self.pruning_filters)
-            ]
-        dv = _active_delete_vectors(active)  # merge-on-read row deletes
-        return [_ObjectPartition(k, dv.get(k, ())) for k in keys]
+        return _object_partitions(
+            manifests,
+            _resolve_snapshot(self.options, manifests),
+            None if since is None else _position(manifests, since, "sinceManifest"),
+            self.pruning_filters,
+        )
 
     def read(self, partition: _ObjectPartition) -> Iterator:
         if partition is None:
@@ -768,7 +793,7 @@ class S3ManifestReader(DataSourceReader):
             self.options,
             self.table_schema,
             partition.key,
-            deletes=getattr(partition, "deletes", ()),
+            deletes=partition.deletes,
             with_pos=_truthy(self.options.get("withrowposition")),
         )
 
@@ -847,10 +872,11 @@ class S3ManifestPruningReader(S3ManifestReader):
     ``pushFilters`` makes Spark demand
     ``spark.sql.python.filterPushdown.enabled=true`` (it refuses to
     plan otherwise), so the capability lives in this subclass and
-    ``DataSource.reader()`` selects it only when the active session has
-    the conf on — a vanilla session keeps working, it just scans every
-    object. The repo's own sessions (session.get_spark and the
-    registry's per-build pin) enable it."""
+    ``DataSource.reader()`` selects it only for a read that sets the
+    ``dataSkipping`` option — every other read takes the base reader,
+    which plans on any session. A ``dataSkipping`` read needs a session
+    with the conf on (the repo's session.get_spark and the registry's
+    per-build pin set it)."""
 
     def pushFilters(self, filters):
         """Save every filter for stats-based object pruning in
@@ -876,15 +902,16 @@ class S3ManifestStreamReader(DataSourceStreamReader):
     * ``latestOffset`` = one manifest listing — metadata-only driver
       work, O(active log) GETs of KB-scale bodies (compaction bounds
       it), zero data reads.
-    * batch (a, b] = data objects first listed by a manifest in that
-      log range, MINUS objects already listed at-or-before ``a`` — the
-      same object-set difference as the batch ``sinceManifest`` read,
-      so a compaction manifest inside the range (which re-lists every
-      historical object) contributes NOTHING and lands as an empty
-      micro-batch instead of replaying the table.
+    * batch (a, b] = data objects listed at-or-before ``b`` MINUS
+      objects listed at-or-before ``a`` — the batch ``sinceManifest``
+      read's object walk (``_object_partitions``), so a compaction
+      manifest inside the range (which re-lists every historical
+      object) contributes NOTHING and lands as an empty micro-batch
+      instead of replaying the table.
     * ``read`` = executor-side object GET -> Arrow batches, adapted to
-      the plan-time table schema (shared `_read_object_adapted`); one
-      input partition per new object, read parallelism = append width.
+      the plan-time table schema and masked by the object's delete
+      vector as of ``b`` (shared `_read_object_adapted`); one input
+      partition per new object, read parallelism = append width.
 
     Replay determinism: manifests at-or-before a stamped offset are
     immutable in log position (batch manifests are never rewritten;
@@ -896,7 +923,9 @@ class S3ManifestStreamReader(DataSourceStreamReader):
     objects; the stream sees manifests, not epochs, and will not re-read
     a consumed position — pin upstream replays with the sink's epoch
     fence before consuming downstream (the same contract Delta's
-    idempotent stream writes require).
+    idempotent stream writes require). Row deletes have the same edge:
+    a delete committed after the batch that consumed its object is not
+    retracted downstream — the stream appends, it never retracts.
 
     Options: the shared surface plus ``sinceManifest`` as the STARTING
     position (begin after that commit; default = table start)."""
@@ -912,17 +941,10 @@ class S3ManifestStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         since = self.options.get("sincemanifest")
-        if since is not None:
-            bodies = dict(self._log())
-            if since not in bodies:
-                raise ValueError(
-                    f"sinceManifest {since!r} is not a committed manifest"
-                )
-            return {
-                "committed_at_us": bodies[since].get("committed_at_us", 0),
-                "key": since,
-            }
-        return {"committed_at_us": 0, "key": ""}
+        if since is None:
+            return {"committed_at_us": 0, "key": ""}
+        at, key = _position(self._log(), since, "sinceManifest")
+        return {"committed_at_us": at, "key": key}
 
     def latestOffset(self) -> dict:
         log = self._log()
@@ -932,28 +954,18 @@ class S3ManifestStreamReader(DataSourceStreamReader):
         return {"committed_at_us": body.get("committed_at_us", 0), "key": key}
 
     def partitions(self, start: dict, end: dict) -> Sequence[_ObjectPartition]:
-        s = (int(start.get("committed_at_us", 0)), start.get("key", ""))
-        e = (int(end.get("committed_at_us", 0)), end.get("key", ""))
-        if e <= s:
-            return []
-        seen: set[str] = set()
-        new: list[str] = []
-        for key, body in self._log():  # commit-log order
-            pos = (body.get("committed_at_us", 0), key)
-            if pos > e:
-                break  # a later batch's manifests: their objects stay new
-            for o in body["objects"]:
-                if pos <= s:
-                    seen.add(o)
-                elif o not in seen:
-                    seen.add(o)
-                    new.append(o)
-        return [_ObjectPartition(k) for k in new]
+        return _object_partitions(
+            self._log(),
+            (int(end.get("committed_at_us", 0)), end.get("key", "")),
+            (int(start.get("committed_at_us", 0)), start.get("key", "")),
+        )
 
     def read(self, partition: _ObjectPartition) -> Iterator:
         if partition is None:
             return  # empty-batch probe (see S3ManifestReader.read)
-        yield from _read_object_adapted(self.options, self.table_schema, partition.key)
+        yield from _read_object_adapted(
+            self.options, self.table_schema, partition.key, deletes=partition.deletes
+        )
 
     def commit(self, end: dict) -> None:
         pass  # position durability is the engine's checkpoint, not ours
@@ -1034,20 +1046,12 @@ def compact_manifests(options: dict) -> str:
     manifest's key. Driver-side by design: compaction moves metadata
     (KBs), not data."""
     opts = _norm(options)
-    client = _s3(opts)
-    manifests = _load_manifests(client, opts["bucket"], opts["prefix"])
+    manifests = _load_manifests(_s3(opts), opts["bucket"], opts["prefix"])
     if not manifests:
         raise ValueError("compact_manifests: nothing to compact")
     active = _active_manifests(manifests)
-    objects: list[str] = []
-    seen: set[str] = set()
-    for _, body in active:
-        for k in body["objects"]:
-            if k not in seen:
-                seen.add(k)
-                objects.append(k)
     body = {
-        "objects": objects,
+        "objects": [p.key for p in _object_partitions(manifests)],
         "rows": sum(b["rows"] for _, b in active),
         "schema_ddl": active[-1][1]["schema_ddl"],
         "committed_at_us": _now_us(),
@@ -1065,14 +1069,7 @@ def compact_manifests(options: dict) -> str:
     st = _active_object_stats(active)
     if st:
         body["object_stats"] = st
-    key = (
-        f"{opts['prefix']}/manifests/"
-        f"manifest-{body['committed_at_us']:020d}-{uuid.uuid4().hex[:8]}.json"
-    )
-    client.put_object(
-        Bucket=opts["bucket"], Key=key, Body=json.dumps(body).encode("utf-8")
-    )
-    return key
+    return _put_manifest(opts, body)
 
 
 def commit_deletes(options: dict, deletes: dict) -> str:
@@ -1085,8 +1082,7 @@ def commit_deletes(options: dict, deletes: dict) -> str:
     positions across earlier deletes), so vectors from independent
     deletes union commutatively."""
     opts = _norm(options)
-    client = _s3(opts)
-    manifests = _load_manifests(client, opts["bucket"], opts["prefix"])
+    manifests = _load_manifests(_s3(opts), opts["bucket"], opts["prefix"])
     if not manifests:
         raise ValueError("commit_deletes: no committed table to delete from")
     active = _active_manifests(manifests)
@@ -1102,14 +1098,7 @@ def commit_deletes(options: dict, deletes: dict) -> str:
         "replaces": [],
         "deletes": {k: sorted({int(p) for p in v}) for k, v in deletes.items() if v},
     }
-    key = (
-        f"{opts['prefix']}/manifests/"
-        f"manifest-{body['committed_at_us']:020d}-{uuid.uuid4().hex[:8]}.json"
-    )
-    client.put_object(
-        Bucket=opts["bucket"], Key=key, Body=json.dumps(body).encode("utf-8")
-    )
-    return key
+    return _put_manifest(opts, body)
 
 
 def delete_where(spark, options: dict, condition: str) -> str:
@@ -1128,11 +1117,10 @@ def delete_where(spark, options: dict, condition: str) -> str:
     per-object vectors, so only the manifest body changes."""
     from pyspark.sql import functions as F
 
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in options.items():
-        reader = reader.option(k, v)
     matched = (
-        reader.option("withRowPosition", "true")
+        spark.read.format("s3_parquet_manifest")
+        .options(**options)
+        .option("withRowPosition", "true")
         .load()
         .filter(condition)
         .groupBy("_object_key")
@@ -1165,10 +1153,12 @@ def merge_into(spark, options: dict, source, key: str) -> str:
     when no target row matched, i.e. a pure append)."""
     from pyspark.sql import functions as F
 
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    target = reader.option("withRowPosition", "true").load()
+    target = (
+        spark.read.format("s3_parquet_manifest")
+        .options(**options)
+        .option("withRowPosition", "true")
+        .load()
+    )
     matched = (
         target.join(source.select(F.col(key)).distinct(), key, "left_semi")
         .groupBy("_object_key")
@@ -1178,10 +1168,7 @@ def merge_into(spark, options: dict, source, key: str) -> str:
         r["_object_key"]: [int(p) for p in r["pos"]] for r in matched.toLocalIterator()
     }
     delete_key = commit_deletes(options, deletes) if deletes else ""
-    w = source.write.format("s3_parquet_manifest").mode("append")
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.save()
+    source.write.format("s3_parquet_manifest").mode("append").options(**options).save()
     return delete_key
 
 
@@ -1205,19 +1192,11 @@ def vacuum_orphans(options: dict) -> list[str]:
     referenced: set[str] = set()
     for _, body in _load_manifests(client, opts["bucket"], opts["prefix"]):
         referenced.update(body["objects"])
-    orphans: list[str] = []
-    token = None
-    while True:
-        kwargs = {"Bucket": opts["bucket"], "Prefix": f"{opts['prefix']}/data/"}
-        if token:
-            kwargs["ContinuationToken"] = token
-        resp = client.list_objects_v2(**kwargs)
-        orphans.extend(
-            o["Key"] for o in resp.get("Contents", []) if o["Key"] not in referenced
-        )
-        if not resp.get("IsTruncated"):
-            break
-        token = resp.get("NextContinuationToken")
+    orphans = [
+        k
+        for k in _list_keys(client, opts["bucket"], f"{opts['prefix']}/data/")
+        if k not in referenced
+    ]
     for k in orphans:
         client.delete_object(Bucket=opts["bucket"], Key=k)
     return sorted(orphans)

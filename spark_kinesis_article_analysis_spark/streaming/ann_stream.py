@@ -54,7 +54,14 @@ from spark_kinesis_article_analysis_spark.functions.similarity import (
     _ivf_probes,
     ivf_score_and_rank,
 )
-from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
+from spark_kinesis_article_analysis_spark.operators.s3_batch import (
+    manifest_append,
+    manifest_reader,
+    parquet_file_stream,
+    registered,
+    run_available_now,
+    streamed_prefix_once,
+)
 from spark_kinesis_article_analysis_spark.registry import register
 
 
@@ -65,13 +72,6 @@ def run_ann_stream(
     against the IVF index of the same corpus; commit per-batch top-k
     through the manifest sink's epoch fence. Restartable: the same
     checkpoint resumes and replayed epochs overwrite idempotently."""
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-
     # static index (built once; reused by every micro-batch) — the same
     # helpers ivf_index_and_probes builds the batch index with
     cents, assigned = _ivf_index(
@@ -79,49 +79,26 @@ def run_ann_stream(
     )
     assigned = assigned.localCheckpoint(eager=False)
 
-    opts = s3_options(prefix)
-
     def score_batch(batch: DataFrame, batch_id: int) -> None:
         probes = _ivf_probes(_cosine_vectors(batch), cents, IVF_NPROBE)
         # the SHARED score-and-rank back half — one scoring discipline
         # for batch and stream (self-review r12 killed the local copy)
         topk = ivf_score_and_rank(assigned, probes)
-        writer = topk.write.format("s3_parquet_manifest").mode("append").option(
-            "epochId", str(batch_id)  # the foreachBatch idempotence fence
-        )
-        for k, v in opts.items():
-            writer = writer.option(k, v)
-        writer.save()
+        # epochId: the foreachBatch idempotence fence
+        manifest_append(topk, prefix, epochId=str(batch_id))
 
-    schema = spark.read.parquet(emb_path).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isfile(emb_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(emb_path))
-        stream_path = os.path.dirname(emb_path)
-    else:
-        stream_path = emb_path
-    stream = reader.parquet(stream_path).filter(F.col("vec_id") < N_QUERIES)
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    # register before start: a registration made only inside
+    # score_batch does not reach the session its write resolves in
+    queries = parquet_file_stream(registered(spark), emb_path).filter(
+        F.col("vec_id") < N_QUERIES
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_ann: availableNow query did not finish within 300s "
-            f"(exception: {q.exception()})"
-        )
+    writer = queries.writeStream.foreachBatch(score_batch)
+    run_available_now(writer.option("checkpointLocation", checkpoint), "stream_ann")
 
 
 def _streamed_prefix(spark: SparkSession, sf_dir: str) -> str:
     """Serve the query stream once per (process, sf_dir) — the shared
     wire-stream lifecycle (operators/s3_batch.streamed_prefix_once)."""
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import (
-        streamed_prefix_once,
-    )
-
     return streamed_prefix_once(
         sf_dir,
         "stream-ann",
@@ -162,15 +139,5 @@ SELECT query_id, neighbor_id, cosine FROM (
     ),
 )
 def stream_ann_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
     prefix = _streamed_prefix(spark, sf_dir)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(prefix).items():
-        reader = reader.option(k, v)
-    return reader.load().select("query_id", "neighbor_id", "cosine")
+    return manifest_reader(spark, prefix).load().select("query_id", "neighbor_id", "cosine")

@@ -32,8 +32,6 @@ so throughput is source-bounded at any corpus size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,7 +40,12 @@ from spark_kinesis_article_analysis_spark.functions.gopher import (
     gopher_signals,
 )
 from spark_kinesis_article_analysis_spark.functions.text import tokens_col
-from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
+from spark_kinesis_article_analysis_spark.operators.s3_batch import (
+    manifest_reader,
+    manifest_stream,
+    parquet_file_stream,
+    streamed_prefix_once,
+)
 from spark_kinesis_article_analysis_spark.registry import register
 
 _COLS = [
@@ -73,42 +76,13 @@ def run_gate_stream(
     """One bounded (availableNow) run of the gated stream into the
     manifest sink. Callers own bucket/prefix lifecycle; restartable —
     same checkpoint resumes, replayed epochs fence idempotently."""
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    schema = spark.read.parquet(docs_path).schema  # metadata-only driver read
-    reader = spark.readStream.schema(schema)
-    if os.path.isfile(docs_path):
-        # the file stream source requires a DIRECTORY basePath; a single
-        # file (the sf_dir fixture layout) streams via its parent dir +
-        # a filename glob so sibling tables never enter the stream
-        reader = reader.option("pathGlobFilter", os.path.basename(docs_path))
-        docs_path = os.path.dirname(docs_path)
-    stream = reader.parquet(docs_path)
-    writer = gated_stream(stream).writeStream.format("s3_parquet_manifest").option(
-        "checkpointLocation", checkpoint
-    )
-    for k, v in s3_options(prefix).items():
-        writer = writer.option(k, v)
-    q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_quality_gate: availableNow query did not finish "
-            f"within 300s (exception: {q.exception()})"
-        )
+    gated = gated_stream(parquet_file_stream(spark, docs_path))
+    manifest_stream(gated, prefix, checkpoint, "stream_quality_gate")
 
 
 def _streamed_prefix(spark: SparkSession, sf_dir: str) -> str:
     """Run the gated stream once per (process, sf_dir); rebuilds reuse
     the committed manifests — the shared wire-stream lifecycle."""
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import (
-        streamed_prefix_once,
-    )
-
     return streamed_prefix_once(
         sf_dir,
         "stream-gate",
@@ -138,14 +112,5 @@ def _streamed_prefix(spark: SparkSession, sf_dir: str) -> str:
     ),
 )
 def stream_quality_gate_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
     prefix = _streamed_prefix(spark, sf_dir)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(prefix).items():
-        reader = reader.option(k, v)
-    return reader.load().select(*_COLS)
+    return manifest_reader(spark, prefix).load().select(*_COLS)

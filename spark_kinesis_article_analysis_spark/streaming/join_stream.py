@@ -42,13 +42,16 @@ sides deterministically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.operators.article import _EPOCH_2024
-from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
+from spark_kinesis_article_analysis_spark.operators.s3_batch import (
+    manifest_reader,
+    manifest_stream,
+    parquet_file_stream,
+    streamed_prefix_once,
+)
 from spark_kinesis_article_analysis_spark.registry import register
 
 _COLS = ["doc_id", "lang", "source", "n_chars", "imp_ts", "click_ts"]
@@ -103,46 +106,17 @@ def run_join_stream(
     """One bounded (availableNow) run of the dual-stream join into the
     manifest sink. Restartable: same checkpoint resumes; replayed
     epochs fence idempotently at the sink."""
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    schema = spark.read.parquet(docs_path).schema  # metadata-only driver read
-
-    def _stream(path: str) -> DataFrame:
-        reader = spark.readStream.schema(schema)
-        if os.path.isfile(path):
-            # file stream source needs a DIRECTORY basePath (the
-            # gate_stream lesson); glob keeps sibling tables out
-            reader = reader.option("pathGlobFilter", os.path.basename(path))
-            path = os.path.dirname(path)
-        return reader.parquet(path)
-
     # two INDEPENDENT stream reads of the same source — each side is
     # its own unbounded input with its own watermark, exactly the
     # two-topic production shape
-    out = joined(impressions(_stream(docs_path)), clicks(_stream(docs_path)))
-    writer = out.writeStream.format("s3_parquet_manifest").option(
-        "checkpointLocation", checkpoint
+    out = joined(
+        impressions(parquet_file_stream(spark, docs_path)),
+        clicks(parquet_file_stream(spark, docs_path)),
     )
-    for k, v in s3_options(prefix).items():
-        writer = writer.option(k, v)
-    q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_stream_join: availableNow query did not finish "
-            f"within 300s (exception: {q.exception()})"
-        )
+    manifest_stream(out, prefix, checkpoint, "stream_stream_join")
 
 
 def _streamed_prefix(spark: SparkSession, sf_dir: str) -> str:
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import (
-        streamed_prefix_once,
-    )
-
     return streamed_prefix_once(
         sf_dir,
         "stream-join",
@@ -177,14 +151,5 @@ WHERE doc_id % 3 = 0
     ),
 )
 def stream_stream_join_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
     prefix = _streamed_prefix(spark, sf_dir)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(prefix).items():
-        reader = reader.option(k, v)
-    return reader.load().select(*_COLS)
+    return manifest_reader(spark, prefix).load().select(*_COLS)

@@ -11,8 +11,10 @@ processes each append exactly once — here literally
 
 with offsets = commit-log positions riding in the engine checkpoint,
 batches = object-set differences (a compaction inside the range lands
-as an EMPTY batch, not a table replay), and the sink's epoch fence
-making the whole hop idempotent across restarts.
+as an EMPTY batch, not a table replay) read through each object's
+row-delete vector as of the batch's end, and the sink's epoch fence
+making the whole hop idempotent across restarts. A delete committed
+after the batch that consumed its object is not retracted downstream.
 
 The registered spec streams the ``s3_snapshot`` lifecycle table (two
 appends + a compaction) into a fresh table and reads THAT back — the
@@ -36,7 +38,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
+from spark_kinesis_article_analysis_spark.operators.s3_batch import (
+    manifest_reader,
+    manifest_stream,
+    streamed_prefix_once,
+)
 from spark_kinesis_article_analysis_spark.operators.s3_snapshot import (
     _COLS,
     _prepared,
@@ -55,36 +61,13 @@ def run_table_stream(
     log into table ``dst_prefix``. Restartable: the checkpoint carries
     the source's commit-log position; replayed epochs fence at the
     sink."""
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
-    reader = spark.readStream.format("s3_parquet_manifest")
-    for k, v in s3_options(src_prefix).items():
-        reader = reader.option(k, v)
+    reader = manifest_reader(spark, src_prefix, stream=True)
     if since is not None:
         reader = reader.option("sinceManifest", since)
-    writer = reader.load().writeStream.format("s3_parquet_manifest").option(
-        "checkpointLocation", checkpoint
-    )
-    for k, v in s3_options(dst_prefix).items():
-        writer = writer.option(k, v)
-    q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "table_stream: availableNow query did not finish within "
-            f"300s (exception: {q.exception()})"
-        )
+    manifest_stream(reader.load(), dst_prefix, checkpoint, "table_stream")
 
 
 def _streamed_prefix(spark: SparkSession, sf_dir: str) -> str:
-    from spark_kinesis_article_analysis_spark.operators.s3_batch import (
-        streamed_prefix_once,
-    )
-
     src = _prepared(spark, sf_dir)["prefix"]  # appends + compaction done
     return streamed_prefix_once(
         sf_dir,
@@ -113,14 +96,5 @@ SELECT doc_id, text, lang, source, n_chars FROM documents
     ),
 )
 def stream_table_to_table_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import cloudpickle
-
-    from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
-
-    cloudpickle.register_pickle_by_value(_s3o)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
     prefix = _streamed_prefix(spark, sf_dir)
-    reader = spark.read.format("s3_parquet_manifest")
-    for k, v in s3_options(prefix).items():
-        reader = reader.option(k, v)
-    return reader.load().select(*_COLS)
+    return manifest_reader(spark, prefix).load().select(*_COLS)

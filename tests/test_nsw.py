@@ -65,9 +65,9 @@ class TestNswRecallFloor:
         from spark_kinesis_article_analysis_spark import catalog
         from spark_kinesis_article_analysis_spark.functions import nsw
         from spark_kinesis_article_analysis_spark.functions.similarity import (
-            EMB_DIM,
             N_QUERIES,
             TOP_K,
+            _cosine_vectors,
             dot,
         )
         from spark_kinesis_article_analysis_spark.registry import all_specs
@@ -83,14 +83,12 @@ class TestNswRecallFloor:
         e = nsw._corpus(spark, SF_CORRECTNESS)
         edges = nsw.nsw_edges(e).localCheckpoint(eager=False)
         q = (
-            catalog.load(spark, SF_CORRECTNESS, "embeddings")
-            .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-            .filter((F.size("emb") == EMB_DIM) & F.exists("emb", lambda x: x != 0.0))
+            _cosine_vectors(catalog.load(spark, SF_CORRECTNESS, "embeddings"))
             .filter(F.col("vec_id") < N_QUERIES)
             .select(
                 F.col("vec_id").alias("query_id"),
                 F.col("emb").alias("qe"),
-                F.sqrt(dot(F.col("emb"), F.col("emb"))).alias("qnrm"),
+                F.col("nrm").alias("qnrm"),
             )
         )
         score = F.round(

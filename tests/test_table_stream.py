@@ -1,8 +1,9 @@
 """Manifest table as a streaming source (S3ManifestStreamReader) and
 the table-to-table hop (streaming/table_stream.py): incremental
 consumption exactly-once across drains and restarts, compaction-in-
-range emptiness, and sinceManifest starting positions — the semantics
-the identity oracle can't see."""
+range emptiness, sinceManifest starting positions, and committed row
+deletes staying deleted — the semantics the identity oracle can't
+see."""
 
 from __future__ import annotations
 
@@ -114,6 +115,27 @@ class TestTableStream:
         _write_table(spark, src, [3])
         run_table_stream(spark, src, dst, str(tmp_path / "ckpt"), since=pin)
         assert sorted(r.k for r in _read_table(spark, dst).collect()) == [3]
+
+    def test_stream_masks_committed_row_deletes(self, spark, tmp_path):
+        """Rows a committed DELETE removed stay removed through the hop:
+        each streamed object carries its delete vector, as the batch
+        read does."""
+        from spark_kinesis_article_analysis_spark.operators.s3_batch import s3_options
+        from spark_kinesis_article_analysis_spark.sources.s3_objects import (
+            delete_where,
+        )
+        from spark_kinesis_article_analysis_spark.streaming.table_stream import (
+            run_table_stream,
+        )
+
+        _ensure_bucket()
+        _register(spark)
+        src, dst = _fresh_prefix("src"), _fresh_prefix("dst")
+        _write_table(spark, src, [1, 2, 3, 4])
+        assert delete_where(spark, s3_options(src), "k % 2 = 0")
+        assert sorted(r.k for r in _read_table(spark, src).collect()) == [1, 3]
+        run_table_stream(spark, src, dst, str(tmp_path / "ckpt"))
+        assert sorted(r.k for r in _read_table(spark, dst).collect()) == [1, 3]
 
     def test_stream_read_matches_batch_read(self, spark, tmp_path):
         """The streamed hop of a multi-append table equals the batch
