@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 #: Brants et al.'s backoff multiplier ("we use alpha = 0.4").
@@ -112,7 +113,7 @@ FROM s GROUP BY doc_id
 )
 def text_trigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", r"\s+").alias("toks")
+        "doc_id", tokens_col().alias("toks")
     )
     model = docs.filter(F.col("doc_id") % 2 == 0)
     scored_docs = docs.filter((F.col("doc_id") % 2 == 1) & (F.size("toks") >= 3))

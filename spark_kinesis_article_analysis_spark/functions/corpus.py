@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.operators.skew import salted_join, two_phase_agg
 from spark_kinesis_article_analysis_spark.registry import register
 from spark_kinesis_article_analysis_spark.functions.similarity import (
@@ -380,7 +381,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; hot terms in the scoring join are AQE-skew-splittable, and
     the corpus total rides a 1-row broadcast."""
     d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", r"\s+")).alias("term"))
+    toks = d.select("doc_id", F.explode(tokens_col()).alias("term"))
     counts = toks.groupBy("term").agg(F.count("*").cast("double").alias("tc"))
     total = counts.agg(F.sum("tc").alias("n"))
     scored = toks.join(counts, "term").crossJoin(F.broadcast(total))

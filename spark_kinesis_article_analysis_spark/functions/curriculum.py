@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 
@@ -59,7 +60,7 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         "source",
-        F.round(F.col("n_chars") / F.size(F.split("text", r"\s+")), 6).alias("score"),
+        F.round(F.col("n_chars") / F.size(tokens_col()), 6).alias("score"),
     )
 
 

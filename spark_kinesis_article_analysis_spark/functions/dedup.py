@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
 from spark_kinesis_article_analysis_spark.functions.folds import materialize_fold
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 #: SimHash signature width (bits). 32 keeps the generated SQL compact and
@@ -76,7 +77,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """doc_id -> exploded distinct word n-gram shingles."""
-    t = df.select("doc_id", F.split("text", r"\s+").alias("t"))
+    t = df.select("doc_id", tokens_col().alias("t"))
     sh = F.filter(
         F.transform(
             "t",

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 #: add-k smoothing constant for the bigram model (Lidstone; 0.5 =
@@ -94,7 +95,7 @@ GROUP BY big.doc_id
 )
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", r"\s+").alias("toks")
+        "doc_id", tokens_col().alias("toks")
     )
     big = d.filter(F.size("toks") >= 2).select(
         "doc_id",
@@ -164,7 +165,7 @@ def bpe_train(
     lazily checkpointed per round so round r+1's plan doesn't replay
     rounds 1..r)."""
     d = load(spark, sf_dir, "documents")
-    words = d.select(F.explode(F.split("text", r"\s+")).alias("word")).filter(
+    words = d.select(F.explode(tokens_col()).alias("word")).filter(
         F.length("word") > 0
     )
     vocab = (
@@ -235,7 +236,7 @@ def text_bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, table = bpe_train(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     doc_words = d.select(
-        "doc_id", F.explode(F.split("text", r"\s+")).alias("word")
+        "doc_id", F.explode(tokens_col()).alias("word")
     ).filter(F.length("word") > 0)
     # Map-side encode: chars -> the trained merges in training order.
     # Identical to joining the trained vocab (training applied the SAME

@@ -23,7 +23,7 @@ inherently sequential (doc k's fate depends on the exact token total
 before it); at 100 TB the standard two-phase rewrite applies — rank
 docs per (source, shard) with per-shard subtotals, prefix-sum the
 d x shards subtotal table (tiny), then localize — the same shape as
-``quality_percentile_gate_sharded``. The single-window form is the
+``quality_gate_sharded``. The single-window form is the
 spec; the sharded rewrite swaps in without changing results because
 md5 order is total.
 """

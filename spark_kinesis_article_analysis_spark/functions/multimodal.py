@@ -1,33 +1,22 @@
 """Multimodal column pattern: opaque binary payloads + typed metadata.
 
 The pattern (north star): image/audio/video ride as a ``binary`` column
-next to a metadata struct (mime, dimensions, source); decode/feature-
-extract steps are Arrow-batched ``mapInPandas`` operators so the bytes
-never round-trip through Python row-at-a-time.
-
-The container has no image/audio libs, so the *decode* step is a
-clearly-marked deterministic stub (``fake_decode_features``) — the
-Spark-side plumbing (schema, batching, partitioning) is real and
-tested. At 100 TB the payloads would come from ``binaryFile`` reads or
-pointer columns into object storage; everything downstream is
-unchanged.
+next to a metadata struct (mime, dimensions, source); byte length and
+content hash are JVM-side expressions over the binary column. The
+decode and frame-extraction steps — Arrow-batched ``mapInPandas``
+operators that parse real WAV/PPM/PNG/AVI bytes — live in
+``functions/multimodal_codec.py`` and ``functions/multimodal_image.py``.
+At 100 TB the payloads would come from ``binaryFile`` reads or pointer
+columns into object storage; everything downstream is unchanged.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable, Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
 from spark_kinesis_article_analysis_spark.registry import register
-
-#: Output schema of the (stubbed) decoder — what a real image decoder
-#: would emit per payload.
-DECODE_SCHEMA = "doc_id bigint, mime string, n_bytes int, n_frames int, mean_byte double"
 
 
 def with_binary_payload(docs: DataFrame) -> DataFrame:
@@ -44,39 +33,6 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
             F.col("lang").alias("lang"),
         ).alias("meta"),
     )
-
-
-def make_fake_decoder() -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    """STUB decoder factory (mapInPandas): the real implementation would
-    decode image/audio bytes (PIL/ffmpeg are not in this container). The
-    fake is deterministic — features derive only from the payload bytes —
-    so tests can assert plumbing end-to-end.
-
-    Returned as a closure (not a module-level function) so cloudpickle
-    serializes it BY VALUE: the executor Python workers never need this
-    repo on their import path, which holds on any cluster regardless of
-    how code is deployed."""
-    import pandas as pd  # closure-local: workers import pandas, not this repo
-
-    def fake_decode_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL payload (e.g. a NULL-text document regeneration — the
-            # shape test_degenerate_docs defends) decodes as empty bytes;
-            # len(None)/sum(None) would kill the whole task instead.
-            payloads = pdf["payload"].map(lambda b: b if b is not None else b"")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes": payloads.map(len).astype("int32"),
-                    # fake "frame count": one frame per 1 KiB, at least 1
-                    "n_frames": payloads.map(lambda b: max(1, len(b) // 1024)).astype("int32"),
-                    # fake "luminance": mean byte value — deterministic stand-in
-                    "mean_byte": payloads.map(lambda b: float(sum(b)) / max(1, len(b))),
-                }
-            )
-
-    return fake_decode_features
 
 
 @register(
@@ -105,71 +61,3 @@ def multimodal_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5("payload").alias("payload_md5"),
         F.col("meta.n_chars").alias("meta_chars"),
     )
-
-
-@register(
-    "multimodal_decode_features",
-    oracle=None,  # decoder is a Python (Arrow-batched) stub -> rows-only; plumbing tested in pytest
-    tags=("multimodal", "mapInPandas", "north-star"),
-    doc=(
-        "Arrow-batched decode/feature-extract over binary payloads via mapInPandas "
-        "(stubbed decoder — see fake_decode_features). The per-batch shape is the "
-        "real contract: bytes in, typed feature rows out, partition-parallel."
-    ),
-)
-def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = with_binary_payload(load(spark, sf_dir, "documents"))
-    flat = d.select("doc_id", "payload", F.col("meta.mime").alias("mime"))
-    return flat.mapInPandas(make_fake_decoder(), schema=DECODE_SCHEMA)
-
-
-#: Output schema of the (stubbed) frame sampler.
-FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_md5 string"
-
-#: Fake frame geometry: 256-byte "frames", keep every 2nd.
-FRAME_BYTES = 256
-FRAME_STRIDE = 2
-
-
-def make_fake_frame_sampler(
-    frame_bytes: int = FRAME_BYTES, stride: int = FRAME_STRIDE
-) -> "Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]":
-    """STUB frame-sampler factory (mapInPandas): a real implementation
-    would ffmpeg-seek keyframes; the fake slices the payload into fixed
-    ``frame_bytes`` 'frames' and keeps every ``stride``-th —
-    deterministic, so the explode-shaped plumbing (one binary row in, N
-    feature rows out) is testable end-to-end. Closure-returned for the
-    same by-value-pickling reason as :func:`make_fake_decoder`."""
-    import hashlib
-
-    import pandas as pd
-
-    def fake_frame_sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, hashes = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                n_frames = max(1, (len(b) + frame_bytes - 1) // frame_bytes)
-                for i in range(0, n_frames, stride):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    hashes.append(hashlib.md5(b[i * frame_bytes : (i + 1) * frame_bytes]).hexdigest())
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": pd.array(idxs, dtype="int32"), "frame_md5": hashes})
-
-    return fake_frame_sample
-
-
-@register(
-    "multimodal_frame_sample",
-    oracle=None,  # sampler is a Python (Arrow-batched) stub -> rows-only; plumbing tested in pytest
-    tags=("multimodal", "frames", "mapInPandas", "north-star"),
-    doc=(
-        "Frame sampling over binary payloads via mapInPandas (stubbed): one "
-        "payload row expands to its sampled frames — the 1-to-N batch shape "
-        "of video/audio frame extraction. Partition-parallel; output size is "
-        "payload_bytes/frame_bytes/stride, never materialized on the driver."
-    ),
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = with_binary_payload(load(spark, sf_dir, "documents"))
-    return d.select("doc_id", "payload").mapInPandas(make_fake_frame_sampler(), schema=FRAME_SCHEMA)

@@ -1,10 +1,10 @@
 """REAL multimodal codecs — RIFF/WAVE (PCM), PPM (P6), and PNG
 (RFC 2083) — with oracle-exact round-trip verification.
 
-The base multimodal module (``functions/multimodal.py``) ships honest
-*stubs* for decode/frame-sample because the container has no
-image/audio libraries. This module raises that ceiling for the formats
-decodable with nothing but the standard library and numpy:
+The base multimodal module (``functions/multimodal.py``) holds the
+binary-payload column layout; this module decodes real payloads in the
+formats readable with nothing but the standard library and numpy (no
+image/audio library is assumed):
 
 * **audio/wav** — a byte-exact minimal RIFF/WAVE writer (44-byte
   header + 16-bit mono PCM) and a real chunk-walking reader (``fmt ``
@@ -31,7 +31,7 @@ float64 (sums of ≤ 254 identical values < 2^53; division and sqrt of a
 perfect square are correctly rounded → exact), keeping doubles
 hash-comparable across engines.
 
-Error-row policy is REAL here, not stubbed: every 97th document's
+Error-row policy is part of the contract: every 97th document's
 payload has its magic smashed (and NULL-keyed rows get a 4-byte junk
 payload), and the decoder must map undecodable bytes to
 ``valid=false`` + NULL features — one bad object must never kill a
@@ -776,11 +776,10 @@ FROM p JOIN generate_series(0, {_MAX_FRAME_IDX}) AS f(i)
         "Real audio frame extraction, oracle-verified: decodes the WAV "
         "payload and slices the PCM into 32-sample frames with per-frame "
         "RMS — the 1-to-N feature-extraction shape computed from actual "
-        "bytes (vs the honest stub in multimodal_frame_sample). The oracle "
-        "derives frame count/sizes from the synthesis arithmetic and the "
-        "square-wave RMS identity. Valid WAV rows only: framing is the "
-        "decoded-payload path; error accounting belongs to "
-        "multimodal_codec_decode."
+        "bytes. The oracle derives frame count/sizes from the synthesis "
+        "arithmetic and the square-wave RMS identity. Valid WAV rows "
+        "only: framing is the decoded-payload path; error accounting "
+        "belongs to multimodal_codec_decode."
     ),
 )
 def multimodal_codec_frames(spark: SparkSession, sf_dir: str) -> DataFrame:

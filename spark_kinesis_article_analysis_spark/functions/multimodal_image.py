@@ -1268,8 +1268,8 @@ FROM p WHERE coalesce(corrupt, TRUE)
         "alignment); the decoder walks the chunk tree recursively, "
         "validates the stream format, un-flips every frame, and emits "
         "ONE ROW PER FRAME with geometry and the frame's red-channel "
-        "mean — the 1-to-N frame-sampling shape of "
-        "multimodal_frame_sample made real for video. Frame f's ramp "
+        "mean — the 1-to-N frame-sampling shape of video frame "
+        "extraction. Frame f's ramp "
         "shifts by 7f, so dropped/duplicated/reordered frames hash-"
         "fail; corrupt-signature rows emit a single valid=false row."
     ),

@@ -7,10 +7,11 @@ LLM pre-training pipeline runs after text analysis and dedup scoring
 (BASELINE.json north star).
 
 Scale posture: chunking and split assignment are pure map-side
-(scan-fused, zero shuffles). Packing and percentile gating window by
-``lang`` so no single-partition global sort exists; at 100 TB you would
-sub-shard hot languages (e.g. ``lang, pmod(hash(doc_id), k)``) the same
-way — the operator shape is unchanged. Component clustering turns each
+(scan-fused, zero shuffles). Packing and percentile gating come in two
+shapes sharing one oracle: a single window by ``lang`` (the plain
+forms, the faster shape at small scale) and a two-phase range-sharded
+rewrite (``operators/skew``, the ``_sharded`` forms) so no language
+lands on one reducer, however hot. Component clustering turns each
 dedup-key group into a star (every member linked to the group's min
 doc_id) and runs ``dedup_pipeline.propagate_over_edges``, the package's
 one connected-components loop: rounds are shuffle-bounded, and their
@@ -66,6 +67,35 @@ def _doc_id_bounds(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     if lo is None:
         return 0, 0
     return int(lo), int(hi)
+
+
+def _packed(spark: SparkSession, sf_dir: str, df: DataFrame, part_cols: list[str]) -> DataFrame:
+    """(doc_id, *part_cols, n_tokens, pack_id) of ``df``: each document's
+    ``PACK_BUDGET``-token pack by exclusive running ``n_tokens`` within
+    its ``part_cols`` group in doc_id order — the packing step of
+    ``pack_sequences_sharded`` and ``corpus_prep_end_to_end``."""
+    from spark_kinesis_article_analysis_spark.operators.skew import (
+        monotone_range_shard,
+        range_sharded_running_sum,
+    )
+
+    shards = _shard_count(spark)
+    # doc_id is a dense integer key: shard by id-range arithmetic with
+    # bounds from the parquet footers (driver-side metadata, zero jobs)
+    # instead of repartitionByRange, whose boundary sampling would
+    # re-execute the child plan (for corpus prep, the whole dedup
+    # semi-join).
+    lo, hi = _doc_id_bounds(spark, sf_dir)
+    shard = monotone_range_shard("doc_id", lo, hi, shards)
+    cum = range_sharded_running_sum(
+        df, part_cols, "doc_id", "n_tokens", "__cum", shards, shard_by=shard
+    )
+    return cum.select(
+        "doc_id",
+        *part_cols,
+        "n_tokens",
+        F.floor((F.col("__cum") - F.col("n_tokens")) / F.lit(PACK_BUDGET)).alias("pack_id"),
+    )
 
 
 @register(
@@ -165,29 +195,9 @@ FROM t
     ),
 )
 def pack_sequences_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_kinesis_article_analysis_spark.operators.skew import (
-        monotone_range_shard,
-        range_sharded_running_sum,
-    )
-
     d = load(spark, sf_dir, "documents")
     t = d.select("doc_id", "lang", F.size(tokens_col()).alias("n_tokens"))
-    shards = _shard_count(spark)
-    # doc_id is a dense integer key: shard by id-range arithmetic with
-    # bounds from the parquet footers (driver-side metadata, zero jobs)
-    # instead of repartitionByRange, whose boundary sampling would
-    # re-execute the child plan.
-    lo, hi = _doc_id_bounds(spark, sf_dir)
-    shard = monotone_range_shard("doc_id", lo, hi, shards)
-    cum = range_sharded_running_sum(
-        t, ["lang"], "doc_id", "n_tokens", "__cum", shards, shard_by=shard
-    )
-    return cum.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        F.floor((F.col("__cum") - F.col("n_tokens")) / F.lit(PACK_BUDGET)).alias("pack_id"),
-    )
+    return _packed(spark, sf_dir, t, ["lang"])
 
 
 @register(
@@ -259,7 +269,7 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # percent_rank in the partition (probed on the NULL-text fixture).
         F.round(
             F.length(F.coalesce(F.col("text"), F.lit("")))
-            / F.size(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+")),
+            / F.size(tokens_col(F.coalesce(F.col("text"), F.lit("")))),
             6,
         ).alias("score"),
     )
@@ -298,10 +308,7 @@ FROM r WHERE pr >= 0.6
     ),
 )
 def quality_gate_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_kinesis_article_analysis_spark.operators.skew import (
-        range_sharded_percent_rank,
-        with_balanced_range_shard,
-    )
+    from spark_kinesis_article_analysis_spark.operators.skew import range_sharded_percent_rank
 
     d = load(spark, sf_dir, "documents")
     t = d.select(
@@ -312,22 +319,16 @@ def quality_gate_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         # percent_rank in the partition (probed on the NULL-text fixture).
         F.round(
             F.length(F.coalesce(F.col("text"), F.lit("")))
-            / F.size(F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+")),
+            / F.size(tokens_col(F.coalesce(F.col("text"), F.lit("")))),
             6,
         ).alias("score"),
     )
     shards = _shard_count(spark)
-    # histogram-balanced arithmetic shards: no repartitionByRange, so no
-    # child-plan sampling pass and no full-data range exchange — the only
-    # corpus-scale shuffle left is the local window's own hash exchange
-    pr = range_sharded_percent_rank(
-        t,
-        ["lang"],
-        ["score", "doc_id"],
-        "pr",
-        shards,
-        shard_source=lambda x: with_balanced_range_shard(x, ["lang"], "score", shards),
-    )
+    # the numeric leading key takes histogram-balanced arithmetic shards:
+    # no repartitionByRange, so no child-plan sampling pass and no
+    # full-data range exchange — the only corpus-scale shuffle left is
+    # the local window's own hash exchange
+    pr = range_sharded_percent_rank(t, ["lang"], ["score", "doc_id"], "pr", shards)
     return (
         pr.filter(F.col("pr") >= 0.6)
         .select("doc_id", "lang", "score", F.round("pr", 6).alias("pct_rank"))
@@ -400,7 +401,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = d.select(
         "doc_id",
         F.md5(
-            F.array_join(F.sort_array(F.array_distinct(F.split(norm_text, r"\s+"))), " ")
+            F.array_join(F.sort_array(F.array_distinct(tokens_col(norm_text))), " ")
         ).alias("fp"),
         F.md5(F.substring(norm_text, 1, 64)).alias("ph"),
     )
@@ -429,7 +430,7 @@ def observed_quality_gate(df: DataFrame, min_tokens: int = 20, max_tokens: int =
     ride the job, they are not a second job."""
     from pyspark.sql import Observation
 
-    n_tokens = F.size(F.split("text", r"\s+"))
+    n_tokens = F.size(tokens_col())
     with_n = df.withColumn("n_tokens", n_tokens)
     # ONE binding of the gate predicate: the observe() arms and the
     # filter below must never disagree about what "kept" means.
@@ -483,10 +484,6 @@ FROM s
 )
 def corpus_prep_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_kinesis_article_analysis_spark.functions.dedup import normalized_text_col
-    from spark_kinesis_article_analysis_spark.operators.skew import (
-        monotone_range_shard,
-        range_sharded_running_sum,
-    )
 
     d = load(spark, sf_dir, "documents")
     surv = (
@@ -506,21 +503,4 @@ def corpus_prep_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(bucket < VALID_MAX, "valid")
         .otherwise("test")
     )
-    s = kept.withColumn("split", split)
-    shards = _shard_count(spark)
-    # Shard by doc_id-range arithmetic (dense key, bounds from the
-    # parquet footers — no extra job, and emphatically not from the
-    # deduped subplan: repartitionByRange's boundary sampling would
-    # re-execute the whole dedup semi-join just to find split points).
-    lo, hi = _doc_id_bounds(spark, sf_dir)
-    shard = monotone_range_shard("doc_id", lo, hi, shards)
-    cum = range_sharded_running_sum(
-        s, ["lang", "split"], "doc_id", "n_tokens", "__cum", shards, shard_by=shard
-    )
-    return cum.select(
-        "doc_id",
-        "lang",
-        "split",
-        "n_tokens",
-        F.floor((F.col("__cum") - F.col("n_tokens")) / F.lit(PACK_BUDGET)).alias("pack_id"),
-    )
+    return _packed(spark, sf_dir, kept.withColumn("split", split), ["lang", "split"])

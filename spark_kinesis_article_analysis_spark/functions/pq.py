@@ -538,86 +538,3 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dt = _distance_tables(spark, sf_dir, cb)
     db = cand.join(_db_codes(enc), "neighbor_id")
     return _adc_rank(db, dt)
-
-
-@register(
-    "embed_pq_quantize_arrow",
-    oracle=None,  # numpy half-up rounding matches Spark's decimal
-    # HALF_UP only outside one-ulp-of-.5 edges (the sim_cosine_topk_arrow
-    # caveat) -> rows-only; EXACT agreement with the built-in encoder on
-    # the real corpora is asserted in tests/test_pq_arrow.py.
-    tags=("embedding", "quantization", "pq", "arrow", "vectorized", "north-star"),
-    doc=(
-        "The vectorized execution shape for the PQ encode at 100 TB: the "
-        "trained codebook (M x K x SUBDIM, exact same training as "
-        "embed_pq_quantize) collects to the driver and closes over an "
-        "Arrow-batched mapInPandas that encodes each candidate batch as "
-        "M batched numpy distance computations — dense linear algebra is "
-        "where interpreted Catalyst higher-order expressions lose to "
-        "BLAS-backed kernels, the documented exception to the "
-        "built-ins-first rule (same treatment as sim_cosine_topk_arrow). "
-        "Still a zero-exchange map stage; ties broken to the lowest cid "
-        "exactly like the exact form."
-    ),
-)
-def embed_pq_quantize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    cb_rows = _trained_codebook(spark, sf_dir).collect()  # M x K — bounded
-    if not cb_rows:
-        return spark.createDataFrame(
-            [], "vec_id long, codes string, recon_err double"
-        )
-    by_m: dict[int, list] = {}
-    for r in cb_rows:
-        by_m.setdefault(r.m, []).append((r.cid, list(r.cent)))
-    if set(by_m) != set(range(SUBS)):
-        # a subspace with no trained cells (degenerate corpora): the
-        # exact form drops every vector, so does the twin
-        return spark.createDataFrame(
-            [], "vec_id long, codes string, recon_err double"
-        )
-    cents = {}
-    for m, cells in by_m.items():
-        cells.sort()  # cid ASC -> argmin's first-min picks the lowest cid
-        cents[m] = (
-            np.array([c for c, _ in cells], dtype=np.int64),
-            np.array([v for _, v in cells], dtype=np.float64),
-        )
-
-    def _round6_half_up(x):
-        import numpy as _np
-
-        return _np.sign(x) * _np.floor(_np.abs(x) * 1e6 + 0.5) / 1e6
-
-    def encode(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = _np.array(pdf["v"].tolist(), dtype=_np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            code_cols, d2_cols = [], []
-            for m in range(SUBS):
-                sub = V[:, m * SUBDIM : (m + 1) * SUBDIM]
-                cids, C = cents[m]
-                d2 = _round6_half_up(
-                    ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
-                )
-                pick = _np.argmin(d2, axis=1)  # first min = lowest cid on ties
-                code_cols.append(cids[pick])
-                d2_cols.append(d2[_np.arange(len(pick)), pick])
-            codes = [
-                "-".join(str(c) for c in row)
-                for row in _np.stack(code_cols, axis=1)
-            ]
-            err = _round6_half_up(_np.sqrt(_np.stack(d2_cols, axis=1).sum(axis=1)))
-            yield _pd.DataFrame(
-                {"vec_id": ids, "codes": codes, "recon_err": err}
-            )
-
-    return _vecs(spark, sf_dir).mapInPandas(
-        encode, "vec_id long, codes string, recon_err double"
-    )

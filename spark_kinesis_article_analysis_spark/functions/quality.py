@@ -70,7 +70,7 @@ def repetition_stats(d: DataFrame) -> DataFrame:
     # doc from a streaming filter, and half the stats would be NULL while
     # the bigram fractions defaulted to 0.0 (an incoherent hybrid).
     t = d.withColumn(
-        "__t", F.split(F.coalesce(F.col("text"), F.lit("")), r"\s+")
+        "__t", tokens_col(F.coalesce(F.col("text"), F.lit("")))
     ).withColumn("__bg", _bigrams(F.col("__t")))
     # longest equal-run in the sorted bigram array == max occurrence count
     acc0 = F.struct(

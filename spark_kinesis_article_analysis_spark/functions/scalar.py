@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 
@@ -209,7 +210,7 @@ FROM toks
 )
 def scalar_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), r"\s+")
+    toks = tokens_col()
     t = d.select("doc_id", toks.alias("tokens"))
     return t.select(
         "doc_id",
@@ -249,7 +250,7 @@ def scalar_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     m = F.map_from_arrays(
         F.array(F.lit("chars"), F.lit("tokens")),
-        F.array(F.col("n_chars"), F.size(F.split("text", r"\s+")).cast("long")),
+        F.array(F.col("n_chars"), F.size(tokens_col()).cast("long")),
     )
     return d.select(
         "doc_id",
@@ -414,7 +415,7 @@ WHERE doc_id < 50
 def scalar_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return d.select(
-        "doc_id", F.posexplode(F.split("text", r"\s+")).alias("pos", "token")
+        "doc_id", F.posexplode(tokens_col()).alias("pos", "token")
     )
 
 
@@ -458,15 +459,14 @@ FROM t
 )
 def scalar_array_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    a = F.array_distinct(F.split("text", r"\s+"))
+    a = F.array_distinct(tokens_col())
     b = F.array_distinct(
-        F.split(
+        tokens_col(
             F.translate(
                 "text",
                 "abcdefghijklmnopqrstuvwxyz",
                 "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-            ),
-            r"\s+",
+            )
         )
     )
     return d.select(
@@ -719,7 +719,7 @@ FROM t LEFT JOIN LATERAL unnest(CASE WHEN len(rare) = 0 THEN [NULL] ELSE rare EN
 )
 def scalar_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    rare = F.filter(F.split("text", r"\s+"), lambda x: F.length(x) > 18)
+    rare = F.filter(tokens_col(), lambda x: F.length(x) > 18)
     return d.select("doc_id", F.explode_outer(rare).alias("rare_token"))
 
 

@@ -32,6 +32,7 @@ from spark_kinesis_article_analysis_spark.functions.similarity import (
     nearest_centroid_sql,
     valid_vector,
 )
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 # --------------------------------------------------------------------------
@@ -121,7 +122,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         d.select(
             F.explode(
-                F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), r"\s+")
+                tokens_col(F.lower(F.coalesce(F.col("text"), F.lit(""))))
             ).alias("token")
         )
         .filter(F.col("token") != "")

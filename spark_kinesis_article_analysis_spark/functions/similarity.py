@@ -119,8 +119,8 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 NONZERO_SQL = f"({VALID_DIM_SQL} AND len(list_filter(embedding, x -> x <> 0)) > 0)"
 
 
-def _emb_nonzero(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``_emb`` minus zero-norm vectors. Cosine is UNDEFINED for the zero
+def _nonzero(e: DataFrame) -> DataFrame:
+    """``e`` minus zero-norm vectors. Cosine is UNDEFINED for the zero
     vector, and under ANSI mode (Spark 4 default) a single all-zero
     embedding row — padding, a dead encoder, a null-imputed batch —
     would otherwise kill every cosine-scoring job with DIVIDE_BY_ZERO.
@@ -129,10 +129,6 @@ def _emb_nonzero(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids, quantization) where a zero vector is a legitimate row.
     ``exists`` short-circuits on the first nonzero component — cheaper
     than a norm fold, and no filter-on-fold-column re-inline."""
-    return _nonzero(_emb(spark, sf_dir))
-
-
-def _nonzero(e: DataFrame) -> DataFrame:
     return e.filter(F.exists("emb", lambda x: x != 0.0))
 
 
@@ -293,97 +289,6 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return sharded_topk(
         scored,
-        ["query_id"],
-        [F.col("cosine").desc(), F.col("neighbor_id").asc()],
-        TOP_K,
-        shard_key=F.col("neighbor_id"),
-        num_shards=TOPK_SHARDS,
-    ).select("query_id", "neighbor_id", "cosine")
-
-
-@register(
-    "sim_cosine_topk_arrow",
-    oracle=None,  # numpy pairwise-summation dots differ from fold order in final ulps -> rows-only; agreement with the exact form asserted in pytest
-    tags=("similarity", "topk", "arrow", "vectorized", "north-star"),
-    doc=(
-        "The vectorized execution shape for brute-force top-k at scale: "
-        "the bounded query set collects to the driver (N_QUERIES rows by "
-        "construction) and closes over an Arrow-batched mapInPandas that "
-        "scores each candidate batch as ONE numpy matmul — dense linear "
-        "algebra is where row-at-a-time Catalyst expression evaluation "
-        "loses to BLAS, the documented exception to the built-ins-first "
-        "rule. Per-batch top-k (tie-broken by neighbor_id) then a global "
-        "top-k window over batches*Q*K candidate rows — top-k composes "
-        "over batches, so the result matches the exact operator; only "
-        "the float summation order differs (ulp-level), hence rows-only."
-    ),
-)
-def sim_cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    # zero-norm guard: numpy would not throw like ANSI Spark does — it
-    # yields NaN scores that silently diverge from the exact operator.
-    e = _emb_nonzero(spark, sf_dir)
-    qrows = (
-        e.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", "emb")
-        .collect()  # bounded by N_QUERIES — a query SET, not the corpus
-    )
-    if not qrows:
-        # every query vector was zero-norm (or absent): the exact twin
-        # returns an empty frame; np.linalg.norm(axis=1) on the empty
-        # 1-D array would raise AxisError at plan-build time instead.
-        return spark.createDataFrame([], "query_id long, neighbor_id long, cosine double")
-    q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    Q = np.array([list(r.emb) for r in qrows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    k = TOP_K
-
-    def score(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = _np.array(pdf["emb"].tolist(), dtype=_np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            Cn = C / _np.linalg.norm(C, axis=1, keepdims=True)
-            # round BEFORE ranking, like the exact form — and with the
-            # exact form's ROUNDING MODE: Spark's F.round is decimal
-            # HALF_UP while np.round is half-to-even, a systematic 1e-6
-            # divergence at exact halves, not just summation-order ulps.
-            # floor(|x|*1e6 + 0.5) is vectorized half-up; the residual
-            # difference (binary scaling vs Spark's shortest-repr decimal
-            # string) only surfaces when the scaled value sits within one
-            # ulp of .5 — covered by the pytest tolerance + membership
-            # assertions (tests/test_rows_only.py::TestArrowTopK).
-            raw = Cn @ Qn.T
-            S = _np.sign(raw) * _np.floor(_np.abs(raw) * 1e6 + 0.5) / 1e6
-            for qi, qid in enumerate(q_ids):
-                col = S[:, qi]
-                top = _np.lexsort((ids, -col))[:k]
-                yield _pd.DataFrame(
-                    {
-                        "query_id": _np.full(len(top), qid),
-                        "neighbor_id": ids[top],
-                        "cosine": col[top],
-                    }
-                )
-
-    cand = (
-        e.filter(F.col("vec_id") >= N_QUERIES)
-        .select("vec_id", "emb")
-        .mapInPandas(score, "query_id long, neighbor_id long, cosine double")
-    )
-    # Merge-phase input is n_batches * Q * K rows — bounded per batch but
-    # linear in batch count, so at 100 TB one query_id partition still
-    # accumulates millions of survivor rows. Same two-phase rewrite as
-    # the exact form bounds the final window at TOPK_SHARDS * K per query.
-    from spark_kinesis_article_analysis_spark.operators.skew import sharded_topk
-
-    return sharded_topk(
-        cand,
         ["query_id"],
         [F.col("cosine").desc(), F.col("neighbor_id").asc()],
         TOP_K,

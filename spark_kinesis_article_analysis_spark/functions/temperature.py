@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kinesis_article_analysis_spark.catalog import load
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 from spark_kinesis_article_analysis_spark.registry import register
 
 #: sampling temperature exponent (XLM-R's multilingual alpha).
@@ -78,7 +79,7 @@ def corpus_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
         load(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull() & F.col("source").isNotNull())
-        .select("source", F.size(F.split("text", r"\s+")).alias("toks"))
+        .select("source", F.size(tokens_col()).alias("toks"))
         .groupBy("source")
         .agg(F.sum("toks").cast("double").alias("n_tokens"))
     )

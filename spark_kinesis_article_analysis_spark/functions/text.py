@@ -13,7 +13,7 @@ whole-stage codegen; at 100 TB these are scan-fused map-only stages
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -30,9 +30,11 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def tokens_col(text_col: str = "text"):
-    """Whitespace-run tokenizer — the reference's exact tokenization."""
-    return F.split(F.col(text_col), r"\s+")
+def tokens_col(text_col: str | Column = "text") -> Column:
+    """Whitespace-run tokenizer — the reference's exact tokenization —
+    of a text column, by name or as a Column (a coalesced or case-mapped
+    text). The package's one whitespace split."""
+    return F.split(text_col, r"\s+")
 
 
 @register(

@@ -87,10 +87,13 @@ def ensure_bucket():
 
 def registered(spark: SparkSession) -> SparkSession:
     """``spark`` with both wire sources usable: ``s3_objects`` and
-    ``kinesis_source`` pickled by value (nothing guarantees the package
-    is on the Python workers' path under a driver's session; both import
-    only stdlib, pyspark, pyarrow and boto3) and both DataSources
-    registered."""
+    ``kinesis_source`` marked for pickling by value (nothing guarantees
+    the package is on the Python workers' path under a driver's session;
+    both import only stdlib, pyspark, pyarrow and boto3) and each
+    DataSource registered once per session. A registration pickles its
+    module (about 30 ms), so a session whose own registry already holds
+    the name — a streaming query's clone of a registered session
+    included — is left as it is."""
     from pyspark import cloudpickle
 
     from spark_kinesis_article_analysis_spark.sources import kinesis_source as _ks
@@ -98,8 +101,10 @@ def registered(spark: SparkSession) -> SparkSession:
 
     for module in (_ks, _s3o):
         cloudpickle.register_pickle_by_value(module)
-    spark.dataSource.register(_ks.KinesisApiDataSource)
-    spark.dataSource.register(_s3o.S3ParquetManifestDataSource)
+    manager = spark._jsparkSession.sessionState().dataSourceManager()  # type: ignore[attr-defined]
+    for source in (_ks.KinesisApiDataSource, _s3o.S3ParquetManifestDataSource):
+        if not manager.dataSourceExists(source.name()):
+            spark.dataSource.register(source)
     return spark
 
 
@@ -114,8 +119,8 @@ def manifest_reader(spark: SparkSession, prefix: str, stream: bool = False):
 
 def manifest_append(df: DataFrame, prefix: str, **options) -> None:
     """Append ``df`` to the table at ``prefix``: one manifest commit.
-    ``options`` are extra writer options (``epochId``)."""
-    registered(df.sparkSession)
+    ``df``'s session must be :func:`registered`. ``options`` are extra
+    writer options (``epochId``)."""
     df.write.format(FORMAT).mode("append").options(**s3_options(prefix), **options).save()
 
 
@@ -186,7 +191,7 @@ def _written_prefix(spark: SparkSession, sf_dir: str) -> str:
     from spark_kinesis_article_analysis_spark.catalog import load
 
     def build(prefix: str) -> str:
-        manifest_append(load(spark, sf_dir, "documents"), prefix)
+        manifest_append(load(registered(spark), sf_dir, "documents"), prefix)
         return prefix
 
     return built_once(sf_dir, "documents", build)

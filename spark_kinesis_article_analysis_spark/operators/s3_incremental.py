@@ -49,6 +49,7 @@ from spark_kinesis_article_analysis_spark.operators.s3_batch import (
     built_once,
     manifest_append,
     manifest_reader,
+    registered,
     s3_options,
 )
 from spark_kinesis_article_analysis_spark.operators.s3_snapshot import (
@@ -60,7 +61,8 @@ from spark_kinesis_article_analysis_spark.sources import s3_objects as _s3o
 
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load(spark, sf_dir, "documents").select(*_COLS)
+    """The documents' table columns, on a :func:`registered` session."""
+    return load(registered(spark), sf_dir, "documents").select(*_COLS)
 
 
 @register(
@@ -309,7 +311,7 @@ def _evolved_prefix(spark: SparkSession, sf_dir: str) -> str:
     (process, sf_dir)."""
 
     def build(prefix: str) -> str:
-        d = load(spark, sf_dir, "documents")
+        d = load(registered(spark), sf_dir, "documents")
         manifest_append(
             d.where(d.doc_id % 2 == 0).select("doc_id", "text", "lang", "source"), prefix
         )

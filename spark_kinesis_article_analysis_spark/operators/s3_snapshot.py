@@ -29,6 +29,7 @@ from spark_kinesis_article_analysis_spark.operators.s3_batch import (
     built_once,
     manifest_append,
     manifest_reader,
+    registered,
     s3_options,
 )
 from spark_kinesis_article_analysis_spark.registry import register
@@ -43,7 +44,7 @@ def _prepared(spark: SparkSession, sf_dir: str) -> dict:
 
     def build(prefix: str) -> dict:
         opts = s3_options(prefix)
-        d = load(spark, sf_dir, "documents").select(*_COLS)
+        d = load(registered(spark), sf_dir, "documents").select(*_COLS)
         manifest_append(d.where(d.doc_id % 2 == 0), prefix)
         [snap_key] = _s3o._manifest_keys(_s3o._s3(opts), BUCKET, prefix)
         manifest_append(d.where(d.doc_id % 2 != 0), prefix)

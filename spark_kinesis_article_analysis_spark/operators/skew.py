@@ -314,7 +314,6 @@ def range_sharded_percent_rank(
     order_cols: list[str],
     out_col: str,
     num_shards: int,
-    shard_source=None,
 ) -> DataFrame:
     """``percent_rank() OVER (PARTITION BY part_cols ORDER BY
     order_cols)`` without a single reducer per partition key.
@@ -326,18 +325,12 @@ def range_sharded_percent_rank(
     for the (n-1) denominator come from the same tiny per-shard count
     table, so no extra pass over the data.
 
-    ``shard_source``: callable ``DataFrame -> DataFrame`` appending a
-    ``__shard`` column monotone in the sort order within each group
-    (e.g. :func:`with_balanced_range_shard`, or
-    :func:`monotone_range_shard` wrapped in ``withColumn`` for dense-id
-    orders). Default: histogram-balanced shard on a numeric leading
-    sort key, ``repartitionByRange`` (sampling pass + range exchange)
-    only for non-numeric keys — see :func:`_ranged_with_shard`.
+    Sharding: a numeric leading sort key takes the histogram-balanced
+    shard (:func:`with_balanced_range_shard`), a non-numeric one
+    ``repartitionByRange`` (sampling pass + range exchange) — see
+    :func:`_ranged_with_shard`.
     """
-    if shard_source is not None:
-        ranged = shard_source(df)
-    else:
-        ranged = _ranged_with_shard(df, part_cols, order_cols, num_shards, None)
+    ranged = _ranged_with_shard(df, part_cols, order_cols, num_shards, None)
     w_local = Window.partitionBy("__shard", *part_cols).orderBy(*order_cols)
     local = ranged.withColumn("__lrank", F.row_number().over(w_local))
     counts = local.groupBy("__shard", *part_cols).agg(F.count("*").alias("__cnt"))

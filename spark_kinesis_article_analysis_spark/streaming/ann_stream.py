@@ -87,8 +87,9 @@ def run_ann_stream(
         # epochId: the foreachBatch idempotence fence
         manifest_append(topk, prefix, epochId=str(batch_id))
 
-    # register before start: a registration made only inside
-    # score_batch does not reach the session its write resolves in
+    # register before start, on this session: score_batch's write
+    # resolves against what it registered (a registration made only
+    # inside score_batch does not reach it), so batches register nothing
     queries = parquet_file_stream(registered(spark), emb_path).filter(
         F.col("vec_id") < N_QUERIES
     )

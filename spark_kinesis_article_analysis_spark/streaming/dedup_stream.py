@@ -49,6 +49,7 @@ from spark_kinesis_article_analysis_spark.functions.dedup import (
     MINHASH_BANDS,
     MINHASH_HASHES,
 )
+from spark_kinesis_article_analysis_spark.functions.text import tokens_col
 
 #: State-size bound per (band, band_key) bucket — see module docstring.
 MAX_BUCKET_DOCS = 64
@@ -68,7 +69,7 @@ def minhash_band_rows(docs: DataFrame, n: int = 3) -> DataFrame:
     streaming plan is the stateful operator's own (band, band_key)
     partitioning. Documents with no shingles (NULL/short text) produce
     no rows, mirroring the batch explode."""
-    t = docs.select("doc_id", F.split("text", r"\s+").alias("t"))
+    t = docs.select("doc_id", tokens_col().alias("t"))
     sh = F.array_distinct(
         F.filter(
             F.transform(

@@ -118,17 +118,3 @@ def test_one_token_docs_survive_with_zero_fracs(spark, corpus_dir):
         assert r["dup_bigram_frac"] == 0.0
         assert r["top_bigram_frac"] == 0.0
         assert r["passes_gate"] is True
-
-
-def test_multimodal_stubs_survive_null_text(spark, corpus_dir):
-    """The Arrow decode/frame stand-ins must treat a NULL payload (from
-    the NULL-text doc) as empty bytes instead of killing the task with
-    len(None)/bytes(None) — the mapInPandas analogue of the NULL text ==
-    empty text rule the JVM-side operators follow."""
-    specs = all_specs()
-    feats = specs["multimodal_decode_features"].build(spark, corpus_dir).collect()
-    assert {r.doc_id for r in feats} == {i for i, _ in _DOCS} | {200}
-    nul = next(r for r in feats if r.doc_id == 200)
-    assert (nul.n_bytes, nul.n_frames) == (0, 1)
-    frames = specs["multimodal_frame_sample"].build(spark, corpus_dir).collect()
-    assert any(r.doc_id == 200 for r in frames)

@@ -103,39 +103,7 @@ def test_zero_vector_excluded_from_cosine_kept_elsewhere(spark, emb_dir):
 
 
 def test_rows_only_embedding_specs_survive_zero_vector(spark, emb_dir):
-    """The no-oracle specs must at least execute: numpy paths yield NaN
-    instead of throwing, so without the guard the arrow top-k silently
-    diverged from the exact form while the ANSI cosine forms crashed."""
-    for name in ("sim_cosine_topk_arrow", "cluster_kmeans_lloyd"):
-        df = all_specs()[name].build(spark, emb_dir)
-        assert df.count() >= 0
-        if name == "sim_cosine_topk_arrow":
-            assert df.filter("query_id = 0 OR neighbor_id = 0").count() == 0
-
-
-def test_arrow_topk_all_queries_zero_norm(spark, tmp_path):
-    """Every query vec_id zero-norm: the exact operator returns an empty
-    frame; the Arrow twin must match instead of raising AxisError from
-    numpy axis-1 normalization of an empty query matrix (found by
-    review, round 4b)."""
-    d = tmp_path / "allzero_q"
-    d.mkdir()
-    vecs = [(i, [0.0] * 64, 0) for i in range(5)] + [  # all 5 queries zero
-        (i, [((i + j) % 5 - 2) / 2.0 for j in range(64)], 1) for i in range(5, 12)
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([v[0] for v in vecs], pa.int64()),
-                "embedding": pa.array(
-                    [v[1] for v in vecs], pa.list_(pa.float32())
-                ),
-                "label": pa.array([v[2] for v in vecs], pa.int64()),
-            }
-        ),
-        d / "embeddings.parquet",
-    )
-    specs = all_specs()
-    exact = specs["sim_cosine_topk"].build(spark, str(d)).collect()
-    arrow = specs["sim_cosine_topk_arrow"].build(spark, str(d)).collect()
-    assert exact == [] and arrow == []
+    """The no-oracle embedding spec must at least execute over a zero
+    vector."""
+    df = all_specs()["cluster_kmeans_lloyd"].build(spark, emb_dir)
+    assert df.count() >= 0

@@ -515,43 +515,6 @@ class TestEmbeddingFuzz:
         max_examples=_ex(6), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
     )
     @given(_emb_rows)
-    def test_arrow_topk_agrees_with_exact_on_random_vectors(
-        self, spark, tmp_path_factory, rows
-    ):
-        """r7: the two rows-only similarity specs get generative coverage.
-        The Arrow/numpy top-k must agree with the exact Catalyst operator
-        on random corpora — same query set, same per-query neighbor
-        membership, per-rank ids equal unless a genuine <=2e-6 rounding
-        straddle explains the swap (the fixture form of this assertion
-        lives in test_rows_only.TestArrowTopK)."""
-        d = tmp_path_factory.mktemp("fuzz_emb_arrow")
-        _write_embs(d, rows)
-        specs = all_specs()
-        exact = specs["sim_cosine_topk"].build(spark, str(d)).collect()
-        arrow = specs["sim_cosine_topk_arrow"].build(spark, str(d)).collect()
-
-        def by_query(res):
-            out: dict = {}
-            for r in res:
-                out.setdefault(r.query_id, []).append((r.neighbor_id, r.cosine))
-            for v in out.values():
-                v.sort(key=lambda t: (-t[1], t[0]))
-            return out
-
-        e, a = by_query(exact), by_query(arrow)
-        assert e.keys() == a.keys()
-        for q in e:
-            assert len(e[q]) == len(a[q]), (q, e[q], a[q])
-            assert {n for n, _ in e[q]} == {n for n, _ in a[q]}, (q, e[q], a[q])
-            for (en, ec), (an, ac) in zip(e[q], a[q]):
-                assert abs(ec - ac) <= 2e-6, (q, en, ec, an, ac)
-                if en != an:
-                    assert 0 < abs(ec - ac) <= 2e-6, (q, en, ec, an, ac)
-
-    @settings(
-        max_examples=_ex(6), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
-    )
-    @given(_emb_rows)
     # Fuzz find #22 pins: a NULL embedding among the K lowest vec_ids
     # became a NULL centroid whose struct(d2=NULL, cid) sorted FIRST in
     # array_min's ascending struct order, silently assigning EVERY
@@ -1076,6 +1039,7 @@ class TestCorpusQualityFuzz:
             "quality_percentile_gate",
             "quality_gate_sharded",
             "pack_sequences_bounded",
+            "pack_sequences_sharded",
             "corpus_prep_end_to_end",
             # Python-crossing window specs (Arrow-batched): binary
             # metadata struct, UDTF spans, applyInPandas zscore (std of
@@ -2580,62 +2544,14 @@ class TestStatefulOpFuzz:
         _run_stateful_fuzz(spark, tmp_path_factory, rows, sizes, sp.running_author_stats)
 
 
-# -- rows-only invariant fuzz: multimodal stubs, enrichment, sampling --------
-# These five specs are rows-only by design (nondeterministic columns or
-# Python-stub decoders) — the driver only checks they run. Their
-# DETERMINISTIC cores are still generatively checkable: the fake
-# decoder/frame-sampler derive features purely from payload bytes (so a
-# Python model reproduces them exactly), uuid enrichment must be
-# 1-row-per-input with globally distinct ids, and seeded sampling must
-# be reproducible and a subset.
+# -- rows-only invariant fuzz: enrichment, sampling -------------------------
+# These specs are rows-only by design (nondeterministic columns) — the
+# driver only checks they run. Their DETERMINISTIC cores are still
+# generatively checkable: uuid enrichment must be 1-row-per-input with
+# globally distinct ids, and seeded sampling must be reproducible and a
+# subset.
 
 class TestRowsOnlyInvariantFuzz:
-    @settings(
-        max_examples=_ex(6), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
-    )
-    @given(_doc_rows)
-    def test_multimodal_stub_plumbing_on_hostile_text(
-        self, spark, tmp_path_factory, rows
-    ):
-        """The Arrow mapInPandas plumbing of both multimodal stubs,
-        modeled byte-exact in Python: decode features (len / KiB frame
-        count / mean byte over UTF-8 payloads, NULL text -> empty bytes)
-        and 1-to-N frame sampling (256-byte frames, stride 2, md5 per
-        slice). Any drift in batch shape, NULL policy, or slicing
-        arithmetic shows up as a frame mismatch."""
-        import hashlib
-
-        d = tmp_path_factory.mktemp("fuzz_mm")
-        sf = _write_docs(d, rows)
-        specs = all_specs()
-
-        dec = {
-            r.doc_id: (r.mime, r.n_bytes, r.n_frames, r.mean_byte)
-            for r in specs["multimodal_decode_features"].build(spark, sf).collect()
-        }
-        exp_dec = {}
-        for i, (text, _) in enumerate(rows):
-            b = text.encode("utf-8") if text is not None else b""
-            exp_dec[i] = (
-                "text/plain",
-                len(b),
-                max(1, len(b) // 1024),
-                float(sum(b)) / max(1, len(b)),
-            )
-        assert dec == exp_dec
-
-        frames = {
-            (r.doc_id, r.frame_idx): r.frame_md5
-            for r in specs["multimodal_frame_sample"].build(spark, sf).collect()
-        }
-        exp_frames = {}
-        for i, (text, _) in enumerate(rows):
-            b = text.encode("utf-8") if text is not None else b""
-            n_frames = max(1, (len(b) + 255) // 256)
-            for fi in range(0, n_frames, 2):
-                exp_frames[(i, fi)] = hashlib.md5(b[fi * 256 : (fi + 1) * 256]).hexdigest()
-        assert frames == exp_frames
-
     @settings(
         max_examples=_ex(6), deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
     )

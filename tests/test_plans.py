@@ -270,15 +270,13 @@ class TestIvfAssignmentMapOnly:
         """The trained cells' update is ONE hash aggregation keyed by the
         cell alone. The training's lazy localCheckpoint is made a no-op
         here so the plan keeps the lineage it would otherwise cut."""
+        from spark_kinesis_article_analysis_spark.catalog import load
         from spark_kinesis_article_analysis_spark.functions.similarity import (
-            _emb_nonzero,
+            _cosine_vectors,
             _ivf_trained_cents,
-            dot,
         )
 
-        e = _emb_nonzero(spark, SF_CORRECTNESS).withColumn(
-            "nrm", F.sqrt(dot(F.col("emb"), F.col("emb")))
-        )
+        e = _cosine_vectors(load(spark, SF_CORRECTNESS, "embeddings"))
         monkeypatch.setattr(type(e), "localCheckpoint", lambda self, eager=True: self)
         df = _ivf_trained_cents(e)
         assert _hash_keys(df) == [["cid"]], inspect.explain_str(df)

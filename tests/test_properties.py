@@ -302,7 +302,7 @@ def test_registry_loads_every_module_and_orders_by_name():
     got = json.loads(out.stdout.strip().splitlines()[-1])
     missing = registering - set(got["modules"])
     assert not missing, f"registering modules _load_all did not import: {sorted(missing)}"
-    assert len(declared) == 228
+    assert len(declared) == 224
     assert got["specs"] == sorted(declared)
     assert got["queries"] == got["specs"]
 

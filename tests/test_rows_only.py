@@ -1,7 +1,7 @@
 """Semantic checks for the operators the driver can only rows-only
 check (no exact SQL oracle): approximate sketches vs exact values, LSH
-recall vs brute force, MinHash candidates vs exact Jaccard, the
-mapInPandas multimodal stub, nondeterministic enrichment."""
+recall vs brute force, MinHash candidates vs exact Jaccard, k-means,
+stratified sampling, nondeterministic enrichment."""
 
 from __future__ import annotations
 
@@ -120,30 +120,6 @@ class TestMinHashLSH:
         assert bucket_mean > global_mean, (bucket_mean, global_mean)
 
 
-class TestMultimodal:
-    def test_decode_stub_schema_and_determinism(self, spark):
-        df = SPECS["multimodal_decode_features"].build(spark, SF_CORRECTNESS)
-        assert [f.name for f in df.schema.fields] == [
-            "doc_id",
-            "mime",
-            "n_bytes",
-            "n_frames",
-            "mean_byte",
-        ]
-        a = {r["doc_id"]: (r["n_bytes"], r["n_frames"], r["mean_byte"]) for r in df.collect()}
-        b = {
-            r["doc_id"]: (r["n_bytes"], r["n_frames"], r["mean_byte"])
-            for r in SPECS["multimodal_decode_features"].build(spark, SF_CORRECTNESS).collect()
-        }
-        assert a == b  # deterministic stub: plumbing is replayable
-        # n_bytes agrees with the JVM-side binary length
-        jvm = {
-            r["doc_id"]: r["n_bytes"]
-            for r in SPECS["multimodal_binary_metadata"].build(spark, SF_CORRECTNESS).collect()
-        }
-        assert all(a[k][0] == v for k, v in jvm.items())
-
-
 class TestEnrichedRows:
     def test_uuid_and_processing_ts(self, spark):
         rows = SPECS["article_enriched_rows"].build(spark, SF_CORRECTNESS).collect()
@@ -216,32 +192,6 @@ class TestKMeans:
         assert len(out) == 500
 
 
-class TestFrameSample:
-    def test_frame_counts_and_determinism(self, spark):
-        from spark_kinesis_article_analysis_spark.functions.multimodal import (
-            FRAME_BYTES,
-            FRAME_STRIDE,
-        )
-
-        rows = SPECS["multimodal_frame_sample"].build(spark, SF_CORRECTNESS).collect()
-        n_bytes = {
-            r["doc_id"]: r["n_bytes"]
-            for r in SPECS["multimodal_binary_metadata"].build(spark, SF_CORRECTNESS).collect()
-        }
-        by_doc: dict[int, list[int]] = {}
-        for r in rows:
-            by_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
-        assert set(by_doc) == set(n_bytes)  # every doc produced frames
-        for doc_id, idxs in by_doc.items():
-            total = max(1, (n_bytes[doc_id] + FRAME_BYTES - 1) // FRAME_BYTES)
-            assert sorted(idxs) == list(range(0, total, FRAME_STRIDE)), doc_id
-        again = {
-            (r["doc_id"], r["frame_idx"]): r["frame_md5"]
-            for r in SPECS["multimodal_frame_sample"].build(spark, SF_CORRECTNESS).collect()
-        }
-        assert {(r["doc_id"], r["frame_idx"]): r["frame_md5"] for r in rows} == again
-
-
 class TestObservedMetrics:
     def test_observation_rides_the_action(self, spark):
         """df.observe(): corpus accounting metrics come out of the same job
@@ -257,45 +207,3 @@ class TestObservedMetrics:
         assert m["rows_in"] == docs.count()
         assert m["rows_kept"] == n_kept
         assert m["tokens_kept"] > 0
-
-
-class TestArrowTopK:
-    def test_matches_exact_topk_within_float_tolerance(self, spark):
-        """The vectorized (numpy matmul) top-k must agree with the exact
-        Catalyst form: same per-query result sizes, and the ranked
-        cosine lists equal within ulp-rounding tolerance (both rank on
-        6dp-rounded scores, so they normally match exactly; the
-        tolerance only forgives a tie that rounds across the 6th
-        decimal between summation orders)."""
-        from spark_kinesis_article_analysis_spark.registry import all_specs
-        from tests.conftest import SF_CORRECTNESS
-
-        specs = all_specs()
-        exact = specs["sim_cosine_topk"].build(spark, SF_CORRECTNESS).collect()
-        arrow = specs["sim_cosine_topk_arrow"].build(spark, SF_CORRECTNESS).collect()
-
-        def by_query(rows):
-            out: dict = {}
-            for r in rows:
-                out.setdefault(r.query_id, []).append((r.neighbor_id, r.cosine))
-            for v in out.values():
-                v.sort(key=lambda t: (-t[1], t[0]))
-            return out
-
-        e, a = by_query(exact), by_query(arrow)
-        assert e.keys() == a.keys()
-        for q in e:
-            assert len(e[q]) == len(a[q]) == 5, (q, e[q], a[q])
-            # Membership must agree, not just scores: a different
-            # neighbor with a similar cosine is a real divergence.
-            assert {n for n, _ in e[q]} == {n for n, _ in a[q]}, (q, e[q], a[q])
-            for (en, ec), (an, ac) in zip(e[q], a[q]):
-                assert abs(ec - ac) <= 2e-6, (q, en, ec, an, ac)
-                # Per-rank ids must agree. The only forgivable swap is a
-                # rounding divergence (np.round half-even vs Spark round
-                # half-up across the 6th dp) — which necessarily shows up
-                # as a small NONZERO score gap at that rank; equal scores
-                # with different ids would mean the vec_id tie-break
-                # diverged, a real bug.
-                if en != an:
-                    assert 0 < abs(ec - ac) <= 2e-6, (q, en, ec, an, ac)

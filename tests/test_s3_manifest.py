@@ -8,6 +8,7 @@ invisible forever, appends are one manifest each."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 
 import pytest
@@ -606,6 +607,59 @@ class TestEngineReadPaths:
         assert got.schema.simpleString() == "struct<k:bigint,v:string>"
         assert got.count() == 100
         assert got.agg({"k": "sum"}).collect()[0][0] == sum(range(100))
+
+
+def _count_registrations(monkeypatch) -> dict:
+    """Count ``spark.dataSource.register`` calls by source name."""
+    from collections import Counter
+
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls: Counter = Counter()
+    register = DataSourceRegistration.register
+
+    def counted(self, dataSource):
+        calls[dataSource.name()] += 1
+        return register(self, dataSource)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counted)
+    return calls
+
+
+@contextlib.contextmanager
+def _new_active_session(spark):
+    """A new session of ``spark``'s context, with no DataSource
+    registered, as the JVM's active session while the block runs: Spark
+    refuses to register a Python data source in a session when the
+    ACTIVE session already holds that name."""
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    previous = jsession.getActiveSession()
+    session = spark.newSession()
+    jsession.setActiveSession(session._jsparkSession)
+    try:
+        yield session
+    finally:
+        if previous.isDefined():
+            jsession.setActiveSession(previous.get())
+        else:
+            jsession.clearActiveSession()
+
+
+class TestRegisterOnce:
+    def test_two_calls_register_each_source_once(self, spark, monkeypatch):
+        """``registered`` registers each wire source once per session: a
+        second call on the same session re-pickles and re-registers
+        nothing (each registration costs about 30 ms)."""
+        from spark_kinesis_article_analysis_spark.operators.s3_batch import registered
+
+        calls = _count_registrations(monkeypatch)
+        with _new_active_session(spark) as session:
+            assert registered(session) is session
+            registered(session)
+        assert calls == {"kinesis_api": 1, "s3_parquet_manifest": 1}
+        with _new_active_session(spark) as session:  # a new session registers anew
+            registered(session)
+        assert calls == {"kinesis_api": 2, "s3_parquet_manifest": 2}
 
 
 class TestClientReuse:

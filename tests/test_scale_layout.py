@@ -193,26 +193,20 @@ class TestSkewHandling:
             }
             assert got == plain, f"shards={shards}"
 
-        # histogram-balanced shard source (no sampling pass): same identity
+        # the default shard of a numeric leading key is the histogram-
+        # balanced one (no sampling pass), so the identity above is the
+        # balanced shards' identity
         from spark_kinesis_article_analysis_spark.operators.skew import (
+            _ranged_with_shard,
             with_balanced_range_shard,
         )
 
         for shards in (1, 7, 64):
-            got = {
-                r.doc_id: round(r.pr, 9)
-                for r in range_sharded_percent_rank(
-                    d,
-                    ["lang"],
-                    ["score", "doc_id"],
-                    "pr",
-                    shards,
-                    shard_source=lambda x: with_balanced_range_shard(
-                        x, ["lang"], "score", shards
-                    ),
-                ).collect()
-            }
-            assert got == plain, f"balanced shards={shards}"
+            default = _ranged_with_shard(d, ["lang"], ["score", "doc_id"], shards, None)
+            balanced = with_balanced_range_shard(d, ["lang"], "score", shards)
+            assert sorted(map(tuple, default.collect())) == sorted(
+                map(tuple, balanced.collect())
+            ), f"balanced shards={shards}"
 
     def test_balanced_shard_is_monotone_and_balanced(self, spark):
         """with_balanced_range_shard's contract: within each group, shard
@@ -256,7 +250,6 @@ class TestSkewHandling:
 
         from spark_kinesis_article_analysis_spark.operators.skew import (
             range_sharded_percent_rank,
-            with_balanced_range_shard,
         )
 
         rows = [(i, "x", 5.0 if i % 10 else float(i % 97)) for i in range(1000)]
@@ -275,14 +268,7 @@ class TestSkewHandling:
         }
         got = {
             r.doc_id: round(r.pr, 9)
-            for r in range_sharded_percent_rank(
-                d,
-                ["lang"],
-                ["score", "doc_id"],
-                "pr",
-                8,
-                shard_source=lambda x: with_balanced_range_shard(x, ["lang"], "score", 8),
-            ).collect()
+            for r in range_sharded_percent_rank(d, ["lang"], ["score", "doc_id"], "pr", 8).collect()
         }
         assert got == plain
 

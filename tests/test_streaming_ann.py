@@ -4,6 +4,7 @@ and result parity with the batch IVF operator."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -119,6 +120,31 @@ class TestStreamingAnn:
         assert c2[0] == c1[0] and c2[1] == c1[1], (c1, c2)
         pairs2 = [(r.query_id, r.neighbor_id) for r in rows]
         assert len(pairs2) == len(set(pairs2))
+
+    def test_multi_batch_drain_registers_once(self, spark, tmp_path, monkeypatch):
+        """A drain, an append and a resumed drain (two micro-batches):
+        the session's sources are registered once, before the first
+        start — the foreachBatch writes register nothing."""
+        from spark_kinesis_article_analysis_spark.operators.s3_batch import manifest_reader
+        from spark_kinesis_article_analysis_spark.streaming.ann_stream import (
+            run_ann_stream,
+        )
+        from tests.test_s3_manifest import _count_registrations, _new_active_session
+
+        _ensure_bucket()
+        calls = _count_registrations(monkeypatch)
+        emb_dir = str(tmp_path / "embeddings.parquet")
+        ckpt = str(tmp_path / "ckpt")
+        prefix = _fresh_prefix()
+        with _new_active_session(spark) as session:
+            _write_embeddings(session, emb_dir, [(i, "c") for i in range(5, 45)] + [(0, "q")])
+            run_ann_stream(session, emb_dir, prefix, ckpt)
+            _write_embeddings(session, emb_dir, [(1, "q")])
+            run_ann_stream(session, emb_dir, prefix, ckpt)
+            got = manifest_reader(session, prefix).load().collect()
+        assert sorted(f for f in os.listdir(f"{ckpt}/commits") if f.isdigit()) == ["0", "1"]
+        assert {r.query_id for r in got} == {0, 1}
+        assert calls == {"kinesis_api": 1, "s3_parquet_manifest": 1}
 
     def test_parity_with_batch_ivf(self, spark):
         """The streamed results read back must equal sim_ivf_topk's
